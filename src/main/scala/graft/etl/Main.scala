@@ -1,6 +1,6 @@
 package graft.etl
 
-import org.apache.spark.sql.SparkSession
+import graft.GraftSession
 
 /** Batch entry point — the reference DAG as a schedulable driver program
   * (run per hour by cron/Airflow/any scheduler for O3 parity; the
@@ -13,15 +13,11 @@ object Main {
     require(args.length == 4,
       "usage: graft.etl.Main <users.csv> <songs.csv> <streamsGlob> <outDir>")
     val Array(users, songs, streams, outDir) = args
-    val spark = SparkSession.builder()
+    val spark = GraftSession.builder("music-streaming-etl",
+        shufflePartitions = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt)
       .master(sys.env.getOrElse("SPARK_MASTER", "local[*]"))
-      .appName("music-streaming-etl")
-      .config("spark.sql.shuffle.partitions",
-        sys.env.getOrElse("SPARK_GRAFT_CPUS", "32"))
-      .config("spark.sql.session.timeZone", "UTC")
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
-    graft.plans.GraftExtensions.install(spark)
     try MusicPipeline.run(spark, PipelineConfig(
       usersPath = users, songsPath = songs, streamsGlob = streams,
       genreKpisOut = s"$outDir/genre_kpis",

@@ -49,7 +49,7 @@ object Pipeline {
     var attempt = 1
     var done = false
     while (!done) {
-      try { runAttempt(stage, attempt); done = true }
+      try { withStageKey(stage.name)(runAttempt(stage, attempt)); done = true }
       catch {
         case NonFatal(e) if attempt < retries + 1 =>
           System.err.println(s"[pipeline] stage '${stage.name}' attempt $attempt failed: ${e.getMessage}; retrying")
@@ -109,6 +109,23 @@ object Pipeline {
       throw new StageTimeout(stage.name, stage.timeoutMs, worker)
     }
     if (failure != null) throw failure
+  }
+
+  /** SparkContext local property naming the pipeline stage that submitted
+    * a job, so a `SparkListener` can charge each job to its stage through
+    * `SparkListenerJobStart.properties`. */
+  val StageKey = "graft.pipeline.stage"
+
+  /** Run `body` with [[StageKey]] set to `stage` on this thread; a timed
+    * attempt's worker thread inherits it (Spark copies local properties
+    * into the threads a thread starts). */
+  private def withStageKey(stage: String)(body: => Unit): Unit = {
+    val sc = org.apache.spark.sql.SparkSession.getActiveSession
+      .orElse(org.apache.spark.sql.SparkSession.getDefaultSession).map(_.sparkContext)
+    val prev = sc.map(_.getLocalProperty(StageKey)).orNull
+    sc.foreach(_.setLocalProperty(StageKey, stage))
+    try body
+    finally sc.foreach(_.setLocalProperty(StageKey, prev))
   }
 
   /** Minimum wait for a timed-out attempt's worker to exit before the

@@ -103,6 +103,36 @@ object Checks {
     })
   }
 
+  /** [[run]] for many tables in ONE job: each table's scalar checks (no
+    * `Unique`, as in [[observed]]) ride an [[observed]] scan of it, and the union of those scans (projected
+    * to no columns) is written to the `noop` sink. Reports come back in
+    * input order; enforcing them in that order throws the same message as
+    * one [[run]] per table. Every call builds fresh `Observation`s (Spark
+    * allows one action per `Observation`), so the same frames can be
+    * checked again, e.g. by a retried stage. */
+  def runAll(tables: Seq[(DataFrame, Seq[Check])]): Seq[QualityReport] = {
+    require(tables.nonEmpty, "runAll() needs at least one table")
+    val observedScans = tables.zipWithIndex.map { case ((df, checks), i) =>
+      observed(df, checks, s"graft_quality_$i")
+    }
+    observedScans.map(_._1.select()).reduce(_ union _)
+      .write.format("noop").mode("overwrite").save()
+    observedScans.zip(tables).map { case ((_, obs), (_, checks)) => reportFrom(obs, checks) }
+  }
+
+  /** Materialize `df` with its checks riding the same action: collect the
+    * [[observed]] plan, enforce the report, and only then hand the rows
+    * back as a local DataFrame of `df`'s schema. For group-bounded outputs
+    * (KPI tables) that are checked and then written: the write reads the
+    * collected rows instead of running the plan a second time. `df`
+    * itself stays lazy, so calling this again re-runs the plan. */
+  def collectEnforced(df: DataFrame, checks: Seq[Check]): DataFrame = {
+    val (instrumented, obs) = observed(df, checks)
+    val rows = instrumented.collect()
+    reportFrom(obs, checks).enforce()
+    df.sparkSession.createDataFrame(java.util.Arrays.asList(rows: _*), df.schema)
+  }
+
   /** STREAMING form of [[observed]]: `Observation` objects reject
     * streaming Datasets, so attach the counters under a string metric
     * name — Spark surfaces them PER MICRO-BATCH in

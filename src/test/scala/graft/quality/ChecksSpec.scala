@@ -1,9 +1,29 @@
 package graft.quality
 
-import graft.SparkSpec
+import graft.{JobCounter, SparkSpec}
+import graft.io.Sources
+import java.nio.file.Files
+import org.apache.spark.sql.DataFrame
+import scala.concurrent.{Await, Future}
+import scala.concurrent.ExecutionContext.Implicits.global
+import scala.concurrent.duration._
 
 class ChecksSpec extends SparkSpec {
   import spark.implicits._
+
+  /** users/songs/streams-like inputs with the pipeline's checks; users
+    * pass, songs and streams carry violations */
+  private def triple: Seq[(DataFrame, Seq[Check])] = Seq(
+    Seq((1, "Alice"), (2, "Bob")).toDF("user_id", "user_name") ->
+      Seq(NotEmpty, NoNulls(Seq("user_id"))),
+    Seq((1, Some("t1")), (2, None)).toDF("id", "track_id") ->
+      Seq(NotEmpty, NoNulls(Seq("track_id"))),
+    Seq((Some(1), "t1", Some(10)), (Some(2), "t2", None), (None, "t1", Some(11)))
+      .toDF("user_id", "track_id", "listen_time") ->
+      Seq(NotEmpty, NoNulls(Seq("user_id", "track_id", "listen_time")), InRange("listen_time", 0, 10)))
+
+  /** fails rather than hangs if an observation never fills */
+  private def bounded[T](body: => T): T = Await.result(Future(body), 60.seconds)
 
   private def df = Seq(
     (1, Some("a"), 5),
@@ -94,5 +114,44 @@ class ChecksSpec extends SparkSpec {
     assert(row.getLong(0) == 3)      // n_rows
     assert(row.getLong(1) == 0)      // null_id
     assert(row.getLong(2) == 1)      // null_name
+  }
+
+  test("runAll reports what run reports on each table, in input order, in one job") {
+    val tables = triple
+    val (reports, jobs) = JobCounter(spark)(Checks.runAll(tables))
+    assert(reports.map(_.results) == tables.map { case (df, checks) => Checks.run(df, checks).results })
+    assert(reports.map(_.passed) == Seq(true, false, false))
+    assert(jobs.values.sum == 1, jobs)
+  }
+
+  test("runAll runs again on the same frames: each call observes afresh") {
+    val tables = triple
+    val first = Checks.runAll(tables)
+    assert(bounded(Checks.runAll(tables)) == first)
+  }
+
+  test("collectEnforced returns df.collect()'s rows in order, and throws before returning on a failed check") {
+    val kpis = Seq((3, 7L), (1, 2L), (2, 5L)).toDF("hour", "listeners").orderBy($"listeners".desc)
+    val rows = Checks.collectEnforced(kpis, Seq(NotEmpty, InRange("hour", 0, 23)))
+    assert(rows.schema == kpis.schema)
+    assert(rows.collect().toSeq == kpis.collect().toSeq)
+    val e = intercept[IllegalStateException](
+      Checks.collectEnforced(kpis, Seq(NotEmpty, InRange("hour", 0, 2))))
+    assert(e.getMessage.contains("in_range(hour,0.0,2.0)=1"))
+  }
+
+  test("an empty input fails NotEmpty through runAll and collectEnforced without hanging") {
+    val dir = Files.createTempDirectory("graft-checks-empty")
+    Files.writeString(dir.resolve("streams1.csv"), "user_id,track_id,listen_time\n")
+    val headerOnly = Sources.streams(spark, dir.resolve("streams*.csv").toString)
+    val filtered = df.filter($"id" > 99)
+    val reports = bounded(Checks.runAll(Seq(
+      headerOnly -> Seq(NotEmpty, NoNulls(Seq("user_id"))), filtered -> Seq(NotEmpty))))
+    assert(reports.map(_.results.head) ==
+      Seq(CheckResult(NotEmpty.name, 1, passed = false), CheckResult(NotEmpty.name, 1, passed = false)))
+    for (empty <- Seq(headerOnly, filtered)) {
+      val e = intercept[IllegalStateException](bounded(Checks.collectEnforced(empty, Seq(NotEmpty))))
+      assert(e.getMessage.contains("not_empty=1"))
+    }
   }
 }
