@@ -813,7 +813,7 @@ private[graft] object CurationSnapshotQueries {
     }),
 
     // ---- column mapping (r15): rename + drop as METADATA commits —
-    // physical parquet names frozen at birth, the per-version _COLMAP
+    // physical parquet names frozen at birth, the per-version column map
     // presents the logical view (the Delta column-mapping analog: a
     // rename on a 100 TB table costs the same one small-file commit as
     // on an empty one). The scenario proves the whole loop: rename both
@@ -994,7 +994,7 @@ private[graft] object CurationSnapshotQueries {
     }),
     // ---- value-range-pruned table read (r9): readWhere over the pinned
     // window's FINAL state — the data-skipping read itself under the
-    // oracle gate (the _ZONES value stats decide which files bind; the
+    // oracle gate (the zonemap value stats decide which files bind; the
     // exact predicate re-applies and pushes into the surviving scans).
     // Oracle: the closed-form final state filtered to the range ----
     // ---- TIMESTAMP AS OF time travel (r15): resolve the seed commit's

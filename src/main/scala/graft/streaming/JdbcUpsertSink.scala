@@ -33,7 +33,7 @@ import org.apache.spark.sql.streaming.{DataStreamWriter, OutputMode, Trigger}
   *
   * '''Effectively-once.''' A `<table>_lineage` row records
   * (checkpoint tag, last applied batch id) — the warehouse-side analog
-  * of the snapshot layer's `_LAST_BATCH` marker. A restarted stream
+  * of the snapshot layer's lineage marker. A restarted stream
   * re-delivering an already-applied batch id is skipped, and because the
   * lineage bump commits IN the apply transaction, a crash between apply
   * and bump is impossible: either both happened or neither. Replaying a

@@ -11,18 +11,24 @@ import org.apache.spark.sql.streaming.{DataStreamWriter, OutputMode, Trigger}
   *
   * Two physical layouts share the same pointer commit:
   *
+  * Every version directory holds exactly one metadata file, its commit
+  * record `_COMMIT` ([[Commit]]), staged before the pointer flip and
+  * never torn: the lineage marker, the data-file inventory, and — where
+  * the layout has them — the bucket manifest, merge-on-read overlays,
+  * zonemap, key blooms and column mapping, one section each.
+  *
   * '''Flat''' (whole-table publishes — [[publish]]):
   * {{{
   *   base/
   *     _CURRENT        # pointer file: "37" — the committed version
-  *     v00036/ …parquet + _LAST_BATCH + _MANIFEST
-  *     v00037/ …parquet + _LAST_BATCH + _MANIFEST
+  *     v00036/ …parquet + _COMMIT     # marker + inventory
+  *     v00037/ …parquet + _COMMIT
   * }}}
   *
   * '''Bucketed''' (row-level MERGE — [[mergeInto]]): data files live in a
   * shared pool under `base/data/`, hash-partitioned by merge key into
-  * `numBuckets` buckets; each version directory holds only METADATA — a
-  * `_BUCKETS` manifest mapping bucket → data directory. Versions SHARE
+  * `numBuckets` buckets; each version directory holds only its record,
+  * whose bucket section maps bucket → data directory. Versions SHARE
   * untouched bucket directories, so a merge writes O(delta), not O(table):
   * {{{
   *   base/
@@ -30,16 +36,17 @@ import org.apache.spark.sql.streaming.{DataStreamWriter, OutputMode, Trigger}
   *     data/ g00000/__gbucket=0/…parquet   # written by version 0
   *           g00000/__gbucket=7/…parquet
   *           g00002/__gbucket=7/…parquet   # version 2 rewrote bucket 7
-  *     v00000/ _LAST_BATCH + _BUCKETS + _MANIFEST
-  *     v00002/ _LAST_BATCH + _BUCKETS + _MANIFEST   # 7→g00002, others→g00000
+  *     v00000/ _COMMIT     # marker + inventory + buckets + zones
+  *     v00002/ _COMMIT     # buckets: 7→g00002, others→g00000
+  *     v00003/ _COMMIT + _PURGED/   # a purge commit: its retraction keys
   * }}}
   * This is the table-format idea (Iceberg manifests / Delta file actions)
-  * reduced to plain parquet + one pointer file: the manifest IS the
+  * reduced to plain parquet + one pointer file: the record IS the
   * version, data files are immutable and shared, and retention walks the
-  * manifests to garbage-collect data directories no retained version
+  * records to garbage-collect data directories no retained version
   * references ([[gcDataDirs]] — the orphan-file sweep). Each bucketed
-  * version additionally carries a `_ZONES` per-file key min/max zonemap
-  * (the Delta `stats` / Iceberg bounds analog) that [[readForKeys]] and
+  * record additionally carries a per-file key min/max zonemap (the Delta
+  * `stats` / Iceberg bounds analog) that [[readForKeys]] and
   * update/delete-only [[mergeInto]] consult to skip files hash pruning
   * alone cannot rule out.
   *
@@ -130,12 +137,8 @@ object VersionedSnapshot {
         "by design; silently skipping it would drop erasures)")
 
   private val PointerName = "_CURRENT"
-  private val MarkerName = "_LAST_BATCH" // leading _: invisible to parquet reads
-  private val ManifestName = "_MANIFEST" // data-file inventory, written pre-commit
-  private val BucketsName = "_BUCKETS"   // bucket → data-dir manifest (bucketed layout)
-  private val DeltasName = "_DELTAS"     // ordered merge-on-read overlay manifest
+  private val CommitName = "_COMMIT"     // the version's record; leading _: invisible to parquet reads
   private val PurgedName = "_PURGED"     // purge-commit retraction key list (parquet)
-  private val ZonesName = "_ZONES"       // per-file key min/max zonemap (data skipping)
   private val DataDirName = "data"       // shared data-file pool (bucketed layout)
   private val BucketCol = "__gbucket"    // reserved partition column on bucket writes
   private val ActionCol = "__gaction"    // overlay row action: "u" upsert / "d" delete
@@ -214,8 +217,9 @@ object VersionedSnapshot {
     * loss) the way an in-JVM thrown exception cannot. Driven only from a
     * child JVM spawned by CrashRecoverySpec; the parent process then
     * proves readers hold and the next writer heals the litter. Points:
-    * `staged-data` (bucket files written, no sidecars), `staged-sidecars`
-    * (everything staged, pointer not flipped), `post-flip` (pointer
+    * `staged-data` (bucket files written, no record), `staged-sidecars`
+    * (commit record written — the single pre-flip metadata step — pointer
+    * not flipped; every staging path passes it), `post-flip` (pointer
     * flipped, claim NOT released, commit lock still held), `mid-retention`
     * (old versions dropped, orphan gc not run), `staged-overlay`
     * (overlay file written, version dir absent), `mid-purge` (first
@@ -281,24 +285,23 @@ object VersionedSnapshot {
     * driver- and plan-cheap. */
   private val MaxPushdownKeys = 1024L
 
-  /** Stats-column budget for `_ZONES` (keys + value columns): the Delta
+  /** Stats-column budget for the zonemap (keys + value columns): the Delta
     * `dataSkippingNumIndexedCols` analog. Wide tables keep stats for the
     * keys plus the first prunable value columns up to this many total —
     * per-file stat lines stay O(32) fields no matter the schema. */
   private val MaxStatsCols = 32
 
-  // Opt-in per-file key bloom filters (`_BLOOMS` sidecar, r9): 64 Kbit /
+  // Opt-in per-file key bloom filters (the record's blooms section, r9): 64 Kbit /
   // 6-hash double-hashing blooms over xxhash64 of the key tuple — the
   // Delta bloom-filter-index analog. They restore point-read FILE pruning
   // on value-clustered layouts (compact(clusterBy) trades key locality
   // for value locality, so key ranges per file go wide and the zonemap
   // stops pruning point probes). ~8 KiB per file: opt-in via `keyBlooms`
-  // because at extreme file counts the sidecar is no longer metadata-
+  // because at extreme file counts the section is no longer metadata-
   // priced (65536 files → ~700 MB) — enable it for point-read-heavy
   // clustered tables, exactly like Delta's per-column bloom opt-in. A
   // saturated bloom (file rows >> bits) answers "maybe" for everything —
   // degrades to no pruning, never to a wrong read.
-  private val BloomsName = "_BLOOMS"
   private val BloomBits = 65536
   private val BloomK = 6
   private val BloomSalt = "graft-bloom"
@@ -715,11 +718,11 @@ object VersionedSnapshot {
 
   /** Read the committed snapshot (None before the first publish). The
     * returned frame is bound to immutable data files (a version directory,
-    * or the bucket directories its `_BUCKETS` manifest references), so it
+    * or the bucket directories its record references), so it
     * stays consistent for the whole downstream query even if publishes
     * continue concurrently.
     *
-    * When the version carries a `_DELTAS` overlay list ([[stageDelta]] —
+    * When the version carries merge-on-read overlays ([[stageDelta]] —
     * the merge-on-read tier), the read RECONCILES: the newest overlay
     * row per key wins over older overlays and over the base; a winning
     * delete drops the key. Read cost = base scan + one anti-join against
@@ -736,13 +739,15 @@ object VersionedSnapshot {
     * it references. None when the version was never committed or has been
     * retired. The standard uses: reproducing a training run against the
     * exact table state it saw, and diffing two versions for an audit. */
-  def readVersion(spark: SparkSession, baseDir: String, version: Long): Option[DataFrame] = {
-    val f = fs(spark, baseDir)
-    val committed = currentVersion(spark, baseDir).exists(version <= _)
-    if (committed && f.exists(versionPath(new Path(baseDir), version)))
-      Some(versionFrame(spark, baseDir, version))
-    else None
-  }
+  def readVersion(spark: SparkSession, baseDir: String, version: Long): Option[DataFrame] =
+    retained(spark, baseDir, version).map(frameOf(spark, baseDir, version, _))
+
+  /** The record of `v` iff it is committed (at or below the pointer) and
+    * still retained — a retired version (or one whose record is gone)
+    * reads as absent, never as defaults. */
+  private def retained(spark: SparkSession, baseDir: String, v: Long): Option[Commit] =
+    if (!currentVersion(spark, baseDir).exists(v <= _)) None
+    else readCommit(fs(spark, baseDir), versionPath(new Path(baseDir), v))
 
   /** Point-lookup read: the committed snapshot restricted to `keyRows`'
     * key values, pruning twice before any data is read —
@@ -751,7 +756,7 @@ object VersionedSnapshot {
     *      into (`(table/numBuckets)·|key buckets|` bytes instead of the
     *      table);
     *   2. '''zonemap pruning''': within those buckets, only the FILES
-    *      whose committed `_ZONES` min/max range can intersect the wanted
+    *      whose committed zonemap min/max range can intersect the wanted
     *      keys' value range — so a lookup of absent or out-of-range keys
     *      (existence probes, keys that have not arrived yet) reads ZERO
     *      data files, the Delta/Iceberg data-skipping behavior;
@@ -783,8 +788,8 @@ object VersionedSnapshot {
       keyRows: DataFrame, viewV: Long = -1L): DataFrame = {
       import org.apache.spark.sql.functions.{collect_set, max => fMax, min => fMin}
       val base = new Path(baseDir)
-      val f = fs(spark, baseDir)
       val vdir = versionPath(base, v)
+      val rec = recordOf(fs(spark, baseDir), vdir)
       // the caller speaks the VIEW version's logical names (default: the
       // read version's own); everything below — zone keys, bloom headers,
       // file scans — speaks THIS version's physical names, so the probe
@@ -802,7 +807,7 @@ object VersionedSnapshot {
       // exactly this reason). One select; a no-op when dtypes agree. A
       // probe column the table doesn't have passes through untouched and
       // fails loudly downstream instead of mis-pruning here.
-      val tableSchema = versionFrameRaw(spark, baseDir, v).schema
+      val tableSchema = rawFrame(spark, base, vdir, rec).schema
       val aligned = keyRowsP.select(keyCols.map { c =>
         // case-insensitive lookup: Spark analysis resolves 'ID' against a
         // table column 'id' by default, so the dtype alignment must too —
@@ -815,9 +820,9 @@ object VersionedSnapshot {
         }
       }: _*)
       val wanted = aligned.distinct()
-      val baseFrame = parseBuckets(f, vdir) match {
+      val baseFrame = rec.buckets match {
         case Some((nb, entries)) =>
-          val zones = parseZones(f, vdir)
+          val zones = rec.zones
           val wTags = keyCols.map(c => zoneTag(wanted.schema(c).dataType))
           // ONE driver job: the keys' bucket set and per-column value
           // ranges (+ null presence) together
@@ -836,7 +841,7 @@ object VersionedSnapshot {
           val nWanted = row.getAs[Long]("__n")
           // literal-sized key sets are collected ONCE, with their bloom
           // hash pair computed by the same Spark expressions the write
-          // side aggregated — serves both the _BLOOMS file prune and the
+          // side aggregated — serves both the bloom file prune and the
           // pushed IN filter below
           val keyVals: Array[org.apache.spark.sql.Row] =
             if (nWanted > 0 && nWanted <= MaxPushdownKeys) {
@@ -846,7 +851,7 @@ object VersionedSnapshot {
             } else Array.empty
           val blooms =
             if (keyVals.isEmpty) None
-            else parseBlooms(f, vdir).filter(_._1 == keyCols).map(_._2)
+            else rec.blooms.filter(_._1 == keyCols).map(_._2)
           val wantedHashes: Array[(Long, Long)] = keyVals.map(r =>
             (r.getAs[Long]("__h1"), r.getAs[Long]("__h2")))
           def bloomKeeps(frel: String): Boolean = blooms match {
@@ -869,7 +874,7 @@ object VersionedSnapshot {
               } yield (lo, hi)
             }
           // a manifest ref is a bucket dir or (r10 partial merges) one
-          // file: dir refs expand through the sidecars' prefix keys, file
+          // file: dir refs expand through the zone/bloom prefix keys, file
           // refs look themselves up exactly
           val paths = touched.toSeq.sorted.flatMap(entries.get).flatten.flatMap { rel =>
             zones match {
@@ -886,10 +891,10 @@ object VersionedSnapshot {
                         }
                       } && bloomKeeps(frel) => frel
                 }.sorted
-              // pre-zonemap version or key-shape drift: bucket-level
-              // binding, but a bloom sidecar can still prune per file
+              // no zonemap or key-shape drift: bucket-level binding, but
+              // the blooms section can still prune per file
               case _ =>
-                parseBlooms(f, vdir).filter(_._1 == keyCols) match {
+                rec.blooms.filter(_._1 == keyCols) match {
                   case Some((_, bs)) if keyVals.nonEmpty =>
                     val files =
                       if (isFileRef(rel)) bs.keys.toSeq.filter(_ == rel)
@@ -926,7 +931,7 @@ object VersionedSnapshot {
               tableSchema)
         case None => readUniform(spark, Seq(vdir.toString))
       }
-      presentLogical(reconcileOverlays(spark, base, f, vdir, baseFrame)
+      presentLogical(reconcileOverlays(spark, base, rec.deltas, baseFrame)
         .join(wanted, keyCols, "left_semi"), cm)
   }
 
@@ -972,7 +977,7 @@ object VersionedSnapshot {
 
   /** Current-version read pruned by VALUE-column range predicates — the
     * data-skipping read Delta/Iceberg serve from their per-file column
-    * stats, from the same `_ZONES` manifest that serves key pruning.
+    * stats, from the same zonemap that serves key pruning.
     * `ranges` maps column name to (optional lo, optional hi), both
     * inclusive. Only data files whose committed stats for EVERY
     * predicate column can intersect the wanted range are bound (files or
@@ -992,16 +997,16 @@ object VersionedSnapshot {
       rangesL: Map[String, (Option[Any], Option[Any])],
       viewV: Long = -1L): DataFrame = {
     val base = new Path(baseDir)
-    val f = fs(spark, baseDir)
     val vdir = versionPath(base, v)
-    // predicate columns arrive in the view's logical names; the `_ZONES`
+    val rec = recordOf(fs(spark, baseDir), vdir)
+    // predicate columns arrive in the view's logical names; the zonemap's
     // stat headers below are THIS version's physical — translate once
     // (birth-joined across any normalization), alias at the end
     val cm = crossColMap(spark, baseDir, v, if (viewV < 0) v else viewV)
     val ranges = rangesL.map { case (c, b) => cm.toPhysical(c) -> b }
-    val baseFrame = parseBuckets(f, vdir) match {
+    val baseFrame = rec.buckets match {
       case Some((_, entries)) =>
-        val zones = parseZones(f, vdir)
+        val zones = rec.zones
         val paths = entries.toSeq.sortBy(_._1).flatMap(_._2).flatMap { rel =>
           zones match {
             case Some(z) =>
@@ -1027,18 +1032,18 @@ object VersionedSnapshot {
                       }
                     } => frel
               }.sorted
-            case None => Seq(rel) // pre-zonemap version
+            case None => Seq(rel) // no zonemap
           }
         }.map(rel => resolveRef(base, rel).toString)
         if (paths.nonEmpty) readUniform(spark, paths)
         else
           spark.createDataFrame(
             spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
-            versionFrameRaw(spark, baseDir, v).schema)
+            rawFrame(spark, base, vdir, rec).schema)
       case None => readUniform(spark, Seq(vdir.toString))
     }
     val reconciled = presentLogical(
-      reconcileOverlays(spark, base, f, vdir, baseFrame), cm)
+      reconcileOverlays(spark, base, rec.deltas, baseFrame), cm)
     // the exact re-filter runs on the LOGICAL frame with the caller's names
     rangesL.foldLeft(reconciled) { case (df, (c, (lo, hi))) =>
       (lo.map(l => col(c) >= lit(l)).toSeq ++ hi.map(h => col(c) <= lit(h)))
@@ -1064,16 +1069,32 @@ object VersionedSnapshot {
     * shuffles on the key. */
   def changes(spark: SparkSession, baseDir: String, fromVersion: Long,
       toVersion: Long, keys: Seq[String]): Option[DataFrame] =
+    endpointDiff(spark, baseDir, fromVersion, toVersion, keys,
+      oldSideOps = Seq("delete"))(changeOps)
+
+  /** [[changes]]' op expansion: at most one op per key. */
+  private def changeOps(differs: Column): Column =
+    when(col("__in_a").isNull, array(lit("insert")))
+      .when(col("__in_b").isNull, array(lit("delete")))
+      .when(differs, array(lit("update")))
+
+  /** The row diff of two RETAINED versions on `keys` (None unless both
+    * are): one full-outer join of the endpoint frames, each joined row
+    * expanded to the ops `ops(differs)` names (an array; null = not a
+    * change), carrying the FROM side's values for `oldSideOps` and the TO
+    * side's otherwise. The FROM side is presented through the TO
+    * version's logical view (physical names are frozen, so the aliasing
+    * is exact): a feed spanning a rename boundary diffs instead of
+    * erroring, and `keys` is always interpreted in the newer view. */
+  private def endpointDiff(spark: SparkSession, baseDir: String,
+      fromVersion: Long, toVersion: Long, keys: Seq[String],
+      oldSideOps: Seq[String])(ops: Column => Column): Option[DataFrame] =
     for {
-      _ <- readVersion(spark, baseDir, fromVersion)
-      _ <- readVersion(spark, baseDir, toVersion)
+      recA <- retained(spark, baseDir, fromVersion)
+      recB <- retained(spark, baseDir, toVersion)
     } yield {
-      // the FROM side is presented through the TO version's logical view
-      // (physical names are frozen, so the aliasing is exact): a feed
-      // spanning a rename boundary diffs instead of erroring, and `keys`
-      // is always interpreted in the newer view
-      val (a, b) = diffInputs(spark, baseDir, fromVersion, toVersion)
-      diffFrames(a, b, keys)
+      val (a, b) = diffInputs(spark, baseDir, fromVersion, toVersion, recA, recB)
+      diffFrames(a, b, keys, oldSideOps)(ops)
     }
 
   /** The two endpoint frames a CDF diff joins, PRUNED to the data refs
@@ -1094,24 +1115,23 @@ object VersionedSnapshot {
     * differing bucket counts, or merge-on-read overlays on either side
     * (overlay rows live outside the bucket manifests). */
   private def diffInputs(spark: SparkSession, baseDir: String,
-      fromVersion: Long, toVersion: Long): (DataFrame, DataFrame) = {
+      fromVersion: Long, toVersion: Long, recA: Commit, recB: Commit)
+      : (DataFrame, DataFrame) = {
     val base = new Path(baseDir)
-    val f = fs(spark, baseDir)
-    val aDir = versionPath(base, fromVersion)
-    val bDir = versionPath(base, toVersion)
     def full() =
-      (versionFrameAs(spark, baseDir, fromVersion, toVersion),
-        versionFrame(spark, baseDir, toVersion))
-    def overlaid(d: Path) = parseDeltas(f, d).exists(_._2.nonEmpty)
-    (parseBuckets(f, aDir), parseBuckets(f, bDir)) match {
+      (presentLogical(rawFrame(spark, base, versionPath(base, fromVersion), recA),
+        crossColMap(spark, baseDir, fromVersion, toVersion)),
+        frameOf(spark, baseDir, toVersion, recB))
+    def overlaid(rec: Commit) = rec.deltas.exists(_._2.nonEmpty)
+    (recA.buckets, recB.buckets) match {
       case (Some((nbA, eA)), Some((nbB, eB)))
-          if nbA == nbB && !overlaid(aDir) && !overlaid(bDir) =>
+          if nbA == nbB && !overlaid(recA) && !overlaid(recB) =>
         val refsA = eA.values.flatten.toSet
         val refsB = eB.values.flatten.toSet
         val shared = refsA intersect refsB
         if (shared.isEmpty) full()
         else {
-          def pruned(v: Long, entries: Map[Int, Seq[String]], viewV: Long) = {
+          def pruned(v: Long, rec: Commit, entries: Map[Int, Seq[String]]) = {
             val paths = entries.toSeq.sortBy(_._1)
               .flatMap(_._2).filterNot(shared)
               .map(rel => resolveRef(base, rel).toString)
@@ -1119,10 +1139,10 @@ object VersionedSnapshot {
               if (paths.nonEmpty) readUniform(spark, paths)
               else spark.createDataFrame(
                 spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
-                versionFrameRaw(spark, baseDir, v).schema)
-            presentLogical(raw, crossColMap(spark, baseDir, v, viewV))
+                rawFrame(spark, base, versionPath(base, v), rec).schema)
+            presentLogical(raw, crossColMap(spark, baseDir, v, toVersion))
           }
-          (pruned(fromVersion, eA, toVersion), pruned(toVersion, eB, toVersion))
+          (pruned(fromVersion, recA, eA), pruned(toVersion, recB, eB))
         }
       case _ => full()
     }
@@ -1133,7 +1153,7 @@ object VersionedSnapshot {
     * is selective. Emits the diff rows of keys whose OLD or NEW row
     * satisfies `ranges` (both bounds inclusive, either side open), with
     * exact op labels. Two-phase read: (1) each version binds only its
-    * `_ZONES`-surviving files ([[readWhere]] semantics) and the
+    * zonemap-surviving files ([[readWhere]] semantics) and the
     * exact-filtered rows yield the candidate key set; (2) both versions
     * are point-read for exactly those keys ([[readForKeysAt]] — key
     * zonemap + row-group pushdown), so a key whose row moved INTO or OUT
@@ -1144,8 +1164,8 @@ object VersionedSnapshot {
       toVersion: Long, keys: Seq[String],
       ranges: Map[String, (Option[Any], Option[Any])]): Option[DataFrame] =
     for {
-      _ <- readVersion(spark, baseDir, fromVersion)
-      _ <- readVersion(spark, baseDir, toVersion)
+      _ <- retained(spark, baseDir, fromVersion)
+      _ <- retained(spark, baseDir, toVersion)
     } yield {
       val candA = readWhereAt(spark, baseDir, fromVersion, ranges,
           viewV = toVersion)
@@ -1155,7 +1175,8 @@ object VersionedSnapshot {
       val cand = candA.unionByName(candB).distinct()
       diffFrames(
         readForKeysAt(spark, baseDir, fromVersion, cand, viewV = toVersion),
-        readForKeysAt(spark, baseDir, toVersion, cand), keys)
+        readForKeysAt(spark, baseDir, toVersion, cand), keys,
+        oldSideOps = Seq("delete"))(changeOps)
     }
 
   /** [[changes]] in pre/post-image form — the Delta CDF row contract
@@ -1177,96 +1198,67 @@ object VersionedSnapshot {
     * not a second read. None unless both versions are retained. */
   def changesPrePost(spark: SparkSession, baseDir: String, fromVersion: Long,
       toVersion: Long, keys: Seq[String]): Option[DataFrame] =
-    for {
-      _ <- readVersion(spark, baseDir, fromVersion)
-      _ <- readVersion(spark, baseDir, toVersion)
-    } yield {
-      // from-side through the TO view, shared-ref pruned — see [[changes]]
-      val (a, b) = diffInputs(spark, baseDir, fromVersion, toVersion)
-      val nonKeys = b.columns.toSeq.filterNot(keys.contains)
-      val aSide = a.select(
-        (keys.map(col) :+ lit(true).as("__in_a")) ++
-          nonKeys.map(c => col(c).as(s"__a_$c")): _*)
-      val bSide = b.select(
-        (keys.map(col) :+ lit(true).as("__in_b")) ++
-          nonKeys.map(c => col(c).as(s"__b_$c")): _*)
-      val joined = aSide.join(bSide, keys, "full_outer")
-      val differs = nonKeys
-        .map(c => !(col(s"__a_$c") <=> col(s"__b_$c")))
-        .reduceOption(_ || _).getOrElse(lit(false))
-      // ops this row expands to: inserts/deletes one-element, updates two
-      val ops = when(col("__in_a").isNull, array(lit("insert")))
+    // ops this row expands to: inserts/deletes one-element, updates two
+    endpointDiff(spark, baseDir, fromVersion, toVersion, keys,
+      oldSideOps = Seq("delete", "update_preimage")) { differs =>
+      when(col("__in_a").isNull, array(lit("insert")))
         .when(col("__in_b").isNull, array(lit("delete")))
         .when(differs, array(lit("update_preimage"), lit("update_postimage")))
-      val oldSide = Seq("delete", "update_preimage")
-      joined
-        .withColumn("op", explode(ops))
-        .select(col("op") +: keys.map(col) ++: nonKeys.map(c =>
-          when(col("op").isin(oldSide: _*), col(s"__a_$c"))
-            .otherwise(col(s"__b_$c")).as(c)): _*)
     }
 
-  /** The row diff of two version frames on `keys` (see [[changes]]). */
-  private def diffFrames(a: DataFrame, b: DataFrame, keys: Seq[String])
-      : DataFrame = {
-      val nonKeys = b.columns.toSeq.filterNot(keys.contains)
-      val aSide = a.select(
-        (keys.map(col) :+ lit(true).as("__in_a")) ++
-          nonKeys.map(c => col(c).as(s"__a_$c")): _*)
-      val bSide = b.select(
-        (keys.map(col) :+ lit(true).as("__in_b")) ++
-          nonKeys.map(c => col(c).as(s"__b_$c")): _*)
-      val joined = aSide.join(bSide, keys, "full_outer")
-      val differs = nonKeys
-        .map(c => !(col(s"__a_$c") <=> col(s"__b_$c")))
-        .reduceOption(_ || _).getOrElse(lit(false))
-      val op = when(col("__in_a").isNull, lit("insert"))
-        .when(col("__in_b").isNull, lit("delete"))
-        .when(differs, lit("update"))
-      joined
-        .withColumn("op", op).filter(col("op").isNotNull)
-        .select(col("op") +: keys.map(col) ++: nonKeys.map(c =>
-          when(col("op") === "delete", col(s"__a_$c"))
-            .otherwise(col(s"__b_$c")).as(c)): _*)
+  /** The row diff of two version frames on `keys` (see [[endpointDiff]]). */
+  private def diffFrames(a: DataFrame, b: DataFrame, keys: Seq[String],
+      oldSideOps: Seq[String])(ops: Column => Column): DataFrame = {
+    val nonKeys = b.columns.toSeq.filterNot(keys.contains)
+    val aSide = a.select(
+      (keys.map(col) :+ lit(true).as("__in_a")) ++
+        nonKeys.map(c => col(c).as(s"__a_$c")): _*)
+    val bSide = b.select(
+      (keys.map(col) :+ lit(true).as("__in_b")) ++
+        nonKeys.map(c => col(c).as(s"__b_$c")): _*)
+    val differs = nonKeys
+      .map(c => !(col(s"__a_$c") <=> col(s"__b_$c")))
+      .reduceOption(_ || _).getOrElse(lit(false))
+    aSide.join(bSide, keys, "full_outer")
+      .withColumn("op", explode(ops(differs)))
+      .select(col("op") +: keys.map(col) ++: nonKeys.map(c =>
+        when(col("op").isin(oldSideOps: _*), col(s"__a_$c"))
+          .otherwise(col(s"__b_$c")).as(c)): _*)
   }
 
   /** The committed frame of one version in its own logical view: its
     * bucket (or flat) files with any merge-on-read overlays reconciled,
-    * presented through the version's `_COLMAP`. */
+    * presented through the version's column mapping. */
   private def versionFrame(spark: SparkSession, baseDir: String, v: Long): DataFrame =
-    versionFrameAs(spark, baseDir, v, v)
+    frameOf(spark, baseDir, v,
+      recordOf(fs(spark, baseDir), versionPath(new Path(baseDir), v)))
 
-  /** The version's frame presented through ANOTHER retained version's
-    * logical view. Physical names are frozen at column birth, so any
-    * version's files alias exactly under any other version's colmap —
-    * this is what lets [[changes]] diff across a rename boundary instead
-    * of erroring on mismatched column names. */
-  private def versionFrameAs(spark: SparkSession, baseDir: String, v: Long,
-      viewV: Long): DataFrame =
-    presentLogical(versionFrameRaw(spark, baseDir, v),
-      crossColMap(spark, baseDir, v, viewV))
+  /** [[versionFrame]] from an already-fetched record. */
+  private def frameOf(spark: SparkSession, baseDir: String, v: Long,
+      rec: Commit): DataFrame = {
+    val base = new Path(baseDir)
+    presentLogical(rawFrame(spark, base, versionPath(base, v), rec), rec.colMap)
+  }
 
   /** The version's frame under PHYSICAL (at-rest) column names. */
-  private def versionFrameRaw(spark: SparkSession, baseDir: String, v: Long): DataFrame = {
-    val base = new Path(baseDir)
-    val f = fs(spark, baseDir)
-    val vdir = versionPath(base, v)
-    val baseFrame = parseBuckets(f, vdir) match {
+  private def rawFrame(spark: SparkSession, base: Path, vdir: Path,
+      rec: Commit): DataFrame = {
+    val baseFrame = rec.buckets match {
       case Some((_, entries)) =>
         val paths = entries.toSeq.sortBy(_._1)
           .flatMap(_._2).map(rel => resolveRef(base, rel).toString)
         readUniform(spark, paths)
       case None => readUniform(spark, Seq(vdir.toString))
     }
-    reconcileOverlays(spark, base, f, vdir, baseFrame)
+    reconcileOverlays(spark, base, rec.deltas, baseFrame)
   }
 
-  /** Apply a version's `_DELTAS` overlays to its base frame: newest
+  /** Apply a version's merge-on-read overlays to its base frame: newest
     * overlay row per key wins over older overlays and the base; winning
     * deletes drop the key. Identity when the version carries no overlays. */
-  private def reconcileOverlays(spark: SparkSession, base: Path, f: FileSystem,
-      vdir: Path, baseFrame: DataFrame): DataFrame =
-    parseDeltas(f, vdir) match {
+  private def reconcileOverlays(spark: SparkSession, base: Path,
+      deltas: Option[(Seq[String], Seq[String])], baseFrame: DataFrame): DataFrame =
+    deltas match {
       case Some((keys, overlays)) if overlays.nonEmpty =>
         val tagged = overlays.zipWithIndex.map { case (rel, i) =>
           readUniform(spark, Seq(resolveRef(base, rel).toString))
@@ -1288,22 +1280,17 @@ object VersionedSnapshot {
   /** (tag, batchId) recorded by the last publish; ("", -1) if none. */
   private[graft] def lastApplied(spark: SparkSession, baseDir: String): (String, Long) =
     currentVersion(spark, baseDir).map { v =>
-      val f = fs(spark, baseDir)
-      val m = new Path(versionPath(new Path(baseDir), v), MarkerName)
-      if (!f.exists(m)) ("", -1L)
-      else {
-        val s = readSmallFile(f, m).trim
-        val cut = s.lastIndexOf(':')
-        // a marker that does not END in a batch id (a manual publish or
-        // an annotated compact, e.g. after a crash between a pre-merge
-        // compact and its merge) carries no replay info — report "none"
-        // so the batch re-applies, which is content-idempotent under
-        // last-writer-wins, rather than throwing and wedging the stream
-        if (cut < 0) ("", -1L)
-        else s.substring(cut + 1).toLongOption match {
-          case Some(id) => (s.substring(0, cut), id)
-          case None => ("", -1L)
-        }
+      val s = recordOf(fs(spark, baseDir), versionPath(new Path(baseDir), v)).marker.trim
+      val cut = s.lastIndexOf(':')
+      // a marker that does not END in a batch id (a manual publish or
+      // an annotated compact, e.g. after a crash between a pre-merge
+      // compact and its merge) carries no replay info — report "none"
+      // so the batch re-applies, which is content-idempotent under
+      // last-writer-wins, rather than throwing and wedging the stream
+      if (cut < 0) ("", -1L)
+      else s.substring(cut + 1).toLongOption match {
+        case Some(id) => (s.substring(0, cut), id)
+        case None => ("", -1L)
       }
     }.getOrElse(("", -1L))
 
@@ -1347,80 +1334,177 @@ object VersionedSnapshot {
     if (gIdx < 0) "" else comps.drop(gIdx + 1).mkString("/")
   }
 
-  /** Parse a version dir's `_BUCKETS` manifest: (numBuckets,
-    * bucket → base-relative data refs). A ref is either a bucket data
-    * DIRECTORY (`data/gN/__gbucket=K`) or — the r10 file-pruning merge —
-    * an individual parquet FILE inside one: a partial rewrite carries a
-    * bucket's untouched files by per-file reference instead of rewriting
-    * the whole bucket. Multiple refs per bucket join with ';' on one
-    * manifest line; the single-dir form stays valid, so pre-r10 tables
-    * read unchanged. None for flat versions. */
-  private def parseBuckets(f: FileSystem, vdir: Path): Option[(Int, Map[Int, Seq[String]])] = {
-    val bp = new Path(vdir, BucketsName)
-    if (!f.exists(bp)) None
-    else {
-      val lines = readSmallFile(f, bp).split('\n').toSeq.map(_.trim).filter(_.nonEmpty)
-      // torn read tolerance: gc/sweep scans parse OTHER writers' in-flight
-      // staging, and writeSmallFile is truncate-then-write — a reader
-      // between the two sees an empty (or headerless) file. Treat it as
-      // not-bucketed-yet rather than crashing the scanning publish; the
-      // uncommitted dir's own writer re-reads it only after staging.
-      if (lines.isEmpty || !lines.head.startsWith("buckets="))
-        return None
-      val nb = lines.head.stripPrefix("buckets=").toInt
-      val entries = lines.tail.map { line =>
-        val cut = line.indexOf(':')
-        line.substring(0, cut).toInt ->
-          line.substring(cut + 1).split(';').toSeq.filter(_.nonEmpty)
-      }.toMap
-      Some((nb, entries))
+  // ------------------------------------------------------ the commit record
+
+  /** Everything a version says about itself, as ONE immutable file
+    * (`_COMMIT`) staged before the pointer flip — the shape of the Delta
+    * transaction log and of Structured Streaming's commit log. A version
+    * exists as its record plus its data files, or not at all: no reader
+    * can see a version with half its metadata (the r17 race class, where
+    * a missing per-feature file legitimately meant "default").
+    *
+    * Sections, each under a `@@<name>` header line, framed by
+    * `@@commit at=<ms>` and `@@end`:
+    *  - `marker`: the lineage marker (`tag:batchId` for streaming sinks);
+    *  - `inventory`: `name:bytes` per data file, sorted — the integrity
+    *    manifest [[validateCurrent]] checks against listings;
+    *  - `buckets`: `buckets=N`, then `b:ref;ref…` per bucket. A ref is a
+    *    bucket data DIRECTORY (`data/gN/__gbucket=K`) or — the r10
+    *    file-pruning merge — one parquet FILE inside one, so a partial
+    *    rewrite carries a bucket's untouched files by reference;
+    *  - `deltas`: `keys=…`, then the merge-on-read overlay dirs OLDEST
+    *    FIRST;
+    *  - `zones`: the per-file zonemap ([[Zones]]);
+    *  - `blooms`: per-file key blooms (`keys=`, `m=`, `k=`, `ref\tb64`);
+    *  - `colmap`: the column mapping ([[ColMap]]);
+    *  - `purged`: the name of a purge commit's retraction dir.
+    * An absent section means flat, no overlays, no stats, no blooms,
+    * identity colmap, not a purge commit. A record without its `@@end`
+    * line is torn (still staging). `at` is the staging time — the
+    * [[history]] `committed_at` — and survives purge's in-place rewrite. */
+  private final case class Commit(
+      marker: String,
+      inventory: Seq[(String, Long)] = Nil,
+      buckets: Option[(Int, Map[Int, Seq[String]])] = None,
+      deltas: Option[(Seq[String], Seq[String])] = None,
+      zones: Option[Zones] = None,
+      blooms: Option[(Seq[String], Map[String, Array[Byte]])] = None,
+      colMap: ColMap = IdentityColMap,
+      purged: Boolean = false,
+      at: Long = 0L) {
+
+    /** The basis of a DERIVED version: the layout sections carry, the
+      * per-version facts (marker, inventory, retraction dir) do not. */
+    def derive(newMarker: String): Commit =
+      copy(marker = newMarker, inventory = Nil, purged = false)
+
+    def render: String = {
+      val b = Seq.newBuilder[String]
+      b += s"@@commit at=$at" += "@@marker" += marker += "@@inventory"
+      b ++= inventory.map { case (name, len) => s"$name:$len" }
+      buckets.foreach { case (nb, entries) =>
+        b += "@@buckets" += s"buckets=$nb"
+        b ++= entries.toSeq.sortBy(_._1).map { case (k, rels) => s"$k:${rels.mkString(";")}" }
+      }
+      deltas.foreach { case (keys, overlays) =>
+        b += "@@deltas" += s"keys=${keys.mkString(",")}"
+        b ++= overlays
+      }
+      zones.foreach { z =>
+        b += "@@zones" += s"keys=${z.keys.mkString(",")}" +=
+          s"tags=${z.tags.mkString(",")}" += s"cols=${z.vcols.mkString(",")}" +=
+          s"ctags=${z.vtags.mkString(",")}"
+        b ++= z.entries.toSeq.sortBy(_._1).map { case (rel, (n, rs)) => zoneLine(rel, n, rs) }
+      }
+      blooms.foreach { case (keys, entries) =>
+        b += "@@blooms" += s"keys=${keys.mkString(",")}" += s"m=$BloomBits" += s"k=$BloomK"
+        b ++= entries.toSeq.sortBy(_._1).map { case (rel, bits) =>
+          s"$rel\t${java.util.Base64.getEncoder.encodeToString(bits)}"
+        }
+      }
+      if (!colMap.isIdentity) b += "@@colmap" += serializeColMap(colMap)
+      if (purged) b += "@@purged" += PurgedName
+      (b += "@@end").result().mkString("\n")
     }
+  }
+
+  private object Commit {
+    private val Headers = Set("@@marker", "@@inventory", "@@buckets",
+      "@@deltas", "@@zones", "@@blooms", "@@colmap", "@@purged", "@@end")
+
+    /** None for a torn or malformed record. The zones and blooms sections
+      * parse defensively: malformed content there degrades to no stats /
+      * no blooms (never-prune), not to an unreadable version. */
+    def parse(text: String): Option[Commit] =
+      try {
+        val lines = text.split('\n').toSeq
+        if (lines.size < 2 || !lines.head.startsWith("@@commit at=") ||
+            lines.last != "@@end") None
+        else {
+          val heads = lines.indices.filter(i => Headers(lines(i)))
+          val sec: Map[String, Seq[String]] = heads.zip(heads.tail).map {
+            case (i, j) => lines(i).drop(2) -> lines.slice(i + 1, j)
+          }.toMap
+          def rows(name: String): Option[Seq[String]] =
+            sec.get(name).map(_.map(_.trim).filter(_.nonEmpty))
+          Some(Commit(
+            marker = sec.get("marker").map(_.mkString("\n")).getOrElse(""),
+            inventory = rows("inventory").getOrElse(Nil).map { line =>
+              val cut = line.lastIndexOf(':')
+              (line.substring(0, cut), line.substring(cut + 1).toLong)
+            },
+            buckets = rows("buckets").map { ls =>
+              require(ls.head.startsWith("buckets="))
+              ls.head.stripPrefix("buckets=").toInt -> ls.tail.map { line =>
+                val cut = line.indexOf(':')
+                line.substring(0, cut).toInt ->
+                  line.substring(cut + 1).split(';').toSeq.filter(_.nonEmpty)
+              }.toMap
+            },
+            deltas = rows("deltas").map { ls =>
+              require(ls.head.startsWith("keys="))
+              (ls.head.stripPrefix("keys=").split(',').toSeq.filter(_.nonEmpty), ls.tail)
+            },
+            zones = sec.get("zones").flatMap(parseZones),
+            blooms = sec.get("blooms").flatMap(parseBlooms),
+            colMap = sec.get("colmap").map(ls => parseColMapContent(ls.mkString("\n"), "commit record"))
+              .getOrElse(IdentityColMap),
+            purged = sec.contains("purged"),
+            at = lines.head.stripPrefix("@@commit at=").toLong))
+        }
+      } catch { case scala.util.control.NonFatal(_) => None }
+  }
+
+  /** A version dir's record; None when it is absent (a retired version,
+    * or one still staging) or torn. */
+  private def readCommit(f: FileSystem, vdir: Path): Option[Commit] =
+    try Commit.parse(readSmallFile(f, new Path(vdir, CommitName)))
+    catch { case _: java.io.FileNotFoundException => None }
+
+  /** The record of a COMMITTED version. Absence is an error, never a
+    * default: the version was retired under the caller (re-run against
+    * the current version) or the table is damaged. */
+  private def recordOf(f: FileSystem, vdir: Path): Commit =
+    readCommit(f, vdir).getOrElse(throw new IllegalStateException(
+      s"no readable commit record in $vdir — the version was retired " +
+        "mid-operation (re-run against the current version) or the table " +
+        "is damaged"))
+
+  private def currentRecord(spark: SparkSession, baseDir: String): Option[Commit] =
+    currentVersion(spark, baseDir).map(v =>
+      recordOf(fs(spark, baseDir), versionPath(new Path(baseDir), v)))
+
+  /** Write version dir `target`'s record — the single pre-flip metadata
+    * step of every staging path: the inventory is listed and the staging
+    * time stamped here. */
+  private def stageRecord(f: FileSystem, base: Path, target: Path, rec: Commit): Unit = {
+    writeSmallFile(f, new Path(target, CommitName),
+      rec.copy(inventory = inventory(f, base, target, rec),
+        at = System.currentTimeMillis()).render)
+    haltPoint("staged-sidecars")
   }
 
   /** The committed version's bucket layout, if it is bucketed. */
   private[graft] def bucketManifest(spark: SparkSession, baseDir: String)
       : Option[(Int, Map[Int, Seq[String]])] =
-    currentVersion(spark, baseDir).flatMap { v =>
-      parseBuckets(fs(spark, baseDir), versionPath(new Path(baseDir), v))
-    }
-
-  /** Parse a version dir's `_DELTAS` overlay manifest: (merge keys,
-    * base-relative overlay dirs OLDEST FIRST). None when the version
-    * carries no merge-on-read state. */
-  private def parseDeltas(f: FileSystem, vdir: Path): Option[(Seq[String], Seq[String])] = {
-    val dp = new Path(vdir, DeltasName)
-    if (!f.exists(dp)) None
-    else {
-      val lines = readSmallFile(f, dp).split('\n').toSeq.map(_.trim).filter(_.nonEmpty)
-      // torn-read tolerance mirrors parseBuckets: scans may catch a
-      // concurrent writer between truncate and write
-      if (lines.isEmpty || !lines.head.startsWith("keys=")) return None
-      val keys = lines.head.stripPrefix("keys=").split(',').toSeq.filter(_.nonEmpty)
-      Some((keys, lines.tail))
-    }
-  }
+    currentRecord(spark, baseDir).flatMap(_.buckets)
 
   /** The committed version's overlay list (empty when none). */
   private[graft] def deltaManifest(spark: SparkSession, baseDir: String): Seq[String] =
-    currentVersion(spark, baseDir).toSeq.flatMap { v =>
-      parseDeltas(fs(spark, baseDir), versionPath(new Path(baseDir), v))
-        .map(_._2).getOrElse(Nil)
-    }
+    currentRecord(spark, baseDir).toSeq.flatMap(_.deltas.toSeq.flatMap(_._2))
 
-  // ------------------------------------- logical column mapping (_COLMAP)
+  // ------------------------------------------- logical column mapping
   // Rename/drop a column on a 100 TB table as ONE metadata commit — the
   // Delta column-mapping idea reduced to this format's plain-text +
   // pointer machinery. The invariant that makes it safe: a column's
   // PHYSICAL (parquet) name is frozen at birth and every data file of a
   // table generation carries the full physical column set, so renames
-  // never touch data, every at-rest artifact (data files, `_ZONES` /
-  // `_BLOOMS` headers and `_DELTAS` keys, `_PURGED` sidecars) speaks
+  // never touch data, every at-rest artifact (data files, zone/bloom
+  // headers and overlay keys, `_PURGED` retraction dirs) speaks
   // physical names, and every in-memory frame a caller sees speaks the
   // version's LOGICAL view. Drops are view-level (the bytes remain until
   // the next [[compact]], which also NORMALIZES physical := logical —
   // exactly Delta's "DROP COLUMN is metadata; REORG TABLE purges" split).
-
-  private val ColMapName = "_COLMAP"
 
   /** `renames`: physical → logical, only where they differ; `dropped`:
     * physical names removed from the logical view (bytes pending a
@@ -1488,11 +1572,11 @@ object VersionedSnapshot {
   private def parseColMapContent(content: String, where: String): ColMap = {
     val lines = content.split('\n').toSeq.map(_.trim).filter(_.nonEmpty)
     require(lines.nonEmpty && lines.head.startsWith("map="),
-      s"corrupt $ColMapName in $where")
+      s"corrupt column map in $where")
     val renames = lines.head.stripPrefix("map=").split(',').toSeq
       .filter(_.nonEmpty).map { kv =>
         val i = kv.indexOf(':')
-        require(i > 0 && i < kv.length - 1, s"corrupt $ColMapName entry '$kv' in $where")
+        require(i > 0 && i < kv.length - 1, s"corrupt column map entry '$kv' in $where")
         kv.substring(0, i) -> kv.substring(i + 1)
       }.toMap
     val dropped = lines.find(_.startsWith("dropped="))
@@ -1503,7 +1587,7 @@ object VersionedSnapshot {
         .filter(_.nonEmpty).map { kv =>
           val i = kv.indexOf(':')
           require(i > 0 && i < kv.length - 1,
-            s"corrupt $ColMapName origin entry '$kv' in $where")
+            s"corrupt column map origin entry '$kv' in $where")
           kv.substring(0, i) -> kv.substring(i + 1)
         }.toMap)
       .getOrElse(Map.empty[String, String])
@@ -1517,46 +1601,31 @@ object VersionedSnapshot {
     "origin=" + cm.origin.toSeq.sortBy(_._1)
       .map { case (p, b) => s"$p:$b" }.mkString(",")).mkString("\n")
 
-  /** Committed version dirs are IMMUTABLE under the commit protocol:
-    * `_COLMAP` is staged before the pointer flip, renames/drops commit
-    * NEW versions, and purge rewrites only data files — so a vdir's
-    * colmap (including its absence) can be cached forever, across
-    * writers and JVMs. This kills the per-version small-file probe on
-    * the CDF path (every sync/IVM tick paid it, on tables that never
-    * renamed most of all). Bounded: cleared wholesale past 8192 entries
-    * (a colmap is a few dozen bytes; the cap is paranoia, not need). */
+  /** A COMMITTED version's colmap never changes: renames and drops
+    * commit NEW versions, and purge's in-place rewrite keeps the section
+    * — so a committed vdir's colmap can be cached forever, across writers
+    * and JVMs. Only [[colMapOf]] fills it, and its callers pass committed
+    * versions only: a STAGED record is not final (an aborted vN's number
+    * is re-claimed by the retry, whose record may map differently), so
+    * the sweeps' and claims' reads of other writers' staging must never
+    * land here. This kills the
+    * per-version small-file read on the CDF path (every sync/IVM tick
+    * paid it). Bounded: cleared wholesale past 8192 entries (a colmap is
+    * a few dozen bytes; the cap is paranoia, not need). */
   private val colMapCache =
     new java.util.concurrent.ConcurrentHashMap[String, ColMap]()
 
-  /** Malformed content THROWS (unlike the pruning sidecars, which degrade
-    * to never-prune): a misparsed colmap would silently expose physical
-    * column names — wrong answers, not just slower ones. Missing file =
-    * identity, so every pre-colmap version reads unchanged. */
-  private def parseColMap(f: FileSystem, vdir: Path): ColMap = {
-    val key = vdir.toString
-    val hit = colMapCache.get(key)
+  private def colMapOf(spark: SparkSession, baseDir: String, v: Long): ColMap = {
+    val vdir = versionPath(new Path(baseDir), v)
+    val hit = colMapCache.get(vdir.toString)
     if (hit != null) hit
     else {
-      val p = new Path(vdir, ColMapName)
-      val cm =
-        if (!f.exists(p)) IdentityColMap
-        else parseColMapContent(readSmallFile(f, p), vdir.toString)
-      // only cache vdirs that are fully committed (their _COLMAP can no
-      // longer change); a staged dir probed mid-publish stays uncached
-      if (f.exists(new Path(vdir, ManifestName))) {
-        if (colMapCache.size() > 8192) colMapCache.clear()
-        colMapCache.put(key, cm)
-      }
+      val cm = recordOf(fs(spark, baseDir), vdir).colMap
+      if (colMapCache.size() > 8192) colMapCache.clear()
+      colMapCache.put(vdir.toString, cm)
       cm
     }
   }
-
-  private def writeColMap(f: FileSystem, target: Path, cm: ColMap): Unit =
-    if (!cm.isIdentity)
-      writeSmallFile(f, new Path(target, ColMapName), serializeColMap(cm))
-
-  private def colMapOf(spark: SparkSession, baseDir: String, v: Long): ColMap =
-    parseColMap(fs(spark, baseDir), versionPath(new Path(baseDir), v))
 
   /** A PHYSICAL frame in `cm`'s logical view: dropped physical columns
     * vanish, renamed ones alias; internal columns (never in a colmap)
@@ -1566,22 +1635,22 @@ object VersionedSnapshot {
     else df.select(df.columns.toIndexedSeq.filterNot(cm.dropped.contains)
       .map(c => col(c).as(cm.toLogical(c))): _*)
 
-  // --------------------------------------------- per-file zonemaps (_ZONES)
+  // --------------------------------------------------- per-file zonemaps
   // The data-skipping layer production table formats keep in their file
   // manifests (Delta `stats`, Iceberg `lower_bounds`/`upper_bounds`),
   // reduced to the same plain-text + pointer machinery: every committed
-  // version carries a `_ZONES` file mapping each referenced data file to
-  // (row count, per-key-column min/max). Hash bucketing answers "which
-  // bucket could hold this key"; the zonemap answers the orthogonal
+  // bucketed record carries a zones section mapping each referenced data
+  // file to (row count, per-key-column min/max). Hash bucketing answers
+  // "which bucket could hold this key"; the zonemap answers the orthogonal
   // question "could this FILE's value range hold it at all" — which is
   // what prunes reads for absent / out-of-range keys and lets value-
   // disjoint merges inherit even hash-touched buckets.
   //
   // Cost shape: stats are computed by ONE narrow aggregate over the files
   // the publish just wrote (O(delta) — inherited files copy their rows
-  // from the previous version's `_ZONES` driver-side), and the file is
-  // one line per referenced data file — the same cardinality the
-  // integrity `_MANIFEST` already carries per version.
+  // from the previous version's zonemap driver-side), and the section is
+  // one line per referenced data file — the same cardinality the record's
+  // inventory already carries.
 
   /** Comparison class of a key column: 'i' = integer-comparable longs
     * (integral/boolean/date/timestamp, normalized in the stats query so
@@ -1681,46 +1750,43 @@ object VersionedSnapshot {
       vcols: Seq[String], vtags: Seq[String],
       entries: Map[String, (Long, Seq[Option[(String, String)]])])
 
-  private def parseZones(f: FileSystem, vdir: Path): Option[Zones] = {
-    val zp = new Path(vdir, ZonesName)
-    if (!f.exists(zp)) None
-    else {
-      // defensive parse: a corrupt or hand-edited _ZONES file must degrade
-      // to the documented no-stats/never-prune fallback (same path as a
-      // pre-zonemap version or key-shape drift), never crash the read
-      try {
-        val lines = readSmallFile(f, zp).split('\n').toSeq.filter(_.nonEmpty)
-        if (lines.size < 2 ||
-            !lines.head.startsWith("keys=") || !lines(1).startsWith("tags=")) None
-        else {
-          val keys = lines.head.stripPrefix("keys=").split(',').toSeq.filter(_.nonEmpty)
-          val tags = lines(1).stripPrefix("tags=").split(',').toSeq.filter(_.nonEmpty)
-          // optional value-column stats headers (r9); absent on older files
-          val hasV = lines.size >= 4 &&
-            lines(2).startsWith("cols=") && lines(3).startsWith("ctags=")
-          val vcols =
-            if (hasV) lines(2).stripPrefix("cols=").split(',').toSeq.filter(_.nonEmpty)
-            else Nil
-          val vtags =
-            if (hasV) lines(3).stripPrefix("ctags=").split(',').toSeq.filter(_.nonEmpty)
-            else Nil
-          val entries = lines.drop(if (hasV) 4 else 2).map { line =>
-            val parts = line.split('\t')
-            val ranges = parts.drop(2).toSeq.map { fld =>
-              if (fld == "-") None
-              else {
-                val cut = fld.indexOf(',')
-                // cut == -1 makes substring throw -> caught below -> None
-                Some((fld.substring(0, cut), fld.substring(cut + 1)))
-              }
+  /** A record's zones section. Defensive: a corrupt or hand-edited
+    * section degrades to the documented no-stats/never-prune fallback
+    * (same path as a version without a zonemap or key-shape drift), never
+    * crashes the read. */
+  private def parseZones(section: Seq[String]): Option[Zones] = {
+    try {
+      val lines = section.filter(_.nonEmpty)
+      if (lines.size < 2 ||
+          !lines.head.startsWith("keys=") || !lines(1).startsWith("tags=")) None
+      else {
+        val keys = lines.head.stripPrefix("keys=").split(',').toSeq.filter(_.nonEmpty)
+        val tags = lines(1).stripPrefix("tags=").split(',').toSeq.filter(_.nonEmpty)
+        // optional value-column stats headers (r9); absent on older files
+        val hasV = lines.size >= 4 &&
+          lines(2).startsWith("cols=") && lines(3).startsWith("ctags=")
+        val vcols =
+          if (hasV) lines(2).stripPrefix("cols=").split(',').toSeq.filter(_.nonEmpty)
+          else Nil
+        val vtags =
+          if (hasV) lines(3).stripPrefix("ctags=").split(',').toSeq.filter(_.nonEmpty)
+          else Nil
+        val entries = lines.drop(if (hasV) 4 else 2).map { line =>
+          val parts = line.split('\t')
+          val ranges = parts.drop(2).toSeq.map { fld =>
+            if (fld == "-") None
+            else {
+              val cut = fld.indexOf(',')
+              // cut == -1 makes substring throw -> caught below -> None
+              Some((fld.substring(0, cut), fld.substring(cut + 1)))
             }
-            // parts(1) absent or non-numeric throws -> caught below -> None
-            parts(0) -> (parts(1).toLong, ranges)
-          }.toMap
-          Some(Zones(keys, tags, vcols, vtags, entries))
-        }
-      } catch { case scala.util.control.NonFatal(_) => None }
-    }
+          }
+          // parts(1) absent or non-numeric throws -> caught below -> None
+          parts(0) -> (parts(1).toLong, ranges)
+        }.toMap
+        Some(Zones(keys, tags, vcols, vtags, entries))
+      }
+    } catch { case scala.util.control.NonFatal(_) => None }
   }
 
   private def zoneLine(rel: String, count: Long,
@@ -1730,7 +1796,7 @@ object VersionedSnapshot {
       case None => "-"
     }).mkString("\t")
 
-  // --------------------------------------- per-file key blooms (_BLOOMS)
+  // ------------------------------------------------- per-file key blooms
 
   /** Set the k double-hashed bits of (h1, h2) in `b`; shared by the
     * write-side aggregator and the driver-side membership probe so both
@@ -1782,62 +1848,53 @@ object VersionedSnapshot {
     (xxhash64(keys.map(col): _*),
       xxhash64(lit(BloomSalt) +: keys.map(col): _*))
 
-  /** Per-file key blooms of the files a publish just wrote — one narrow
-    * aggregate over the delta, same cost shape as [[freshZoneStats]]. */
-  private def freshBloomStats(spark: SparkSession, gDir: Path, gName: String,
+  /** A data file's base-relative ref from its scanned URI. lastIndexOf,
+    * matching footerZoneStats: a base path that itself contains `/data/`
+    * segments must not shift the ref boundary. */
+  private def relOfDataUri(uri: String): String =
+    uri.substring(uri.lastIndexOf(s"/$DataDirName/") + 1)
+
+  /** Per-file key blooms of the data files under `dirs` (the files a
+    * publish or purge just wrote) — one narrow aggregate, same cost shape
+    * as [[freshZoneStats]]. */
+  private def freshBloomStats(spark: SparkSession, dirs: Seq[Path],
       keys: Seq[String]): Seq[(String, Array[Byte])] = {
     import org.apache.spark.sql.functions.input_file_name
     val bloomAgg = org.apache.spark.sql.functions.udaf(new KeyBloomAgg,
       org.apache.spark.sql.Encoders.tuple(
         org.apache.spark.sql.Encoders.scalaLong, org.apache.spark.sql.Encoders.scalaLong))
     val (h1, h2) = bloomHashCols(keys)
-    val marker = s"/$DataDirName/$gName/"
-    readUniform(spark, Seq(gDir.toString))
+    readUniform(spark, dirs.map(_.toString))
       .groupBy(input_file_name().as("__f"))
       .agg(bloomAgg(h1, h2).as("__bloom"))
       .collect().toSeq.map { r =>
-        val uri = r.getAs[String]("__f")
-        // lastIndexOf, matching footerZoneStats: a base path that itself
-        // contains /data/<name>/ must not shift the rel boundary
-        (uri.substring(uri.lastIndexOf(marker) + 1), r.getAs[Array[Byte]]("__bloom"))
+        (relOfDataUri(r.getAs[String]("__f")), r.getAs[Array[Byte]]("__bloom"))
       }
   }
 
-  /** One version's bloom sidecar: (key cols, per-file bloom). Defensive
+  /** A record's blooms section: (key cols, per-file bloom). Defensive
     * parse — malformed content degrades to no-bloom, never a crash. */
-  private def parseBlooms(f: FileSystem, vdir: Path)
-      : Option[(Seq[String], Map[String, Array[Byte]])] = {
-    val bp = new Path(vdir, BloomsName)
-    if (!f.exists(bp)) None
-    else
-      try {
-        val lines = readSmallFile(f, bp).split('\n').toSeq.filter(_.nonEmpty)
-        if (lines.size < 3 || !lines.head.startsWith("keys=") ||
-            lines(1) != s"m=$BloomBits" || lines(2) != s"k=$BloomK") None
-        else {
-          val keys = lines.head.stripPrefix("keys=").split(',').toSeq.filter(_.nonEmpty)
-          val entries = lines.drop(3).map { line =>
-            val Array(rel, b64) = line.split('\t')
-            rel -> java.util.Base64.getDecoder.decode(b64)
-          }.toMap
-          if (entries.values.exists(_.length != BloomBits / 8)) None
-          else Some((keys, entries))
-        }
-      } catch { case scala.util.control.NonFatal(_) => None }
-  }
-
-  private def writeBlooms(f: FileSystem, target: Path, keys: Seq[String],
-      entries: Seq[(String, Array[Byte])]): Unit = {
-    val lines = Seq(s"keys=${keys.mkString(",")}", s"m=$BloomBits", s"k=$BloomK") ++
-      entries.sortBy(_._1).map { case (rel, b) =>
-        s"$rel\t${java.util.Base64.getEncoder.encodeToString(b)}"
+  private def parseBlooms(section: Seq[String])
+      : Option[(Seq[String], Map[String, Array[Byte]])] =
+    try {
+      val lines = section.filter(_.nonEmpty)
+      if (lines.size < 3 || !lines.head.startsWith("keys=") ||
+          lines(1) != s"m=$BloomBits" || lines(2) != s"k=$BloomK") None
+      else {
+        val keys = lines.head.stripPrefix("keys=").split(',').toSeq.filter(_.nonEmpty)
+        val entries = lines.drop(3).map { line =>
+          val Array(rel, b64) = line.split('\t')
+          rel -> java.util.Base64.getDecoder.decode(b64)
+        }.toMap
+        if (entries.values.exists(_.length != BloomBits / 8)) None
+        else Some((keys, entries))
       }
-    writeSmallFile(f, new Path(target, BloomsName), lines.mkString("\n"))
-  }
+    } catch { case scala.util.control.NonFatal(_) => None }
 
-  /** Per-file (count, min/max per key) stats for the files a publish just
-    * wrote under `gDir`. Fast path: the parquet FOOTERS of those files
-    * already carry exact per-row-group statistics, so for every
+  /** Per-file (count, min/max per key) stats for the data files under
+    * `dirs` (the files a publish or purge just wrote). Fast path: the
+    * parquet FOOTERS of those files already carry exact per-row-group
+    * statistics, so for every
     * cleanly-mappable type the stats are METADATA-priced — O(files)
     * footer reads instead of a second O(delta) scan of everything the
     * publish just wrote (at 100 TB that second scan, not the manifest
@@ -1851,11 +1908,12 @@ object VersionedSnapshot {
     * shapes. Snapshot writes pin TIMESTAMP_MICROS (see
     * [[withMicrosTimestamps]]) precisely so timestamp-bearing tables
     * stay on this path instead of silently paying the scan forever. */
-  private def freshZoneStats(spark: SparkSession, gDir: Path, gName: String,
-      statCols: Seq[String], schema: org.apache.spark.sql.types.StructType)
+  private def freshZoneStats(spark: SparkSession, dirs: Seq[Path],
+      statCols: Seq[String], schema: org.apache.spark.sql.types.StructType,
+      padMissingColumns: Boolean = false)
       : Seq[(String, Long, Seq[Option[(String, String)]])] =
-    footerZoneStats(spark, Seq(gDir), statCols, schema)
-      .getOrElse(scanZoneStats(spark, gDir, gName, statCols, schema))
+    footerZoneStats(spark, dirs, statCols, schema, padMissingColumns)
+      .getOrElse(scanZoneStats(spark, dirs, statCols, schema))
 
   private def isMicrosTimestamp(
       chunk: org.apache.parquet.hadoop.metadata.ColumnChunkMetaData): Boolean =
@@ -2009,14 +2067,24 @@ object VersionedSnapshot {
     } catch { case scala.util.control.NonFatal(_) => None }
   }
 
+  /** Scan fallback of [[freshZoneStats]] for one generation dir — the
+    * form ZoneStatsParitySpec pins against the footer path. */
+  private[graft] def scanZoneStats(spark: SparkSession, gDir: Path, gName: String,
+      statCols: Seq[String], schema: org.apache.spark.sql.types.StructType)
+      : Seq[(String, Long, Seq[Option[(String, String)]])] =
+    scanZoneStats(spark, Seq(gDir), statCols, schema)
+
   /** Scan fallback of [[freshZoneStats]] — one narrow aggregate over the
     * delta only (the pre-r14 path, and the semantics the footer path
-    * must reproduce exactly). */
-  private[graft] def scanZoneStats(spark: SparkSession, gDir: Path, gName: String,
+    * must reproduce exactly). A stat column absent from `schema` (a
+    * pre-evolution dir under purge) records no stats, as on the footer
+    * path. */
+  private def scanZoneStats(spark: SparkSession, dirs: Seq[Path],
       statCols: Seq[String], schema: org.apache.spark.sql.types.StructType)
       : Seq[(String, Long, Seq[Option[(String, String)]])] = {
     import org.apache.spark.sql.functions.{count => fCount, input_file_name, max => fMax, min => fMin}
-    val tags = statCols.map(k => zoneTag(schema(k).dataType))
+    val tags = statCols.map(k =>
+      schema.fields.find(_.name == k).map(f => zoneTag(f.dataType)).getOrElse("x"))
     val aggs = fCount(lit(1L)).as("__n") +:
       statCols.zip(tags).flatMap { case (k, tag) =>
         if (tag == "x") Nil
@@ -2026,14 +2094,11 @@ object VersionedSnapshot {
             fCount(e).as(s"__nn_$k"))
         }
       }
-    val marker = s"/$DataDirName/$gName/"
-    readUniform(spark, Seq(gDir.toString))
+    readUniform(spark, dirs.map(_.toString))
       .groupBy(input_file_name().as("__f"))
       .agg(aggs.head, aggs.tail: _*)
       .collect().toSeq.map { r =>
-        val uri = r.getAs[String]("__f")
-        // lastIndexOf, matching footerZoneStats' rel resolution exactly
-        val rel = uri.substring(uri.lastIndexOf(marker) + 1)
+        val rel = relOfDataUri(r.getAs[String]("__f"))
         val n = r.getAs[Long]("__n")
         val ranges = statCols.zip(tags).map { case (k, tag) =>
           if (tag == "x") None
@@ -2049,10 +2114,7 @@ object VersionedSnapshot {
 
   /** The committed version's zonemap, if any. */
   private[graft] def zoneManifest(spark: SparkSession, baseDir: String): Option[(Seq[String], Seq[String], Map[String, (Long, Seq[Option[(String, String)]])])] =
-    currentVersion(spark, baseDir).flatMap { v =>
-      parseZones(fs(spark, baseDir), versionPath(new Path(baseDir), v))
-        .map(z => (z.keys, z.tags, z.entries))
-    }
+    currentRecord(spark, baseDir).flatMap(_.zones).map(z => (z.keys, z.tags, z.entries))
 
   /** Hash bucket of the merge key — pure function of the key columns, so
     * every merge agrees on each row's bucket regardless of layout. */
@@ -2085,28 +2147,26 @@ object VersionedSnapshot {
     val vdirs = f.listStatus(base).toSeq
       .filter(st => st.isDirectory && st.getPath.getName.startsWith("v"))
     // the scan reads OTHER writers' staging and retention's targets: any
-    // per-dir read can lose its file mid-parse. A torn-but-readable
-    // sidecar parses to None (staging shape, covered by the age horizon);
+    // per-dir read can lose its file mid-parse. An absent or torn record
+    // is a version still staging (covered by the age horizon) or retired;
     // a THROWN read means `referenced` may be missing a committed
     // version's refs — deleting anything on a partial scan could sweep
     // live old generations, so the whole pass defers instead.
     var scanComplete = true
-    def safeScan[T](p: => Option[T]): Option[T] =
-      try p catch { case scala.util.control.NonFatal(_) => scanComplete = false; None }
-    val referenced = (vdirs
-      .flatMap(st => safeScan(parseBuckets(f, st.getPath)).toSeq)
-      .flatMap { case (_, entries) =>
-        // "data/gNNNNN/__gbucket=K[/file]" → shared granularity is the
-        // g-dir; a dir lives while ANY version references it or a file in
-        // it (file refs keep the whole dir — conservative, documented).
-        // External refs (shallow clones) live in ANOTHER table's tree —
-        // they protect nothing here and this sweep can never reach them.
-        entries.values.flatten.filterNot(isExternalRef).map(_.split('/')(1))
-      } ++ vdirs
-      // merge-on-read overlays ("data/dNNNNN") are shared the same way
-      .flatMap(st => safeScan(parseDeltas(f, st.getPath)).toSeq)
-      .flatMap { case (_, overlays) =>
-        overlays.filterNot(isExternalRef).map(_.split('/')(1)) }).toSet
+    val referenced = vdirs.flatMap { st =>
+      val rec =
+        try readCommit(f, st.getPath)
+        catch { case scala.util.control.NonFatal(_) => scanComplete = false; None }
+      // "data/gNNNNN/__gbucket=K[/file]" → shared granularity is the
+      // g-dir; a dir lives while ANY version references it or a file in
+      // it (file refs keep the whole dir — conservative, documented).
+      // Merge-on-read overlays ("data/dNNNNN") are shared the same way.
+      // External refs (shallow clones) live in ANOTHER table's tree —
+      // they protect nothing here and this sweep can never reach them.
+      rec.toSeq.flatMap(r => r.buckets.toSeq.flatMap(_._2.values.flatten) ++
+        r.deltas.toSeq.flatMap(_._2))
+        .filterNot(isExternalRef).map(_.split('/')(1))
+    }.toSet
     f.listStatus(dataRoot).toSeq.flatMap { st =>
       val name = st.getPath.getName
       val claimedLive = name.drop(1).toLongOption.exists(liveClaims.contains)
@@ -2161,10 +2221,16 @@ object VersionedSnapshot {
   // ------------------------------------------------------ integrity manifest
 
   /** Base-relative data-file inventory of a version: the version dir's own
-    * files (flat), or every file of every bucket directory its `_BUCKETS`
-    * manifest references (bucketed). Listing-only — no contents read. */
-  private def inventory(f: FileSystem, base: Path, vdir: Path): Seq[(String, Long)] = {
-    val baseFiles = parseBuckets(f, vdir) match {
+    * files (flat), or every file of every bucket directory the record
+    * references (bucketed). Listing-only — no contents read. Staged into
+    * the record BEFORE the pointer flip, so every committed version
+    * carries its own integrity record: a replicated or promoted version
+    * is checked with [[validateCurrent]] — missing, truncated, or stray
+    * data files (the classic partial-copy failure on object stores) are
+    * detected from listings alone. */
+  private def inventory(f: FileSystem, base: Path, vdir: Path,
+      rec: Commit): Seq[(String, Long)] = {
+    val baseFiles = rec.buckets match {
       case Some((_, entries)) =>
         entries.toSeq.sortBy(_._1).flatMap(_._2).flatMap { rel =>
           if (isFileRef(rel))
@@ -2174,21 +2240,10 @@ object VersionedSnapshot {
         }
       case None => dataFiles(f, vdir)
     }
-    val deltaFiles = parseDeltas(f, vdir).map(_._2).getOrElse(Nil).flatMap { rel =>
+    val deltaFiles = rec.deltas.map(_._2).getOrElse(Nil).flatMap { rel =>
       dataFiles(f, resolveRef(base, rel)).map { case (name, len) => (s"$rel/$name", len) }
     }
     (baseFiles ++ deltaFiles).sortBy(_._1)
-  }
-
-  /** Data-file inventory (`name:bytes` per line, sorted) written BEFORE
-    * the pointer flip, so every committed version carries its own
-    * integrity record. A replicated or promoted version is checked with
-    * [[validateCurrent]] — missing, truncated, or stray data files (the
-    * classic partial-copy failure on object stores) are detected from
-    * listings alone, no file contents read. */
-  private def writeManifest(f: FileSystem, base: Path, vdir: Path): Unit = {
-    val entries = inventory(f, base, vdir).map { case (name, len) => s"$name:$len" }
-    writeSmallFile(f, new Path(vdir, ManifestName), entries.mkString("\n"))
   }
 
   private def dataFiles(f: FileSystem, dir: Path): Seq[(String, Long)] =
@@ -2198,40 +2253,36 @@ object VersionedSnapshot {
       .sortBy(_._1)
 
   /** True iff the committed version's data files exactly match its
-    * manifest (same names, same byte lengths, nothing extra). False when
-    * no version or no manifest exists. */
+    * record's inventory (same names, same byte lengths, nothing extra).
+    * False when no version or no readable record exists. */
   def validateCurrent(spark: SparkSession, baseDir: String): Boolean =
     currentVersion(spark, baseDir).exists { v =>
       val f = fs(spark, baseDir)
       val base = new Path(baseDir)
       val dir = versionPath(base, v)
-      val m = new Path(dir, ManifestName)
-      f.exists(m) && {
-        val expected = readSmallFile(f, m).split('\n').toSeq.filter(_.nonEmpty).map { line =>
-          val cut = line.lastIndexOf(':')
-          (line.substring(0, cut), line.substring(cut + 1).toLong)
-        }
+      readCommit(f, dir).exists { rec =>
         // a referenced dir/file that VANISHED (partial copy, swept source
         // of a shallow clone) is exactly the drift this check exists to
         // report — "invalid", never an exception out of the listing
         val actual =
-          try Some(inventory(f, base, dir))
+          try Some(inventory(f, base, dir, rec))
           catch { case _: java.io.FileNotFoundException => None }
-        actual.contains(expected)
+        actual.contains(rec.inventory)
       }
     }
 
   // --------------------------------------------------- operational metadata
 
   /** One row per RETAINED version, newest first — the `DESCRIBE HISTORY`
-    * analog. Columns: `version`, `marker` (the full `_LAST_BATCH` string,
-    * lineage suffix included), `layout` (`flat` / `bucketed` /
+    * analog. Columns: `version`, `marker` (the full lineage marker,
+    * `tag:batchId` suffix included), `layout` (`flat` / `bucketed` /
     * `bucketed+mor`), `num_buckets` (null for flat), `n_files`, `bytes`
-    * (both from the committed `_MANIFEST` inventory — listing-written at
-    * publish, so no data is read here), `n_overlays`, `is_current`.
+    * (both from the record's inventory — listing-written at publish, so
+    * no data is read here), `n_overlays`, `is_current`, `committed_at`.
     * O(metadata): a driver listing plus ≤`retain` small-file reads; the
-    * result is a ≤`retain`-row local relation. Empty frame when the table
-    * has never committed. */
+    * result is a ≤`retain`-row local relation. A version retired between
+    * the listing and its record read is not listed. Empty frame when the
+    * table has never committed. */
   def history(spark: SparkSession, baseDir: String): DataFrame = {
     import spark.implicits._
     val cur = currentVersion(spark, baseDir)
@@ -2252,43 +2303,35 @@ object VersionedSnapshot {
               else None
             }
             .sortBy(-_._1)
-            .map { case (v, vdir) =>
-              val marker = {
-                val m = new Path(vdir, MarkerName)
-                if (f.exists(m)) readSmallFile(f, m).trim else ""
+            .flatMap { case (v, vdir) =>
+              // commit time = the record's staging stamp, milliseconds
+              // before the pointer CAS; purge's in-place rewrite keeps it
+              // (lineage contract) — the approximation Delta's timestamp
+              // travel makes with its commit-file mtimes
+              readCommit(f, vdir).map { rec =>
+                val s = summary(rec)
+                (v, s.marker, s.layout, s.numBuckets, s.nFiles, s.bytes,
+                  s.nOverlays, v == c, rec.at)
               }
-              val buckets = parseBuckets(f, vdir)
-              val overlays = parseDeltas(f, vdir).map(_._2.size).getOrElse(0)
-              val layout = (buckets, overlays) match {
-                case (None, _) => "flat"
-                case (Some(_), 0) => "bucketed"
-                case (Some(_), _) => "bucketed+mor"
-              }
-              val (nFiles, bytes) = {
-                val m = new Path(vdir, ManifestName)
-                if (!f.exists(m)) (0L, 0L)
-                else {
-                  val entries = readSmallFile(f, m).split('\n').toSeq.filter(_.nonEmpty)
-                  (entries.size.toLong,
-                    entries.map(l => l.substring(l.lastIndexOf(':') + 1).toLong).sum)
-                }
-              }
-              // commit time ≈ the marker file's mtime: staged milliseconds
-              // before the pointer CAS, never rewritten afterwards (purge's
-              // in-place passes leave markers verbatim — lineage contract).
-              // The same approximation Delta's timestamp travel makes with
-              // its commit-file mtimes.
-              val committedAt = {
-                val m = new Path(vdir, MarkerName)
-                try { if (f.exists(m)) f.getFileStatus(m).getModificationTime else 0L }
-                catch { case scala.util.control.NonFatal(_) => 0L }
-              }
-              (v, marker, layout, buckets.map(_._1), nFiles, bytes, overlays,
-                v == c, committedAt)
             }
       }
     rows.toDF("version", "marker", "layout", "num_buckets",
       "n_files", "bytes", "n_overlays", "is_current", "committed_at")
+  }
+
+  /** The per-version columns [[history]] and [[detail]] share. */
+  private final case class Summary(marker: String, layout: String,
+      numBuckets: Option[Int], nFiles: Long, bytes: Long, nOverlays: Int)
+
+  private def summary(rec: Commit): Summary = {
+    val overlays = rec.deltas.map(_._2.size).getOrElse(0)
+    val layout = (rec.buckets, overlays) match {
+      case (None, _) => "flat"
+      case (Some(_), 0) => "bucketed"
+      case (Some(_), _) => "bucketed+mor"
+    }
+    Summary(rec.marker.trim, layout, rec.buckets.map(_._1),
+      rec.inventory.size.toLong, rec.inventory.map(_._2).sum, overlays)
   }
 
   /** One-row operational summary of the CURRENT version — the `DESCRIBE
@@ -2296,46 +2339,24 @@ object VersionedSnapshot {
     * columns history cannot show: `n_external_refs` (borrowed files of a
     * shallow [[cloneTo]] — 0 means self-contained, anything else means
     * the table depends on its clone source until a compact localizes),
-    * `renamed_columns`/`dropped_columns` (the live `_COLMAP` — a nonzero
-    * dropped count means bytes are awaiting a reifying compact), and the
-    * active `pointer_store` backend. Empty frame when the table has never
-    * committed. */
+    * `renamed_columns`/`dropped_columns` (the live column mapping — a
+    * nonzero dropped count means bytes are awaiting a reifying compact),
+    * and the active `pointer_store` backend. Empty frame when the table
+    * has never committed. */
   def detail(spark: SparkSession, baseDir: String): DataFrame = {
     import spark.implicits._
     val rows: Seq[(Long, String, String, Option[Int], Long, Long, Int, Long,
         Seq[String], Seq[String], String)] =
       currentVersion(spark, baseDir).toSeq.map { c =>
-        val f = fs(spark, baseDir)
-        val vdir = versionPath(new Path(baseDir), c)
-        val marker = {
-          val m = new Path(vdir, MarkerName)
-          if (f.exists(m)) readSmallFile(f, m).trim else ""
-        }
-        val buckets = parseBuckets(f, vdir)
-        val deltas = parseDeltas(f, vdir)
-        val overlays = deltas.map(_._2.size).getOrElse(0)
-        val layout = (buckets, overlays) match {
-          case (None, _) => "flat"
-          case (Some(_), 0) => "bucketed"
-          case (Some(_), _) => "bucketed+mor"
-        }
-        val (nFiles, bytes) = {
-          val m = new Path(vdir, ManifestName)
-          if (!f.exists(m)) (0L, 0L)
-          else {
-            val entries = readSmallFile(f, m).split('\n').toSeq.filter(_.nonEmpty)
-            (entries.size.toLong,
-              entries.map(l => l.substring(l.lastIndexOf(':') + 1).toLong).sum)
-          }
-        }
+        val rec = recordOf(fs(spark, baseDir), versionPath(new Path(baseDir), c))
+        val s = summary(rec)
         val nExternal =
-          (buckets.toSeq.flatMap(_._2.values.flatten) ++
-            deltas.toSeq.flatMap(_._2)).count(isExternalRef).toLong
-        val cm = parseColMap(f, vdir)
-        (c, marker, layout, buckets.map(_._1), nFiles, bytes, overlays,
+          (rec.buckets.toSeq.flatMap(_._2.values.flatten) ++
+            rec.deltas.toSeq.flatMap(_._2)).count(isExternalRef).toLong
+        (c, s.marker, s.layout, s.numBuckets, s.nFiles, s.bytes, s.nOverlays,
           nExternal,
-          cm.renames.toSeq.sortBy(_._1).map { case (p, l) => s"$p->$l" },
-          cm.dropped.toSeq.sorted,
+          rec.colMap.renames.toSeq.sortBy(_._1).map { case (p, l) => s"$p->$l" },
+          rec.colMap.dropped.toSeq.sorted,
           pointerStoreFor(spark).name)
       }
     rows.toDF("version", "marker", "layout", "num_buckets", "n_files",
@@ -2345,7 +2366,7 @@ object VersionedSnapshot {
 
   /** Timestamp time travel (the Delta `TIMESTAMP AS OF` analog): the
     * NEWEST retained version whose commit time is ≤ `tsMillis` — commit
-    * times come from [[history]]'s `committed_at` (marker mtimes), and
+    * times come from [[history]]'s `committed_at` (record stamps), and
     * like Delta the choice takes the max VERSION among qualifying ones,
     * so a clock wobble between two adjacent commits cannot select a
     * version that an already-qualifying later version supersedes. None
@@ -2356,8 +2377,8 @@ object VersionedSnapshot {
     val h = history(spark, baseDir)
       .select("version", "committed_at").collect()
       .map(r => (r.getLong(0), r.getLong(1)))
-    // committed_at == 0 is history()'s unknown-commit-time sentinel (a
-    // marker mtime that could not be read). Such a version must NOT
+    // committed_at == 0 is the unknown-commit-time sentinel (a record
+    // staged without a stamp). Such a version must NOT
     // qualify — 0 would qualify for ANY timestamp, letting a ts that
     // predates all retained history resolve to it instead of returning
     // the contractual None (the resync signal).
@@ -2376,9 +2397,9 @@ object VersionedSnapshot {
     * single-file pointer flip, so readers see exactly the old or exactly
     * the restored state.
     *
-    * Bucketed versions restore in O(metadata): the new version dir
+    * Bucketed versions restore in O(metadata): the new version's record
     * REFERENCES the restored version's bucket (and overlay) data
-    * directories via copied manifests — immutability makes the data
+    * directories via its copied sections — immutability makes the data
     * trivially shareable, and the orphan sweep keeps every directory a
     * retained manifest mentions. Flat versions are self-contained
     * directories, so their restore degrades to a republish of the frame
@@ -2390,26 +2411,16 @@ object VersionedSnapshot {
     val f = fs(spark, baseDir)
     val base = new Path(baseDir)
     val current = currentVersion(spark, baseDir).getOrElse(-1L)
-    val committed = version <= current && f.exists(versionPath(base, version))
-    if (!committed) None
-    else {
-      val src = versionPath(base, version)
-      parseBuckets(f, src) match {
-        case None =>
-          Some(publish(versionFrame(spark, baseDir, version), baseDir,
-            s"$marker:v$version", retain, expected = Some(current)))
-        case Some(_) =>
-          val next = prepareNext(f, base, current)
-          republishMeta(spark, f, base, next, s"$marker:v$version",
-            expected = current) { target =>
-            Seq(BucketsName, DeltasName, ZonesName, BloomsName, ColMapName)
-              .foreach { name =>
-                val p = new Path(src, name)
-                if (f.exists(p)) writeSmallFile(f, new Path(target, name), readSmallFile(f, p))
-              }
-          }
-          applyRetention(f, base, current, next, retain)
-          Some(next)
+    retained(spark, baseDir, version).filter(_ => version <= current).map { src =>
+      if (src.buckets.isEmpty)
+        publish(frameOf(spark, baseDir, version, src), baseDir,
+          s"$marker:v$version", retain, expected = Some(current))
+      else {
+        val next = prepareNext(f, base, current)
+        republishMeta(spark, f, base, next, src.derive(s"$marker:v$version"),
+          expected = current)()
+        applyRetention(f, base, current, next, retain)
+        next
       }
     }
   }
@@ -2418,9 +2429,9 @@ object VersionedSnapshot {
     * analog, in both depths:
     *
     *  - '''Shallow (default)''': the new table's first version is a
-    *    METADATA-ONLY copy. Its `_BUCKETS`/`_DELTAS` manifests reference
-    *    the source version's data files through `ext:`-prefixed absolute
-    *    URIs, and the `_ZONES`/`_BLOOMS` sidecars carry over with
+    *    METADATA-ONLY copy. Its record's bucket and overlay sections
+    *    reference the source version's data files through `ext:`-prefixed
+    *    absolute URIs, and the zone/bloom sections carry over with
     *    re-keyed entries, so reads, key/value pruning, CDF diffs and
     *    file-carrying merges all work at full quality from second zero —
     *    O(metadata) regardless of table size, the instant dev/test/branch
@@ -2480,52 +2491,33 @@ object VersionedSnapshot {
       s"clone target $dstBase already has a committed version — " +
         "clone CREATES tables; merge/restore evolve them")
     val srcVdir = versionPath(src, v)
-    val bucketsOpt = parseBuckets(sf, srcVdir)
-    val deltasOpt = parseDeltas(sf, srcVdir)
+    val srcRec = recordOf(sf, srcVdir)
+    val bucketsOpt = srcRec.buckets
+    val deltasOpt = srcRec.deltas
     val cloneMarker = if (marker.nonEmpty) marker else s"clone:$srcBase@v$v"
     mkdirsFast(df0, dst)
     val next = prepareNext(df0, dst, -1L)
 
-    // old ref → new ref, applied uniformly to manifests and to the
-    // zone/bloom sidecars' per-FILE entry keys (longest-prefix remap for
-    // files living under a remapped dir ref)
-    def remapKey(refMap: Map[String, String])(key: String): String =
-      refMap.getOrElse(key,
-        refMap.collectFirst {
-          case (o, n) if !isFileRef(o) && key.startsWith(o + "/") =>
-            n + key.substring(o.length)
-        }.getOrElse(key))
-
-    def stageManifests(target: Path, refMap: Map[String, String]): Unit = {
-      bucketsOpt.foreach { case (nb, entries) =>
-        val lines = s"buckets=$nb" +: entries.toSeq.sortBy(_._1).map {
-          case (b, rels) => s"$b:${rels.map(refMap).mkString(";")}"
-        }
-        writeSmallFile(df0, new Path(target, BucketsName), lines.mkString("\n"))
-      }
-      deltasOpt.foreach { case (dkeys, overlays) =>
-        writeSmallFile(df0, new Path(target, DeltasName),
-          (s"keys=${dkeys.mkString(",")}" +:
-            overlays.map(refMap)).mkString("\n"))
-      }
-      val km = remapKey(refMap) _
-      parseZones(sf, srcVdir).foreach { z =>
-        val zLines = Seq(s"keys=${z.keys.mkString(",")}",
-          s"tags=${z.tags.mkString(",")}",
-          s"cols=${z.vcols.mkString(",")}",
-          s"ctags=${z.vtags.mkString(",")}") ++
-          z.entries.toSeq.map { case (rel, (n, rs)) => (km(rel), n, rs) }
-            .sortBy(_._1).map { case (r2, n, rs) => zoneLine(r2, n, rs) }
-        writeSmallFile(df0, new Path(target, ZonesName), zLines.mkString("\n"))
-      }
-      parseBlooms(sf, srcVdir).foreach { case (bkeys, bm) =>
-        writeBlooms(df0, target, bkeys,
-          bm.toSeq.map { case (rel, b) => km(rel) -> b })
-      }
-      // the logical column view travels with the clone (no refs inside)
-      val cmP = new Path(srcVdir, ColMapName)
-      if (sf.exists(cmP))
-        writeSmallFile(df0, new Path(target, ColMapName), readSmallFile(sf, cmP))
+    // the source record with every data ref remapped (old ref → new ref),
+    // applied uniformly to the bucket/overlay sections and to the
+    // zone/bloom sections' per-FILE entry keys (longest-prefix remap for
+    // files living under a remapped dir ref); the column mapping travels
+    // as is (no refs inside)
+    def cloneRecord(refMap: Map[String, String]): Commit = {
+      def km(key: String): String =
+        refMap.getOrElse(key,
+          refMap.collectFirst {
+            case (o, n) if !isFileRef(o) && key.startsWith(o + "/") =>
+              n + key.substring(o.length)
+          }.getOrElse(key))
+      srcRec.derive(cloneMarker).copy(
+        buckets = bucketsOpt.map { case (nb, entries) =>
+          nb -> entries.map { case (b, rels) => b -> rels.map(refMap) } },
+        deltas = deltasOpt.map { case (dkeys, overlays) => dkeys -> overlays.map(refMap) },
+        zones = srcRec.zones.map(z =>
+          z.copy(entries = z.entries.map { case (rel, e) => km(rel) -> e })),
+        blooms = srcRec.blooms.map { case (bkeys, bm) =>
+          bkeys -> bm.map { case (rel, b) => km(rel) -> b } })
     }
 
     if (!deep) {
@@ -2540,9 +2532,7 @@ object VersionedSnapshot {
       val allRefs = bucketsOpt.toSeq.flatMap(_._2.values.flatten) ++
         deltasOpt.toSeq.flatMap(_._2)
       val refMap = allRefs.distinct.map(r => r -> extify(r)).toMap
-      republishMeta(spark, df0, dst, next, cloneMarker, expected = -1L) {
-        target => stageManifests(target, refMap)
-      }
+      republishMeta(spark, df0, dst, next, cloneRecord(refMap), expected = -1L)()
       next
     } else {
       // deep: one fresh local generation dir per distinct source ref,
@@ -2614,9 +2604,7 @@ object VersionedSnapshot {
           require(got.contains(want),
             s"deep clone incomplete: $d has $got bytes, want $want")
         }
-        stageManifests(target, refMap)
-        writeSmallFile(df0, new Path(target, MarkerName), cloneMarker)
-        writeManifest(df0, dst, target)
+        stageRecord(df0, dst, target, cloneRecord(refMap))
         commitPointer(spark, df0, dst, next, expected = -1L)
       }
       next
@@ -2626,8 +2614,8 @@ object VersionedSnapshot {
   /** Rename columns as ONE metadata commit — no data rewritten, on a
     * 100 TB table exactly as cheap as on an empty one (the Delta
     * column-mapping `RENAME COLUMN`). A column's PHYSICAL parquet name is
-    * frozen at birth; this commit only changes the per-version `_COLMAP`
-    * that presents the logical view, so:
+    * frozen at birth; this commit only changes the per-version column
+    * mapping that presents the logical view, so:
     *
     *  - every retained version keeps ITS OWN names under time travel
     *    (reading v_old shows the old names);
@@ -2645,10 +2633,10 @@ object VersionedSnapshot {
   def renameColumns(spark: SparkSession, baseDir: String,
       renames: Map[String, String], marker: String = "rename-columns"): Long = {
     require(renames.nonEmpty, "renameColumns needs at least one mapping")
-    val basis = currentVersion(spark, baseDir).getOrElse(
-      sys.error(s"$baseDir has no committed version"))
-    val cm0 = colMapOf(spark, baseDir, basis)
-    val logical = versionFrame(spark, baseDir, basis).columns.toSeq
+    val (basis, rec) = colMapBasis(spark, baseDir)
+    val cm0 = rec.colMap
+    val raw = rawFrame(spark, new Path(baseDir), versionPath(new Path(baseDir), basis), rec)
+    val logical = presentLogical(raw, cm0).columns.toSeq
     renames.keys.foreach(k => require(logical.contains(k),
       s"unknown column $k (have ${logical.mkString(", ")})"))
     renames.values.foreach { n =>
@@ -2659,13 +2647,12 @@ object VersionedSnapshot {
     val newLogical = logical.map(c => renames.getOrElse(c, c))
     require(newLogical.distinct.size == newLogical.size,
       s"renames collide: resulting columns ${newLogical.mkString(", ")}")
-    val live = versionFrameRaw(spark, baseDir, basis).columns.toSeq
-      .filterNot(cm0.dropped.contains)
+    val live = raw.columns.toSeq.filterNot(cm0.dropped.contains)
     val newRenames = live.flatMap { ph =>
       val l1 = renames.getOrElse(cm0.toLogical(ph), cm0.toLogical(ph))
       if (l1 != ph) Some(ph -> l1) else None
     }.toMap
-    commitColMap(spark, baseDir, basis,
+    commitColMap(spark, baseDir, basis, rec,
       ColMap(newRenames, cm0.dropped, cm0.origin), marker)
   }
 
@@ -2682,38 +2669,39 @@ object VersionedSnapshot {
   def dropColumns(spark: SparkSession, baseDir: String, cols: Seq[String],
       marker: String = "drop-columns"): Long = {
     require(cols.nonEmpty, "dropColumns needs at least one column")
-    val basis = currentVersion(spark, baseDir).getOrElse(
-      sys.error(s"$baseDir has no committed version"))
-    val cm0 = colMapOf(spark, baseDir, basis)
-    val logical = versionFrame(spark, baseDir, basis).columns.toSeq
+    val (basis, rec) = colMapBasis(spark, baseDir)
+    val cm0 = rec.colMap
+    val logical = frameOf(spark, baseDir, basis, rec).columns.toSeq
     cols.foreach(c => require(logical.contains(c),
       s"unknown column $c (have ${logical.mkString(", ")})"))
     require((logical.toSet -- cols).nonEmpty, "cannot drop every column")
     val physDropped = cols.map(cm0.toPhysical).toSet
-    commitColMap(spark, baseDir, basis,
+    commitColMap(spark, baseDir, basis, rec,
       ColMap(cm0.renames.filterNot { case (ph, _) => physDropped.contains(ph) },
         cm0.dropped ++ physDropped, cm0.origin), marker)
   }
 
-  /** Shared metadata commit of a new `_COLMAP`: every data manifest and
-    * pruning sidecar of the basis carries verbatim (nothing about the
-    * FILES changed), CAS-pinned to the basis. */
+  /** The current version and its record — the one record read of a
+    * column-mapping commit. */
+  private def colMapBasis(spark: SparkSession, baseDir: String): (Long, Commit) = {
+    val basis = currentVersion(spark, baseDir).getOrElse(
+      sys.error(s"$baseDir has no committed version"))
+    (basis, recordOf(fs(spark, baseDir), versionPath(new Path(baseDir), basis)))
+  }
+
+  /** Shared metadata commit of a new column mapping: every data and
+    * pruning section of the basis record `src` carries verbatim (nothing
+    * about the FILES changed), CAS-pinned to the basis. */
   private def commitColMap(spark: SparkSession, baseDir: String, basis: Long,
-      newCm: ColMap, marker: String): Long = {
+      src: Commit, newCm: ColMap, marker: String): Long = {
     val f = fs(spark, baseDir)
     val base = new Path(baseDir)
-    val src = versionPath(base, basis)
-    require(parseBuckets(f, src).isDefined,
+    require(src.buckets.isDefined,
       "column mapping requires the bucketed layout — one mergeInto migrates " +
         "a flat table")
     val next = prepareNext(f, base, basis)
-    republishMeta(spark, f, base, next, marker, expected = basis) { target =>
-      Seq(BucketsName, DeltasName, ZonesName, BloomsName).foreach { name =>
-        val p = new Path(src, name)
-        if (f.exists(p)) writeSmallFile(f, new Path(target, name), readSmallFile(f, p))
-      }
-      writeColMap(f, target, newCm)
-    }
+    republishMeta(spark, f, base, next, src.derive(marker).copy(colMap = newCm),
+      expected = basis)()
     next
   }
 
@@ -2732,24 +2720,22 @@ object VersionedSnapshot {
     *    each probe is one pushed-down point lookup, and a shared data dir
     *    referenced by several versions is probed and rewritten ONCE (the
     *    memo) — cost scales with key spread, never with table × history.
-    *  - '''Reader atomicity per metadata file.''' Each updated manifest
-    *    (`_BUCKETS`/`_DELTAS`/`_ZONES`/`_MANIFEST`) commits via the same
-    *    tmp + rename(OVERWRITE) as the `_CURRENT` pointer. Old data dirs
-    *    are NOT deleted here — a reader that resolved the old manifest
-    *    keeps a complete input for its whole query; the next publish's
-    *    orphan sweep reclaims them. Any interleaving of old/new manifest
-    *    reads is correct: stale `_ZONES`/`_BLOOMS` entries only
-    *    over-include (both consult paths treat missing entries as
-    *    "cannot prune"), and fresh stats are regenerated for rewritten
-    *    dirs so pruning quality survives the purge.
+    *  - '''Reader atomicity per version.''' Each updated version's
+    *    whole record (refs, zones, blooms and inventory together) swaps
+    *    in ONE tmp + rename(OVERWRITE), the `_CURRENT` pointer's
+    *    primitive. Old data dirs are NOT deleted here — a reader that
+    *    resolved the old record keeps a complete input for its whole
+    *    query; the next publish's orphan sweep reclaims them. Fresh stats
+    *    are regenerated for rewritten dirs so pruning quality survives
+    *    the purge.
     *  - '''Fail fast, mutate late.''' Flat (pre-bucketed) retained
     *    versions are self-contained and cannot be swapped atomically, so
     *    a purge key found in one raises BEFORE anything is rewritten —
     *    one [[mergeInto]] migrates the layout.
     *
     * Multi-file clustered bucket dirs collapse to one file on rewrite
-    * (zones regenerated accordingly); `_LAST_BATCH` markers are left
-    * untouched so streaming replay semantics survive. Returns the number
+    * (zones regenerated accordingly); markers and commit times are left
+    * untouched so streaming replay and time travel survive. Returns the number
     * of data/overlay dirs rewritten. A crash mid-purge leaves some
     * versions updated and others not — rerunning the same purge completes
     * the erasure (the batched probe finds only the remaining matches, and
@@ -2905,20 +2891,19 @@ object VersionedSnapshot {
       heldLockToken: Option[String] = None): Unit = {
     val f = fs(spark, baseDir)
     val base = new Path(baseDir)
-    val src = versionPath(base, basis)
-    // retraction sidecar content: the purged key tuples, typed with the
+    val src = recordOf(f, versionPath(base, basis))
+    // retraction dir content: the purged key tuples, typed with the
     // table's key schema (see [[purgedKeys]]). Written into the bump
     // version so the erasure has a CDF-consumable record — the in-place
     // pass removes the rows from BOTH sides of any version diff, so
     // without this a downstream consumer that already ingested the
     // subject would hold it forever.
     def writePurged(target: Path): Unit = {
-      // retraction sidecars are at-rest artifacts: PHYSICAL key names,
+      // retraction dirs are at-rest artifacts: PHYSICAL key names,
       // dtypes from the logical view (renames never change a type)
-      val cmB = colMapOf(spark, baseDir, basis)
-      val curSchema = versionFrame(spark, baseDir, basis).schema
+      val curSchema = frameOf(spark, baseDir, basis, src).schema
       val keySchema = org.apache.spark.sql.types.StructType(
-        keys.map(k => curSchema(k).copy(name = cmB.toPhysical(k))))
+        keys.map(k => curSchema(k).copy(name = src.colMap.toPhysical(k))))
       import scala.jdk.CollectionConverters._
       withMicrosTimestamps(spark) {
         spark.createDataFrame(
@@ -2933,62 +2918,45 @@ object VersionedSnapshot {
     // and a re-applied batch can carry the purged subject, silently
     // undoing the erasure this commit exists to linearize. When the
     // basis marker parses as lineage it is carried VERBATIM (replay
-    // skip intact); purge identity then lives in the _PURGED sidecar,
-    // which is what purgedKeys/changesWithPurges key on anyway.
+    // skip intact); purge identity then lives in the record's retraction
+    // dir, which is what purgedKeys/changesWithPurges key on anyway.
     val outMarker = {
-      def isLineage(s: String): Boolean = {
-        val cut = s.lastIndexOf(':')
-        cut >= 0 && s.substring(cut + 1).toLongOption.isDefined
-      }
-      val m = new Path(src, MarkerName)
-      val basisMarker = if (f.exists(m)) Some(readSmallFile(f, m).trim) else None
-      basisMarker.filter(isLineage).getOrElse(s"$marker:v$basis")
+      val m = src.marker.trim
+      val cut = m.lastIndexOf(':')
+      if (cut >= 0 && m.substring(cut + 1).toLongOption.isDefined) m
+      else s"$marker:v$basis"
     }
-    if (parseBuckets(f, src).isEmpty) {
-      // flat current (possible when the matches lived only in older
-      // bucketed versions): a flat dir is self-contained, so the bump is
-      // a full republish — rare shape, priced accordingly. The
-      // retraction sidecar is staged BEFORE the pointer flip, same as
-      // the bucketed branch: a purge commit must never exist without
-      // its retraction record.
-      val next = prepareNext(f, base, basis)
-      republishMeta(spark, f, base, next, outMarker, expected = basis,
-          heldLockToken = heldLockToken) { target =>
-        withMicrosTimestamps(spark) {
-          versionFrame(spark, baseDir, basis)
-            .write.mode("overwrite").parquet(target.toString)
-        }
-        writePurged(target)
+    // flat current (possible when the matches lived only in older
+    // bucketed versions): a flat dir is self-contained, so the bump is a
+    // full republish under the logical names — rare shape, priced
+    // accordingly. Either way the retraction dir is staged BEFORE the
+    // pointer flip: a purge commit never exists without its record of
+    // what it erased.
+    val flat = src.buckets.isEmpty
+    val next = prepareNext(f, base, basis)
+    republishMeta(spark, f, base, next,
+        (if (flat) Commit(outMarker) else src.derive(outMarker)).copy(purged = true),
+        expected = basis, heldLockToken = heldLockToken) { target =>
+      if (flat) withMicrosTimestamps(spark) {
+        frameOf(spark, baseDir, basis, src).write.mode("overwrite").parquet(target.toString)
       }
-    } else {
-      val next = prepareNext(f, base, basis)
-      republishMeta(spark, f, base, next, outMarker, expected = basis,
-          heldLockToken = heldLockToken) { target =>
-        Seq(BucketsName, DeltasName, ZonesName, BloomsName, ColMapName)
-          .foreach { name =>
-            val p = new Path(src, name)
-            if (f.exists(p)) writeSmallFile(f, new Path(target, name), readSmallFile(f, p))
-          }
-        writePurged(target)
-      }
+      writePurged(target)
     }
   }
 
-  /** Stage-and-commit shell shared by [[restore]] and [[purgeCommit]]:
-    * run `stage` against the next version's dir (sidecar copies, data
-    * writes, retraction sidecars — everything that must exist before the
-    * flip), then stamp `marker`, write the integrity manifest, and
-    * CAS-commit against `expected`. Keeping the shell in ONE place means
-    * a future sidecar is threaded through one copy path, not several. */
+  /** Stage-and-commit shell of the metadata commits ([[restore]],
+    * [[commitColMap]], [[purgeCommit]], shallow [[cloneTo]]): run `stage`
+    * against the next version's dir (data writes, the retraction dir —
+    * everything besides the record that must exist before the flip),
+    * stage `rec`, and CAS-commit against `expected`. */
   private def republishMeta(spark: SparkSession, f: FileSystem, base: Path,
-      next: Long, marker: String, expected: Long,
-      heldLockToken: Option[String] = None)(stage: Path => Unit): Unit =
+      next: Long, rec: Commit, expected: Long,
+      heldLockToken: Option[String] = None)(stage: Path => Unit = _ => ()): Unit =
     guardStaged(f, base, next) {
       val target = versionPath(base, next)
       mkdirsFast(f, target)
       stage(target)
-      writeSmallFile(f, new Path(target, MarkerName), marker)
-      writeManifest(f, base, target)
+      stageRecord(f, base, target, rec)
       commitPointer(spark, f, base, next, expected = expected,
         heldLockToken = heldLockToken)
     }
@@ -3006,14 +2974,11 @@ object VersionedSnapshot {
     * must propagate even for subjects this table no longer (or never)
     * held, e.g. a subject an ordinary upstream delete removed before
     * the GDPR request arrived but which a CDF consumer ingested. */
-  def purgedKeys(spark: SparkSession, baseDir: String, version: Long): Option[DataFrame] = {
-    val f = fs(spark, baseDir)
-    val p = new Path(versionPath(new Path(baseDir), version), PurgedName)
-    if (currentVersion(spark, baseDir).exists(version <= _) && f.exists(p))
-      Some(presentLogical(readUniform(spark, Seq(p.toString)),
-        colMapOf(spark, baseDir, version)))
-    else None
-  }
+  def purgedKeys(spark: SparkSession, baseDir: String, version: Long): Option[DataFrame] =
+    retained(spark, baseDir, version).filter(_.purged).map { rec =>
+      val p = new Path(versionPath(new Path(baseDir), version), PurgedName)
+      presentLogical(readUniform(spark, Seq(p.toString)), rec.colMap)
+    }
 
   /** [[changes]] plus purge retractions: the row diff of the two
     * versions, UNIONed with one `op = "purge"` row (key columns set,
@@ -3030,10 +2995,8 @@ object VersionedSnapshot {
     * normal insert/update row and survives. */
   def changesWithPurges(spark: SparkSession, baseDir: String, fromVersion: Long,
       toVersion: Long, keys: Seq[String]): Option[DataFrame] =
-    try changes(spark, baseDir, fromVersion, toVersion, keys).map { diff =>
-      purgeRetractionRows(spark, baseDir, fromVersion, toVersion, keys,
-        diff.schema).map(diff.unionByName).getOrElse(diff)
-    } catch { case _: CdfHorizonLost => None } // retraction info retired
+    withRetractions(spark, baseDir, fromVersion, toVersion, keys)(
+      changes(spark, baseDir, fromVersion, toVersion, keys))
 
   /** [[changesWithPurges]] restricted by value-range predicates on the
     * DIFF rows (the zone-pruned [[changes]] overload) — purge
@@ -3045,10 +3008,8 @@ object VersionedSnapshot {
   def changesWithPurges(spark: SparkSession, baseDir: String, fromVersion: Long,
       toVersion: Long, keys: Seq[String],
       ranges: Map[String, (Option[Any], Option[Any])]): Option[DataFrame] =
-    try changes(spark, baseDir, fromVersion, toVersion, keys, ranges).map { diff =>
-      purgeRetractionRows(spark, baseDir, fromVersion, toVersion, keys,
-        diff.schema).map(diff.unionByName).getOrElse(diff)
-    } catch { case _: CdfHorizonLost => None } // retraction info retired
+    withRetractions(spark, baseDir, fromVersion, toVersion, keys)(
+      changes(spark, baseDir, fromVersion, toVersion, keys, ranges))
 
   /** [[changesPrePost]] plus purge retractions — the purge-aware face of
     * the retraction-IVM feed. Same `op = "purge"` rows as
@@ -3059,10 +3020,19 @@ object VersionedSnapshot {
     * after a VACUUM passes the retention horizon. */
   def changesPrePostWithPurges(spark: SparkSession, baseDir: String,
       fromVersion: Long, toVersion: Long, keys: Seq[String]): Option[DataFrame] =
-    try changesPrePost(spark, baseDir, fromVersion, toVersion, keys).map { diff =>
+    withRetractions(spark, baseDir, fromVersion, toVersion, keys)(
+      changesPrePost(spark, baseDir, fromVersion, toVersion, keys))
+
+  /** `feed` UNIONed with the purge retraction rows of `(fromVersion,
+    * toVersion]` — the shared body of the `*WithPurges` feeds. None when
+    * the range's retraction info was retired. */
+  private def withRetractions(spark: SparkSession, baseDir: String,
+      fromVersion: Long, toVersion: Long, keys: Seq[String])
+      (feed: => Option[DataFrame]): Option[DataFrame] =
+    try feed.map { diff =>
       purgeRetractionRows(spark, baseDir, fromVersion, toVersion, keys,
         diff.schema).map(diff.unionByName).getOrElse(diff)
-    } catch { case _: CdfHorizonLost => None } // retraction info retired
+    } catch { case _: CdfHorizonLost => None }
 
   // ------------------------------------------------- streaming CDF source
 
@@ -3235,30 +3205,17 @@ object VersionedSnapshot {
         srcMapPath.toString)
     def recordSpoken(cm: ColMap): Unit =
       atomicOverwrite(spark, dstF, srcMapPath, serializeColMap(cm))
-    // r17: a RETIRED source version dir parses as the identity colmap
-    // (missing `_COLMAP` legitimately means "never renamed"), which is
-    // indistinguishable from the real map having been swept — recording
-    // that identity as the spoken view LOSES the rename forever (the
-    // replica-storm fuzz failure: later propagates diff against a
-    // poisoned spoken map and silently skip the rename). Read the map,
-    // then re-check the version dir still exists (retirement is atomic
-    // as of r17's tombstone rename): a vanished dir fails THIS sync
-    // attempt retryably instead of poisoning the recorded view.
-    def liveColMapOf(v: Long): ColMap = {
-      val cm = colMapOf(spark, srcBase, v)
-      if (!fs(spark, srcBase).exists(versionPath(new Path(srcBase), v)))
-        throw new IllegalStateException(
-          s"source version v$v of $srcBase retired mid-sync — colmap " +
-            "unreadable this attempt; re-run the sync")
-      cm
-    }
+    // a RETIRED source version has no record, so its colmap read fails
+    // THIS sync attempt retryably — it can never read as identity and
+    // poison the recorded spoken view, which would lose a rename forever
+    // (the r17 replica-storm fuzz failure)
     // apply the source's rename/drop drift (spoken view → view at `toV`)
     // to the replica as the same metadata-only commits, stamped with the
     // batch START so a crash mid-propagation replays idempotently (the
     // replica-has-from / lacks-to guards absorb the replay)
     def propagate(fromStamp: Long, toV: Long): Unit = {
       val spoken = spokenMap()
-      val cmTo = liveColMapOf(toV)
+      val cmTo = colMapOf(spark, srcBase, toV)
       if (spoken != cmTo) {
         if (currentVersion(spark, dstBase).nonEmpty) {
           // spoken-physical → to-logical, joined on birth identity (exact
@@ -3341,7 +3298,7 @@ object VersionedSnapshot {
               UpdateMatched, insertUnmatched = true,
               marker = s"replicate-bootstrap-v$v", retain = retain,
               numBuckets = numBuckets)
-            recordSpoken(liveColMapOf(v))
+            recordSpoken(colMapOf(spark, srcBase, v))
             v
           }
       }
@@ -3422,10 +3379,10 @@ object VersionedSnapshot {
     val f = fs(spark, baseDir)
     specDelay(spark, TestDelayBeforeRetractionScanConf)
     val cur = currentVersion(spark, baseDir).getOrElse(-1L)
-    // each sidecar is typed with the key schema AT ITS PURGE TIME, which
+    // each retraction dir is typed with the key schema AT ITS PURGE TIME, which
     // can differ from the feed's: a key column whose type later widened
     // (schema evolution), or a purge issued on an entirely different key
-    // set. Project + cast every sidecar to the REQUESTED keys with the
+    // set. Project + cast every one to the REQUESTED keys with the
     // feed's dtypes before unioning — a dtype drift is absorbed by the
     // cast; a purge whose subjects cannot be expressed in the feed's
     // keys fails with a targeted message naming the version (silently
@@ -3433,17 +3390,20 @@ object VersionedSnapshot {
     // blindly unioning it would fail the whole read with an unkeyed
     // schema error)
     val keyCols = keys.map(k => k -> schema(k).dataType)
-    // sidecars store the purge version's PHYSICAL key names; the feed
-    // speaks the TO version's logical view — alias each sidecar into it
+    // retraction dirs store the purge version's PHYSICAL key names; the
+    // feed speaks the TO version's logical view — alias each into it
     // (birth-joined across any normalization) before the name/dtype
     // projection below
     val viewVersion = math.min(toVersion, cur)
     val purged = ((fromVersion + 1) to math.min(toVersion, cur))
       .flatMap { v =>
-        val p = new Path(versionPath(new Path(baseDir), v), PurgedName)
-        if (!f.exists(p)) None
+        val vdir = versionPath(new Path(baseDir), v)
+        // no record: a version-number gap (aborted claim) or retired
+        // mid-scan — the floor check below tells the two apart
+        if (!readCommit(f, vdir).exists(_.purged)) None
         else {
-          val sidecar = presentLogical(readUniform(spark, Seq(p.toString)),
+          val sidecar = presentLogical(
+            readUniform(spark, Seq(new Path(vdir, PurgedName).toString)),
             crossColMap(spark, baseDir, v, viewVersion))
           val missing = keys.filterNot(sidecar.columns.contains)
           if (missing.nonEmpty)
@@ -3459,7 +3419,7 @@ object VersionedSnapshot {
           // a silent null-ing cast would corrupt retraction subjects in a
           // compliance feed into null rows. try_cast-probe only when the
           // dtypes actually differ (zero extra work on the common path);
-          // sidecars are point-sized, so the probe is one tiny job.
+          // retraction dirs are point-sized, so the probe is one tiny job.
           val drifted = keys.filter { k =>
             val dt = schema(k).dataType
             sidecar.schema(k).dataType != dt &&
@@ -3478,15 +3438,15 @@ object VersionedSnapshot {
             keyCols.map { case (k, dt) => col(k).cast(dt).as(k) }: _*))
         }
       }
-    // erasure-completeness guard (r17, fuzz-caught): `!exists(_PURGED)`
-    // above means BOTH "v was not a purge commit" (fine) and "v's whole
-    // dir was RETIRED mid-scan" — and a retired purge commit's erasure
+    // erasure-completeness guard (r17, fuzz-caught): a skipped v above
+    // means EITHER "v was not a purge commit" (fine) or "v's whole dir
+    // was RETIRED mid-scan" — and a retired purge commit's erasure
     // is invisible to the endpoint diff too (purge rewrites both
     // endpoints in place), so silently skipping it DROPS the retraction
     // from a compliance feed (the replica-storm fuzz kept a purged
     // subject forever). Retention retires a version PREFIX, so the
     // range's purge info is complete iff fromVersion+1 is still at or
-    // above the retention floor, re-checked AFTER the sidecar scan
+    // above the retention floor, re-checked AFTER the record scan
     // (TOC-TOU: a sweep during the scan moves the floor and is caught
     // here; a sweep after it cannot remove information already read).
     // Aborted-claim version-number gaps never existed and do not move
@@ -3551,7 +3511,7 @@ object VersionedSnapshot {
     // COMMITTED versions only (<= the pointer at listing): a concurrent
     // writer's staged dir above the pointer is mid-flight — half-written
     // parquet throws at the probe, a staged flat dir trips the fail-fast
-    // for a version that may never commit, and a staged _BUCKETS with a
+    // for a version that may never commit, and a staged record with a
     // new bucket count isn't in hitBuckets. Anything that commits later
     // is the linearization loop's job, not this pass's.
     val vdirs = f.listStatus(base).toSeq
@@ -3571,12 +3531,22 @@ object VersionedSnapshot {
     // listed-then-vanished is absorbable collateral everywhere below,
     // never a fault.
     def retired(vdir: Path): Boolean = !f.exists(vdir)
+    // each listed version's record, read ONCE for the pass: only purges
+    // rewrite committed records, and purges exclude each other. A listed
+    // dir with no readable record holds no committed version to purge:
+    // it was retired since the listing, or it is a conflict loser's
+    // staging (a writer whose claimed number the pointer jumped past,
+    // still writing or mid-abort)
+    val recs: Seq[(Path, Commit)] = vdirs.flatMap { vdir =>
+      try readCommit(f, vdir).map(vdir -> _)
+      catch { case scala.util.control.NonFatal(_) if retired(vdir) => None }
+    }
 
     // fail fast: a flat version holding a purged key cannot be rewritten
     // atomically — raise before ANY mutation so the purge is all-or-nothing
-    vdirs.foreach { vdir =>
+    recs.foreach { case (vdir, rec) =>
       try {
-        if (parseBuckets(f, vdir).isEmpty && !retired(vdir)) {
+        if (rec.buckets.isEmpty) {
           val pkV = physKeysAt(vdir.getName.drop(1).toLong)
           val d = readUniform(spark, Seq(vdir.toString))
           if (pkV.forall(d.columns.contains) &&
@@ -3599,10 +3569,7 @@ object VersionedSnapshot {
     import scala.jdk.CollectionConverters._
     val keysDf = spark.createDataFrame(
       keyRows.map(r => org.apache.spark.sql.Row.fromSeq(r)).asJava, keySchema)
-    val nbs = vdirs.flatMap(vd =>
-      (try parseBuckets(f, vd)
-       catch { case scala.util.control.NonFatal(_) if retired(vd) => None })
-        .map(_._1)).toSet
+    val nbs = recs.flatMap(_._2.buckets.map(_._1)).toSet
     val hitBuckets: Map[Int, Set[Int]] = nbs.map { nb =>
       nb -> keysDf.select(bucketOf(pKeys, nb).as("__b"))
         .distinct().collect().map(_.getInt(0)).toSet
@@ -3620,11 +3587,6 @@ object VersionedSnapshot {
       n
     }
 
-    // purge rewrites retained versions' sidecars IN PLACE — concurrent
-    // readers need the same torn-read-free overwrite the pointer flip uses
-    def atomicSmallFile(p: Path, content: String): Unit =
-      atomicOverwrite(spark, f, p, content)
-
     // candidate dirs across ALL versions: hash-hit buckets + every
     // overlay. Probed in ONE batched job (input_file_name → dir) rather
     // than one job per dir — with V versions × B hit buckets the per-dir
@@ -3635,17 +3597,16 @@ object VersionedSnapshot {
     // (the normalize is a full rewrite), and metadata-only commits
     // (rename/drop) share refs without changing physicals — so a ref's
     // key naming is well-defined even when versions disagree logically
-    val relKeys: Map[String, Seq[String]] = vdirs.flatMap { vdir =>
+    val relKeys: Map[String, Seq[String]] = recs.flatMap { case (vdir, rec) =>
       try {
         val pkV = physKeysAt(vdir.getName.drop(1).toLong)
-        val bucketRels = parseBuckets(f, vdir) match {
+        val bucketRels = rec.buckets match {
           case Some((nb, entries)) =>
             val hits = hitBuckets(nb)
             entries.toSeq.collect { case (b, rels) if hits(b) => rels }.flatten
           case None => Nil
         }
-        (bucketRels ++ parseDeltas(f, vdir).map(_._2).getOrElse(Nil))
-          .map(_ -> pkV)
+        (bucketRels ++ rec.deltas.map(_._2).getOrElse(Nil)).map(_ -> pkV)
       } catch { case scala.util.control.NonFatal(_) if retired(vdir) => Nil }
     }.groupBy(_._1).map { case (rel, ps) => rel -> ps.head._2 }
       // a data ref held ONLY by retired versions is swept by their
@@ -3744,13 +3705,13 @@ object VersionedSnapshot {
       }
     def rewritten(rel: String): Option[String] = memo.getOrElseUpdate(rel,
       if (!matched(rel)) None else rewriteRef(rel, allocName()))
-    // rewrite every matched ref CONCURRENTLY, before any sidecar update
+    // rewrite every matched ref CONCURRENTLY, before any record update
     // (guide §2.6 — overlap independent jobs): the per-ref filtered
     // writes go to disjoint fresh dirs and share no state beyond the
     // pre-allocated names, so running them sequentially paid one
     // job-scheduling constant per ref where a small in-flight window
     // keeps the executor busy. Names are allocated on THIS thread; the
-    // memo is fully populated before updateSidecars reads it, so the
+    // memo is fully populated before updateRecord reads it, so the
     // sequential fallback path above only ever sees unmatched refs.
     locally {
       val toRewrite = candidateRels.filter(matched).sorted
@@ -3775,137 +3736,62 @@ object VersionedSnapshot {
       }
     }
 
-    def updateSidecars(vdir: Path): Unit = {
-      val bucketUpdates: Map[String, String] = parseBuckets(f, vdir) match {
+    def updateRecord(vdir: Path, rec: Commit): Unit = {
+      val bucketUpdates: Map[String, String] = rec.buckets match {
         case Some((nb, entries)) =>
           val hits = hitBuckets(nb)
-          val updates = entries.toSeq.collect {
+          entries.toSeq.collect {
             case (b, rels) if hits(b) => rels.flatMap(rel => rewritten(rel).map(rel -> _))
           }.flatten.toMap
-          if (updates.nonEmpty) {
-            val newEntries = entries.map { case (b, rels) =>
-              b -> rels.map(rel => updates.getOrElse(rel, rel))
-            }
-            atomicSmallFile(new Path(vdir, BucketsName),
-              (s"buckets=$nb" +: newEntries.toSeq.sortBy(_._1)
-                .map { case (b, rels) => s"$b:${rels.mkString(";")}" }).mkString("\n"))
-          }
-          updates
         case None => Map.empty
       }
-      val overlayUpdates: Map[String, String] = parseDeltas(f, vdir) match {
-        case Some((dkeys, overlays)) =>
-          val updates = overlays.flatMap(r => rewritten(r).map(r -> _)).toMap
-          if (updates.nonEmpty)
-            atomicSmallFile(new Path(vdir, DeltasName),
-              (s"keys=${dkeys.mkString(",")}" +:
-                overlays.map(r => updates.getOrElse(r, r))).mkString("\n"))
-          updates
-        case None => Map.empty
-      }
-      if (bucketUpdates.nonEmpty) {
-        val newRels = bucketUpdates.values.toSeq.distinct
-        val newPaths = newRels.map(r => new Path(base, r).toString)
-        // zonemap: drop the rewritten dirs' file entries, regenerate fresh
-        // stats for the replacement dirs in ONE batched job (same header,
-        // padded None for any stats column a pre-evolution dir lacks)
-        parseZones(f, vdir).foreach { z =>
-          val statCols = z.keys ++ z.vcols
-          val keep = z.entries.toSeq.filterNot { case (frel, _) =>
-            bucketUpdates.keySet.exists(r =>
-              if (isFileRef(r)) frel == r else frel.startsWith(r + "/"))
-          }.map { case (rel2, (n, rs)) => (rel2, n, rs) }
-          val fresh: Seq[(String, Long, Seq[Option[(String, String)]])] =
-            footerZoneStats(spark, newRels.map(r => new Path(base, r)),
-                statCols, readUniform(spark, newPaths).schema,
-                padMissingColumns = true)
-              .getOrElse {
-            import org.apache.spark.sql.functions.{count => fCount, input_file_name, max => fMax, min => fMin}
-            val d = readUniform(spark, newPaths)
-            val sch = d.schema
-            val present = statCols.filter(sch.fieldNames.contains)
-            val tags = present.map(k => zoneTag(sch(k).dataType))
-            val aggs = fCount(lit(1L)).as("__n") +:
-              present.zip(tags).flatMap { case (k, tag) =>
-                if (tag == "x") Nil
-                else {
-                  val e = zoneNormExpr(sch(k).dataType, k)
-                  Seq(fMin(e).as(s"__min_$k"), fMax(e).as(s"__max_$k"),
-                    fCount(e).as(s"__nn_$k"))
-                }
-              }
-            d.groupBy(input_file_name().as("__f")).agg(aggs.head, aggs.tail: _*)
-              .collect().toSeq.map { r =>
-                val uri = r.getAs[String]("__f")
-                val rel2 = uri.substring(uri.lastIndexOf(s"/$DataDirName/") + 1)
-                val n = r.getAs[Long]("__n")
-                val byCol = present.zip(tags).map { case (k, tag) =>
-                  k -> (if (tag == "x") None
-                        else if (r.getAs[Long](s"__nn_$k") < n) None
-                        else for {
-                          lo <- renderZoneVal(tag, r.getAs[Any](s"__min_$k"))
-                          hi <- renderZoneVal(tag, r.getAs[Any](s"__max_$k"))
-                        } yield (lo, hi))
-                }.toMap
-                (rel2, n, statCols.map(c => byCol.getOrElse(c, None)))
-              }
-          }
-          val zLines = Seq(s"keys=${z.keys.mkString(",")}",
-            s"tags=${z.tags.mkString(",")}",
-            s"cols=${z.vcols.mkString(",")}",
-            s"ctags=${z.vtags.mkString(",")}") ++
-            (keep ++ fresh).sortBy(_._1).map { case (r2, n, rs) =>
-              zoneLine(r2, n, rs)
-            }
-          atomicSmallFile(new Path(vdir, ZonesName), zLines.mkString("\n"))
-        }
-        // bloom sidecar: same drop-and-regenerate, also one batched job (a
-        // dropped entry would be safe too — missing entries never prune)
-        parseBlooms(f, vdir).foreach { case (bkeys, bs) =>
-          val keep = bs.toSeq.filterNot { case (frel, _) =>
+      val overlayUpdates: Map[String, String] = rec.deltas.toSeq.flatMap(_._2)
+        .flatMap(r => rewritten(r).map(r -> _)).toMap
+      if (bucketUpdates.nonEmpty || overlayUpdates.nonEmpty) {
+        // zonemap and blooms: drop the rewritten refs' file entries and
+        // regenerate them for the replacement dirs, one batched job each
+        // (zones padded None for any stats column a pre-evolution dir
+        // lacks)
+        val newDirs = bucketUpdates.values.toSeq.distinct.map(new Path(base, _))
+        def kept[V](entries: Map[String, V]): Map[String, V] =
+          entries.filterNot { case (frel, _) =>
             bucketUpdates.keySet.exists(r =>
               if (isFileRef(r)) frel == r else frel.startsWith(r + "/"))
           }
-          val fresh: Seq[(String, Array[Byte])] = {
-            import org.apache.spark.sql.functions.input_file_name
-            val bloomAgg = org.apache.spark.sql.functions.udaf(new KeyBloomAgg,
-              org.apache.spark.sql.Encoders.tuple(
-                org.apache.spark.sql.Encoders.scalaLong,
-                org.apache.spark.sql.Encoders.scalaLong))
-            val (h1, h2) = bloomHashCols(bkeys)
-            readUniform(spark, newPaths)
-              .groupBy(input_file_name().as("__f"))
-              .agg(bloomAgg(h1, h2).as("__bloom"))
-              .collect().toSeq.map { r =>
-                val uri = r.getAs[String]("__f")
-                (uri.substring(uri.lastIndexOf(s"/$DataDirName/") + 1),
-                  r.getAs[Array[Byte]]("__bloom"))
-              }
-          }
-          val lines = Seq(s"keys=${bkeys.mkString(",")}",
-            s"m=$BloomBits", s"k=$BloomK") ++
-            (keep ++ fresh).sortBy(_._1).map { case (rel2, b) =>
-              s"$rel2\t${java.util.Base64.getEncoder.encodeToString(b)}"
-            }
-          atomicSmallFile(new Path(vdir, BloomsName), lines.mkString("\n"))
-        }
+        val (zones, blooms) =
+          if (newDirs.isEmpty) (rec.zones, rec.blooms)
+          else (rec.zones.map { z =>
+              val schema = readUniform(spark, newDirs.map(_.toString)).schema
+              z.copy(entries = kept(z.entries) ++
+                freshZoneStats(spark, newDirs, z.keys ++ z.vcols, schema,
+                  padMissingColumns = true).map { case (r, n, rs) => r -> (n, rs) })
+            },
+            rec.blooms.map { case (bkeys, bs) =>
+              bkeys -> (kept(bs) ++ freshBloomStats(spark, newDirs, bkeys))
+            })
+        val updated = rec.copy(
+          buckets = rec.buckets.map { case (nb, entries) =>
+            nb -> entries.map { case (b, rels) => b -> rels.map(r => bucketUpdates.getOrElse(r, r)) }
+          },
+          deltas = rec.deltas.map { case (dkeys, overlays) =>
+            dkeys -> overlays.map(r => overlayUpdates.getOrElse(r, r))
+          },
+          zones = zones, blooms = blooms)
+        // the whole record — refs, stats and the inventory of the new refs
+        // — swaps in ONE torn-read-free overwrite (the pointer's primitive)
+        atomicOverwrite(spark, f, new Path(vdir, CommitName),
+          updated.copy(inventory = inventory(f, base, vdir, updated)).render)
       }
-      if (bucketUpdates.nonEmpty || overlayUpdates.nonEmpty)
-        // integrity manifest reflects the new inventory (reads the just-
-        // committed metadata back from disk)
-        atomicSmallFile(new Path(vdir, ManifestName),
-          inventory(f, base, vdir).map { case (n, l) => s"$n:$l" }
-            .mkString("\n"))
     }
-    vdirs.zipWithIndex.foreach { case (vdir, vi) =>
+    recs.zipWithIndex.foreach { case ((vdir, rec), vi) =>
       heartbeat() // a 100 TB pass iterates many versions: stay un-stale
-      // power-loss window: the first retained version's sidecars already
-      // point at purged rewrites, later versions still reference the
+      // power-loss window: the first retained version's record already
+      // points at purged rewrites, later versions still reference the
       // un-purged files — the documented rerun-completes contract
       if (vi == 1) haltPoint("mid-purge")
-      if (!retired(vdir)) try updateSidecars(vdir) catch {
+      if (!retired(vdir)) try updateRecord(vdir, rec) catch {
         case scala.util.control.NonFatal(_) if retired(vdir) =>
-          // retired mid-update: a sidecar write into a recursively-deleted
+          // retired mid-update: a record write into a recursively-deleted
           // dir can partially resurrect it (create() re-creates parent
           // dirs on local FS) — sweep our own litter. Only ours can be
           // there: staged versions are numbered ABOVE the pointer and
@@ -3950,16 +3836,15 @@ object VersionedSnapshot {
     val existing = f.listStatus(base).toSeq
       .flatMap(st => versionOf(st.getPath.getName).map(_ -> st.getPath))
     val claims = listClaims(f, base)
-    // post-listing pointer re-read — the sweep fence (see scaladoc)
-    val fence = {
+    def freshPointer(): Long = {
       val ptr = new Path(base, PointerName)
-      val fresh =
-        try {
-          if (!f.exists(ptr)) -1L
-          else readSmallFile(f, ptr).trim.toLongOption.getOrElse(-1L)
-        } catch { case _: Throwable => -1L }
-      math.max(current, fresh)
+      try {
+        if (!f.exists(ptr)) -1L
+        else readSmallFile(f, ptr).trim.toLongOption.getOrElse(-1L)
+      } catch { case _: Throwable => -1L }
     }
+    // post-listing pointer re-read — the sweep fence (see scaladoc)
+    val fence = math.max(current, freshPointer())
     val now = System.currentTimeMillis()
     val staleMs = confMs(StaleClaimMsConf, DefaultStaleClaimMs)
     def staleClaim(v: Long): Boolean = claims.get(v).exists(now - _ > staleMs)
@@ -3987,7 +3872,21 @@ object VersionedSnapshot {
     var n = math.max(fence,
       math.max(existing.map(_._1).maxOption.getOrElse(-1L),
         claims.keys.maxOption.getOrElse(-1L))) + 1
-    while (!tryCreateNew(f, claimPath(base, n))) n += 1
+    // a claim is exclusive only while it is held: a fast commit (claim,
+    // stage, flip, release — a metadata-only rename takes milliseconds)
+    // can finish between this writer's claim listing and its claim, which
+    // then wins the released number. Staging into a COMMITTED number
+    // would overwrite its record and a conflict abort would delete it, so
+    // a claim at or below a pointer read taken after it is handed back
+    var claimed = false
+    while (!claimed) {
+      if (!tryCreateNew(f, claimPath(base, n))) n += 1
+      else {
+        val ptr = freshPointer()
+        if (ptr < n) claimed = true
+        else { releaseClaim(f, base, n); n = ptr + 1 }
+      }
+    }
     n
   }
 
@@ -4261,7 +4160,7 @@ object VersionedSnapshot {
       .foreach { case (_, p) =>
         // ATOMIC retirement (r17): a recursive delete exposes concurrent
         // readers to a HALF-DELETED version dir — a probe that finds the
-        // dir but not its `_COLMAP` parses "identity colmap", which is a
+        // dir but not its colmap parses "identity colmap", which is a
         // WRONG answer, not a retryable collateral (the replica storm's
         // lost-rename fuzz failure). Renaming the dir to a dot-prefixed
         // tombstone first makes retirement all-or-nothing for every
@@ -4310,9 +4209,7 @@ object VersionedSnapshot {
       withMicrosTimestamps(spark) {
         df.write.mode("overwrite").parquet(target.toString)
       }
-      writeSmallFile(f, new Path(target, MarkerName), marker)
-      writeManifest(f, base, target)
-      haltPoint("staged-sidecars")
+      stageRecord(f, base, target, Commit(marker))
       commitPointer(spark, f, base, next, expected = current)
     }
     applyRetention(f, base, current, next, retain)
@@ -4430,7 +4327,7 @@ object VersionedSnapshot {
       // zonemap). A caller-supplied clusterBy (compact's OPTIMIZE-ZORDER
       // analog) orders by VALUE columns instead, and with maxRecordsPerFile
       // splits each bucket into several files, each covering a contiguous
-      // value range — the per-FILE `_ZONES` stats then prune mid-range
+      // value range — the per-FILE zone stats then prune mid-range
       // value predicates below bucket level (at the documented cost of
       // looser key row-group locality in the rewritten files). Task-local
       // sort over the delta only, no extra exchange either way.
@@ -4446,6 +4343,7 @@ object VersionedSnapshot {
       // file of every generation carries the full physical column set,
       // which is what keeps multi-path reads schema-uniform
       val pKeys = keys.map(cm.toPhysical)
+      lazy val prev = if (current < 0) None else Some(recordOf(f, versionPath(base, current)))
       val toPhysical: DataFrame => DataFrame = d =>
         if (cm.isIdentity) d
         else {
@@ -4453,7 +4351,7 @@ object VersionedSnapshot {
           val padded =
             if (cm.dropped.isEmpty || current < 0) Nil
             else {
-              val raw = versionFrameRaw(d.sparkSession, baseDir, current).schema
+              val raw = rawFrame(d.sparkSession, base, versionPath(base, current), prev.get).schema
               cm.dropped.toSeq.sorted.flatMap(dc =>
                 raw.fields.find(_.name == dc)
                   .map(fl => lit(null).cast(fl.dataType).as(dc)))
@@ -4515,7 +4413,7 @@ object VersionedSnapshot {
             inherited.getOrElse(b, Nil))).toMap
           .filter(_._2.nonEmpty)
       }
-      if (manifest.isEmpty) {
+      val rec = if (manifest.isEmpty) {
         // nothing anywhere (e.g. a full delete): flat empty dir keeps schema
         // (the PHYSICAL schema — the colmap still presents the logical view)
         f.delete(gDir, true)
@@ -4523,16 +4421,13 @@ object VersionedSnapshot {
           physDf.drop(BucketCol).limit(0)
             .write.mode("overwrite").parquet(target.toString)
         }
-        writeColMap(f, target, cm)
+        Commit(marker, colMap = cm)
       } else {
         mkdirsFast(f, target)
-        val lines = s"buckets=$numBuckets" +:
-          manifest.toSeq.sortBy(_._1).map { case (b, rels) => s"$b:${rels.mkString(";")}" }
-        writeSmallFile(f, new Path(target, BucketsName), lines.mkString("\n"))
         // zonemap: fresh stats for the files this publish wrote (one narrow
         // aggregate over the delta), inherited files copy their rows from
-        // the previous version's _ZONES driver-side (absent there — e.g. a
-        // pre-zonemap table — they simply carry no stats and never prune).
+        // the previous version's zonemap driver-side (absent there, they
+        // simply carry no stats and never prune).
         // r9: stats also cover VALUE columns (keys-first ordering) so
         // value-range reads (readWhere / predicated changes) skip files the
         // way Delta's dataSkippingNumIndexedCols stats do; the set is every
@@ -4546,7 +4441,7 @@ object VersionedSnapshot {
           .filterNot(_ == BucketCol)
           .take(math.max(0, MaxStatsCols - keys.size))
         val vtags = vcols.map(c => zoneTag(df.schema(c).dataType))
-        // sidecar headers and stats jobs speak the at-rest PHYSICAL names
+        // zone/bloom headers and stats jobs speak the at-rest PHYSICAL names
         // (the written files' own); tags/types are name-independent
         val pVcols = vcols.map(cm.toPhysical)
         val statCols = pKeys ++ pVcols
@@ -4554,7 +4449,7 @@ object VersionedSnapshot {
           physDf.schema.fields.filterNot(_.name == BucketCol))
         val fresh =
           if (written.isEmpty) Nil
-          else freshZoneStats(spark, gDir, gName, statCols, physSchema)
+          else freshZoneStats(spark, Seq(gDir), statCols, physSchema)
         // a previous version's per-FILE stats entry carries iff its file is
         // still referenced: inside a wholly-inherited dir ref, named by an
         // inherited file ref (an earlier partial merge), or named by this
@@ -4566,8 +4461,7 @@ object VersionedSnapshot {
           carryFileRefs.contains(rel) ||
             carryDirRefs.contains(rel.take(math.max(0, rel.lastIndexOf('/'))))
         val carried: Seq[(String, Long, Seq[Option[(String, String)]])] =
-          (if (current < 0) None
-           else parseZones(f, versionPath(base, current))) match {
+          prev.flatMap(_.zones) match {
             case Some(z) if z.keys == pKeys && z.tags == tags &&
                 z.vcols == pVcols && z.vtags == vtags =>
               z.entries.toSeq.collect {
@@ -4585,30 +4479,27 @@ object VersionedSnapshot {
               }
             case _ => Nil
           }
-        val zLines = Seq(s"keys=${pKeys.mkString(",")}", s"tags=${tags.mkString(",")}",
-          s"cols=${pVcols.mkString(",")}", s"ctags=${vtags.mkString(",")}") ++
-          (carried ++ fresh).sortBy(_._1).map { case (rel, n, rs) => zoneLine(rel, n, rs) }
-        writeSmallFile(f, new Path(target, ZonesName), zLines.mkString("\n"))
+        val zones = Zones(pKeys, tags, pVcols, vtags,
+          (carried ++ fresh).map { case (rel, n, rs) => rel -> (n, rs) }.toMap)
         // key blooms: sticky once enabled (a bloom-indexed table keeps its
         // index across merges that did not re-request it), fresh for the
         // files this publish wrote, carried for inherited files
-        val prevBlooms =
-          if (current < 0) None
-          else parseBlooms(f, versionPath(base, current)).filter(_._1 == pKeys)
-        if (keyBlooms || prevBlooms.isDefined) {
-          val freshB =
-            if (written.isEmpty) Nil
-            else freshBloomStats(spark, gDir, gName, pKeys)
-          val carriedB = prevBlooms.map(_._2.toSeq.filter { case (rel, _) =>
-            stillReferenced(rel)
-          }).getOrElse(Nil)
-          writeBlooms(f, target, pKeys, carriedB ++ freshB)
-        }
-        writeColMap(f, target, cm)
+        val prevBlooms = prev.flatMap(_.blooms).filter(_._1 == pKeys)
+        val blooms =
+          if (!keyBlooms && prevBlooms.isEmpty) None
+          else {
+            val freshB =
+              if (written.isEmpty) Nil
+              else freshBloomStats(spark, Seq(gDir), pKeys)
+            val carriedB = prevBlooms.map(_._2.filter { case (rel, _) =>
+              stillReferenced(rel)
+            }).getOrElse(Map.empty)
+            Some(pKeys -> (carriedB ++ freshB))
+          }
+        Commit(marker, buckets = Some(numBuckets -> manifest), zones = Some(zones),
+          blooms = blooms, colMap = cm)
       }
-      writeSmallFile(f, new Path(target, MarkerName), marker)
-      writeManifest(f, base, target)
-      haltPoint("staged-sidecars")
+      stageRecord(f, base, target, rec)
       commitPointer(spark, f, base, next, expected = current)
     }
     applyRetention(f, base, current, next, retain)
@@ -4646,11 +4537,11 @@ object VersionedSnapshot {
       // basis pinning (see mergeInto): the manifest and the frame must
       // come from the SAME version the commit CAS will verify
       withBasis(spark, baseDir, basis) {
-      parseBuckets(fs(spark, baseDir),
-        versionPath(new Path(baseDir), basis)).map { case (nb, _) =>
-        val current = versionFrame(spark, baseDir, basis)
+      val basisRec = recordOf(fs(spark, baseDir), versionPath(new Path(baseDir), basis))
+      basisRec.buckets.map { case (nb, _) =>
+        val current = frameOf(spark, baseDir, basis, basisRec)
         // OPTIMIZE ZORDER BY (r15): cluster each bucket's rewrite along a
-        // Morton curve of the two dimensions, so per-file `_ZONES` ranges
+        // Morton curve of the two dimensions, so per-file zone ranges
         // are tight on BOTH — a lexicographic clusterBy only serves its
         // leading column. The curve's bounding box costs one narrow agg
         // (four driver scalars) over the same pinned frame the rewrite
@@ -4681,22 +4572,21 @@ object VersionedSnapshot {
         //
         // Column-mapping NORMALIZATION rides the same full rewrite: the
         // new generation is written under the LOGICAL names (physical :=
-        // logical, identity colmap, no sidecar) and dropped columns'
-        // bytes are physically reified away — the REORG half of the
+        // logical, identity colmap) and dropped columns' bytes are
+        // physically reified away — the REORG half of the
         // rename/drop-as-metadata contract. The sticky-bloom contract is
-        // preserved across it by probing the basis sidecar under the
+        // preserved across it by probing the basis blooms under the
         // basis's PHYSICAL key names.
-        val basisCm = colMapOf(spark, baseDir, basis)
-        val stickyBlooms = parseBlooms(fs(spark, baseDir),
-            versionPath(new Path(baseDir), basis))
-          .exists(_._1 == keys.map(basisCm.toPhysical))
+        val basisCm = basisRec.colMap
+        val stickyBlooms = basisRec.blooms.exists(_._1 == keys.map(basisCm.toPhysical))
         // normalization re-freezes physical := logical; the ORIGIN
         // lineage (new physical → birth physical) rides the colmap so
         // cross-version reads (CDF diffs, view-pinned probes, purges of
         // older retained versions) keep joining columns on their stable
         // birth identity across the re-freeze
         val normalizedCm = ColMap(Map.empty, Set.empty,
-          versionFrameRaw(spark, baseDir, basis).columns.toSeq
+          rawFrame(spark, new Path(baseDir), versionPath(new Path(baseDir), basis),
+            basisRec).columns.toSeq
             .filterNot(basisCm.dropped.contains)
             .flatMap { p =>
               val birth = basisCm.originOf(p)
@@ -4791,10 +4681,10 @@ object VersionedSnapshot {
     * bucketed layout above). A merge first computes the source's bucket
     * set AND per-bucket key ranges (one small aggregate, ≤ numBuckets
     * rows), then reads and rewrites ONLY those buckets; every untouched
-    * bucket directory is carried into the new version's `_BUCKETS`
+    * bucket directory is carried into the new version's bucket
     * manifest by REFERENCE — the same immutable files, zero bytes copied
     * (spec-asserted). Update-only and delete-only merges prune FURTHER
-    * through the committed `_ZONES` zonemap: a hash-touched bucket none
+    * through the committed zonemap: a hash-touched bucket none
     * of whose files' key ranges intersect the source's range for that
     * bucket provably cannot change, so it is inherited too (measured
     * 43.7× fewer bytes staged for a fully value-disjoint update —
@@ -4915,19 +4805,19 @@ object VersionedSnapshot {
           valueStatsCols = valueStatsCols, keyBlooms = keyBlooms,
           assertUniqueKeys = insertUnmatched)
       case Some(basis) => withBasis(spark, baseDir, basis) {
-        val target0 = versionFrame(spark, baseDir, basis)
-        val basisDir = versionPath(new Path(baseDir), basis)
+        val basisRec = recordOf(fs(spark, baseDir), versionPath(new Path(baseDir), basis))
+        val target0 = frameOf(spark, baseDir, basis, basisRec)
         // callers and frames speak the basis version's LOGICAL names; the
-        // `_ZONES` headers and raw file scans below speak frozen physical
+        // zone headers and raw file scans below speak frozen physical
         // names — translate at exactly those two boundaries
-        val cm = colMapOf(spark, baseDir, basis)
+        val cm = basisRec.colMap
         val pKeys = keys.map(cm.toPhysical)
         // pending merge-on-read overlays would be silently dropped by
         // bucket inheritance (overlay rows live outside the bucket files)
         // — fold them into fresh buckets first, then re-run against the
         // compacted state. The check reads the PINNED basis (a floating
         // read could miss overlays staged just before our basis commit).
-        if (parseDeltas(fs(spark, baseDir), basisDir).exists(_._2.nonEmpty)) {
+        if (basisRec.deltas.exists(_._2.nonEmpty)) {
           if (preCompactAttempts <= 0)
             // a concurrent writer keeps staging overlays faster than we
             // can fold them — retryable contention, not silent livelock
@@ -4968,8 +4858,8 @@ object VersionedSnapshot {
           // bytes await a reifying compact): the multi-generation read
           // would silently conflate the two
           if (!cm.isIdentity) {
-            val rawPhysical = versionFrameRaw(spark, baseDir, basis)
-              .columns.toSet
+            val rawPhysical = rawFrame(spark, new Path(baseDir),
+              versionPath(new Path(baseDir), basis), basisRec).columns.toSet
             (sT.keySet -- tT.keySet).foreach { c =>
               require(!rawPhysical.contains(c),
                 s"cannot add column $c: its physical name is still " +
@@ -4991,7 +4881,7 @@ object VersionedSnapshot {
             d.withColumn(f.name, lit(null).cast(f.dataType)))
             .select(target.columns.map(col).toIndexedSeq: _*)
         }
-        val (nb, entries0) = parseBuckets(fs(spark, baseDir), basisDir)
+        val (nb, entries0) = basisRec.buckets
           // legacy flat snapshot: this merge upgrades it to the bucketed
           // layout with one full rewrite (the last one it will ever pay)
           .getOrElse((numBuckets, Map.empty[Int, Seq[String]]))
@@ -5069,15 +4959,14 @@ object VersionedSnapshot {
         //   matches are impossible; null keys never equi-join-match): the
         //   file is carried into the new manifest BY REFERENCE and only
         //   the overlapping files are read and rewritten. This is the
-        //   partial rewrite the multi-ref `_BUCKETS` format exists for,
+        //   partial rewrite the multi-ref bucket section exists for,
         //   and it applies to insert merges too (inserts land in the
         //   bucket's fresh file alongside the carried ones).
         val zonesOpt =
           if (entries.isEmpty ||
             deleteUnmatchedBySource.isDefined ||
             updateUnmatchedBySource.isDefined) None
-          else parseZones(fs(spark, baseDir), basisDir)
-            .filter(z => z.keys == pKeys && z.tags == srcTags)
+          else basisRec.zones.filter(z => z.keys == pKeys && z.tags == srcTags)
         val srcRange: Map[Int, Seq[Option[(String, String)]]] = bRows.map { r =>
           r.getAs[Int]("__b") -> keys.zip(srcTags).map { case (k, tag) =>
             if (tag == "x") None
@@ -5203,7 +5092,7 @@ object VersionedSnapshot {
     * the same plain-parquet + pointer machinery: the source rows are
     * written BLIND as one small overlay directory (`data/dNNNNN`,
     * O(|delta|) bytes — no base read, no bucket rewrite) and the new
-    * version's `_DELTAS` manifest lists every live overlay in apply
+    * version's record lists every live overlay in apply
     * order. [[read]] reconciles (newest overlay row per key wins;
     * [[UpdateMatched]] rows upsert, [[DeleteMatched]] rows delete);
     * [[compact]] folds all overlays into fresh buckets on a maintenance
@@ -5241,19 +5130,15 @@ object VersionedSnapshot {
       case Some(cur) => withBasis(spark, baseDir, cur) {
         // basis pinning (see mergeInto): one pointer read serves the
         // schema frame, the carried manifests, and the commit CAS
-        val current = versionFrame(spark, baseDir, cur)
-        val cm = colMapOf(spark, baseDir, cur)
-        val pKeys = keys.map(cm.toPhysical)
         val f = fs(spark, baseDir)
         val base = new Path(baseDir)
-        val curDir = versionPath(base, cur)
-        val bucketsText = {
-          val bp = new Path(curDir, BucketsName)
-          require(f.exists(bp),
-            "stageDelta requires the bucketed layout — seed the table via " +
-              "mergeInto/stageDelta-upsert, not a flat publish")
-          readSmallFile(f, bp)
-        }
+        val curRec = recordOf(f, versionPath(base, cur))
+        require(curRec.buckets.isDefined,
+          "stageDelta requires the bucketed layout — seed the table via " +
+            "mergeInto/stageDelta-upsert, not a flat publish")
+        val current = frameOf(spark, baseDir, cur, curRec)
+        val cm = curRec.colMap
+        val pKeys = keys.map(cm.toPhysical)
         def sig(df: DataFrame): Seq[(String, String)] =
           df.schema.fields.map(fl => (fl.name, fl.dataType.catalogString)).toSeq.sortBy(_._1)
         val overlayRows = action match {
@@ -5274,7 +5159,7 @@ object VersionedSnapshot {
             }
             uniqueSource.select(padded: _*).withColumn(ActionCol, lit("d"))
         }
-        val priorOverlays = parseDeltas(f, curDir) match {
+        val priorOverlays = curRec.deltas match {
           case Some((pk, dirs)) =>
             require(pk == pKeys,
               s"overlay keys $pk do not match this delta's keys $keys")
@@ -5289,7 +5174,7 @@ object VersionedSnapshot {
           else {
             val renamed = overlayRows.columns.toIndexedSeq.map(c =>
               col(c).as(cm.toPhysical(c)))
-            val raw = versionFrameRaw(spark, baseDir, cur).schema
+            val raw = rawFrame(spark, base, versionPath(base, cur), curRec).schema
             val padded = cm.dropped.toSeq.sorted.flatMap(dc =>
               raw.fields.find(_.name == dc)
                 .map(fl => lit(null).cast(fl.dataType).as(dc)))
@@ -5308,25 +5193,13 @@ object VersionedSnapshot {
           haltPoint("staged-overlay")
           val target = versionPath(base, next)
           mkdirsFast(f, target)
-          writeSmallFile(f, new Path(target, BucketsName), bucketsText)
-          // bucket files are untouched by a blind overlay — carry their
-          // zonemap forward verbatim so delta versions keep data skipping
-          // (overlay files themselves get no stats: they are delta-sized
-          // and reconciliation reads them in full by design)
-          locally {
-            val zp = new Path(curDir, ZonesName)
-            if (f.exists(zp))
-              writeSmallFile(f, new Path(target, ZonesName), readSmallFile(f, zp))
-            // same carry for the key-bloom sidecar
-            val bp = new Path(curDir, BloomsName)
-            if (f.exists(bp))
-              writeSmallFile(f, new Path(target, BloomsName), readSmallFile(f, bp))
-          }
-          writeSmallFile(f, new Path(target, DeltasName),
-            (s"keys=${pKeys.mkString(",")}" +: (priorOverlays :+ dRel)).mkString("\n"))
-          writeColMap(f, target, cm)
-          writeSmallFile(f, new Path(target, MarkerName), marker)
-          writeManifest(f, base, target)
+          // bucket files are untouched by a blind overlay — their refs,
+          // zonemap and blooms carry forward verbatim so delta versions
+          // keep data skipping (overlay files themselves get no stats:
+          // they are delta-sized and reconciliation reads them in full by
+          // design)
+          stageRecord(f, base, target, curRec.derive(marker)
+            .copy(deltas = Some((pKeys, priorOverlays :+ dRel))))
           commitPointer(spark, f, base, next, expected = cur)
         }
         applyRetention(f, base, cur, next, retain)

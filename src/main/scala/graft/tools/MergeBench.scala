@@ -116,15 +116,10 @@ object MergeBench {
       f"local-vs-flat ratio=${cBytes.toDouble / math.max(1, aBytes)}%.1fx, " +
       f"MoR-vs-CoW-uniform ratio=${bBytes.toDouble / math.max(1, dBytes)}%.1fx")
 
-    // ---- zonemap (_ZONES) data skipping: bytes BOUND by point reads and
-    // bytes STAGED by value-disjoint merges, with the committed zonemap
-    // vs with it deleted (= the pre-zonemap reader/writer) ----
+    // ---- zonemap data skipping: bytes BOUND by point reads and bytes
+    // STAGED by value-disjoint merges ----
     val eDir = s"$root/e"
     freshTable(eDir, bucketed = true)
-    def dropZones(dir: String): Unit =
-      Option(new java.io.File(dir).listFiles()).getOrElse(Array.empty)
-        .filter(_.getName.startsWith("v"))
-        .foreach(v => new java.io.File(v, "_ZONES").delete())
     def boundBytes(df: org.apache.spark.sql.DataFrame): Long =
       df.inputFiles.map(u => new java.io.File(new java.net.URI(u)).length()).sum
     val maxKey = orders.agg(max(col("o_orderkey"))).head().getLong(0)
@@ -154,41 +149,24 @@ object MergeBench {
     }
     val zMergeBytes = files(eDir).collect { case (p, len) if !zBefore.contains(p) => len }.sum
     // value-column (r9) stats: a range probe beyond every file's
-    // o_totalprice binds ZERO data files with the zonemap, the whole
-    // table without it. Hash bucketing scatters keys, so every file's
+    // o_totalprice binds ZERO data files. Hash bucketing scatters keys, so every file's
     // range for an unclustered value column is wide — the value-stats
     // win is the absent/out-of-range regime (same as Delta stats on an
     // unclustered column); clustered columns also prune mid-range.
     val maxPrice = orders.agg(max(col("o_totalprice"))).head().getDouble(0)
     val vAbsent = boundBytes(VersionedSnapshot.readWhere(spark, eDir,
       Map("o_totalprice" -> (Some(maxPrice + 1e6), None))).get)
-    // same three measurements with the zonemap deleted (pre-zonemap state)
-    dropZones(eDir)
-    // (measured before the next merge republishes a fresh zonemap)
-    val pVAbsent = boundBytes(VersionedSnapshot.readWhere(spark, eDir,
-      Map("o_totalprice" -> (Some(maxPrice + 1e6), None))).get)
-    val pAbsent = boundBytes(VersionedSnapshot.readForKeys(spark, eDir, absentKeys).get)
-    val pPresent = boundBytes(VersionedSnapshot.readForKeys(spark, eDir, presentKeys).get)
-    val pBefore = files(eDir)
-    timed("bucketed(256): disjoint update merge (no zonemap)") {
-      VersionedSnapshot.mergeInto(eDir, disjoint, Seq("o_orderkey"),
-        VersionedSnapshot.UpdateMatched, insertUnmatched = false,
-        marker = "noop2", retain = 1, numBuckets = nb)
-    }
-    val pMergeBytes = files(eDir).collect { case (p, len) if !pBefore.contains(p) => len }.sum
-    println(f"zonemap point-read bytes bound: absent-keys ${zAbsent / 1024}%d KiB " +
-      f"(vs ${pAbsent / 1024}%d KiB without), present-keys ${zPresent / 1024}%d KiB " +
-      f"(vs ${pPresent / 1024}%d KiB without)")
-    println(f"zonemap disjoint-merge bytes staged: ${zMergeBytes / 1024}%d KiB " +
-      f"(vs ${pMergeBytes / 1024}%d KiB without; " +
-      f"ratio=${pMergeBytes.toDouble / math.max(1, zMergeBytes)}%.1fx)")
+    val allE = boundBytes(VersionedSnapshot.read(spark, eDir).get)
+    println(f"zonemap point-read bytes bound: absent-keys ${zAbsent / 1024}%d KiB, " +
+      f"present-keys ${zPresent / 1024}%d KiB, of ${allE / 1024}%d KiB total")
+    println(f"zonemap disjoint-merge bytes staged: ${zMergeBytes / 1024}%d KiB")
     println(f"zonemap value-range read bytes bound (out-of-range price): " +
-      f"${vAbsent / 1024}%d KiB (vs ${pVAbsent / 1024}%d KiB without)")
+      f"${vAbsent / 1024}%d KiB")
 
     // ---- r9: value-clustered layout + key blooms. clusterBy trades key
     // locality for value locality: mid-range VALUE reads now prune below
     // bucket level, while point reads would bind every file of their
-    // bucket — the _BLOOMS sidecar restores that pruning. ----
+    // bucket — key blooms restore that pruning. ----
     val fDir = s"$root/f"
     freshTable(fDir, bucketed = true)
     timed("bucketed(256): clustered+bloom compact") {
@@ -209,16 +187,10 @@ object MergeBench {
         .collect().map(_.getLong(0)).toSeq.toDF("o_orderkey")
     }
     val cPresent = boundBytes(VersionedSnapshot.readForKeys(spark, fDir, midKeys).get)
-    def dropBlooms(dir: String): Unit =
-      Option(new java.io.File(dir).listFiles()).getOrElse(Array.empty)
-        .filter(_.getName.startsWith("v"))
-        .foreach(v => new java.io.File(v, "_BLOOMS").delete())
-    dropBlooms(fDir)
-    val cPresentNoBloom = boundBytes(VersionedSnapshot.readForKeys(spark, fDir, midKeys).get)
     val allBytes = boundBytes(VersionedSnapshot.read(spark, fDir).get)
     println(f"clustered layout: p10 value-range read binds ${cRange / 1024}%d KiB " +
       f"of ${allBytes / 1024}%d KiB total; 10-mid-key point read binds " +
-      f"${cPresent / 1024}%d KiB with blooms vs ${cPresentNoBloom / 1024}%d KiB without")
+      f"${cPresent / 1024}%d KiB with blooms")
 
     // ---- r11: file-level carry (partial rewrite). On a key-clustered
     // multi-file layout a selective merge rewrites only the FILES of a
@@ -227,8 +199,7 @@ object MergeBench {
     // below the bucket. Two selectivities: one bucket's worth of keys
     // (every file of the bucket overlaps → whole bucket rewritten, the
     // pre-r11 floor) and ONE key (one file overlaps → one file
-    // rewritten). The no-zonemap run is the carry-disabled baseline at
-    // identical layout.
+    // rewritten).
     def multiFileTable(dir: String): Unit = {
       freshTable(dir, bucketed = true)
       VersionedSnapshot.compact(spark, dir, Seq("o_orderkey"),
@@ -237,10 +208,8 @@ object MergeBench {
     val minKey = orders.agg(min(col("o_orderkey"))).head().getLong(0)
     val oneKeyDelta = orders.filter(col("o_orderkey") === minKey)
       .withColumn("o_totalprice", col("o_totalprice") + 1.0)
-    def mergeBytes(tag: String, dir: String, delta: org.apache.spark.sql.DataFrame,
-        zonemap: Boolean): Long = {
+    def mergeBytes(tag: String, dir: String, delta: org.apache.spark.sql.DataFrame): Long = {
       multiFileTable(dir)
-      if (!zonemap) dropZones(dir)
       val before = files(dir)
       timed(tag) {
         VersionedSnapshot.mergeInto(dir, delta, Seq("o_orderkey"),
@@ -250,16 +219,11 @@ object MergeBench {
       files(dir).collect { case (p, len) if !before.contains(p) && p.endsWith(".parquet") => len }.sum
     }
     val oneFileBytes = mergeBytes("multi-file: 1-key merge (file carry)",
-      s"$root/g", oneKeyDelta, zonemap = true)
+      s"$root/g", oneKeyDelta)
     val oneBucketBytes = mergeBytes("multi-file: bucket-0 ~0.4% merge",
-      s"$root/h", localDelta.filter(pmod(xxhash64(col("o_orderkey")), lit(nb)) === 0),
-      zonemap = true)
-    val noCarryBytes = mergeBytes("multi-file: 1-key merge (no zonemap)",
-      s"$root/i", oneKeyDelta, zonemap = false)
+      s"$root/h", localDelta.filter(pmod(xxhash64(col("o_orderkey")), lit(nb)) === 0))
     println(f"file-level carry, data bytes staged: 1-key=${oneFileBytes / 1024}%d KiB, " +
-      f"1-bucket=${oneBucketBytes / 1024}%d KiB, " +
-      f"1-key-without-zonemap=${noCarryBytes / 1024}%d KiB " +
-      f"(carry win=${noCarryBytes.toDouble / math.max(1, oneFileBytes)}%.1fx)")
+      f"1-bucket=${oneBucketBytes / 1024}%d KiB")
 
     // ---- r13: the single-writer concurrency TAX of the fenced commit
     // protocol, as a number. Per publish, the r11/r13 machinery adds to

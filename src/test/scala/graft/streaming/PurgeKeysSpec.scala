@@ -28,8 +28,7 @@ class PurgeKeysSpec extends SparkSpec {
     // 42 is visible at every retained version before the purge
     (v2 - 2 to v2).foreach(v => assert(idsAt(base, v).contains(42L)))
 
-    val bucketsBefore = Files.readString(
-      java.nio.file.Path.of(base, f"v$v2%05d", "_BUCKETS"))
+    val bucketsBefore = CommitRecordFiles.section(base, v2, "buckets").get
     val n = purgeKeys(spark, base, Seq("k"), Seq(Seq(42L)))
     assert(n >= 1)
 
@@ -44,10 +43,8 @@ class PurgeKeysSpec extends SparkSpec {
       .select("v").head().getLong(0) === 2L)
 
     // untouched buckets keep their manifest lines verbatim (inheritance)
-    val bucketsAfter = Files.readString(
-      java.nio.file.Path.of(base, f"v$v2%05d", "_BUCKETS"))
-    val changedLines = bucketsBefore.linesIterator.toSet --
-      bucketsAfter.linesIterator.toSet
+    val bucketsAfter = CommitRecordFiles.section(base, v2, "buckets").get
+    val changedLines = bucketsBefore.toSet -- bucketsAfter.toSet
     assert(changedLines.nonEmpty && changedLines.size < 8,
       s"only hit buckets may change, saw $changedLines")
 

@@ -559,9 +559,8 @@ class VersionedSnapshotSpec extends SparkSpec {
         // the retained previous version's references too
         new java.io.File(base).listFiles().filter(_.getName.startsWith("v")).toSeq
           .flatMap { vd =>
-            val b = new java.io.File(vd, "_BUCKETS")
-            if (!b.exists) Seq.empty
-            else Files.readString(b.toPath).split('\n').drop(1).toSeq
+            CommitRecordFiles.section(base, vd.getName.drop(1).toLong, "buckets")
+              .toSeq.flatMap(_.drop(1))
               .filter(_.nonEmpty).map(_.split(':')(1).split('/')(1))
           }
       }
@@ -1042,12 +1041,11 @@ class VersionedSnapshotSpec extends SparkSpec {
     // in-range read reconciles base + overlay as before
     val got2 = VersionedSnapshot.readForKeys(spark, base, Seq(3L).toDF("k")).get
     assert(got2.as[(Long, Long)].collect().toSeq == Seq((3L, 30L)))
-    // legacy table (no _ZONES — e.g. written pre-zonemap): delete the
-    // manifest; reads fall back to bucket pruning and stay correct
+    // a version whose record has no zones section: reads fall back to
+    // bucket pruning and stay correct
     val cur = VersionedSnapshot.currentVersion(spark, base).get
-    val zf = new java.io.File(new java.io.File(base),
-      "v" + "%05d".formatLocal(java.util.Locale.ROOT, cur) + "/_ZONES")
-    assert(zf.delete())
+    CommitRecordFiles.rewriteSection(base, cur, "zones", None)
+    assert(VersionedSnapshot.zoneManifest(spark, base).isEmpty)
     val legacy = VersionedSnapshot.readForKeys(spark, base, Seq(5000L).toDF("k")).get
     assert(legacy.count() == 0 && legacy.inputFiles.nonEmpty,
       "without a zonemap the probe degrades to reading its hash bucket")
@@ -1221,14 +1219,17 @@ class VersionedSnapshotSpec extends SparkSpec {
       numBuckets = 2)
     val after = VersionedSnapshot.readForKeys(spark, base, Seq(42L).toDF("k")).get
     assert(after.as[(Long, Long)].collect().toSeq == Seq((42L, 1L)))
-    val bloomFile = new java.io.File(new java.io.File(base),
-      "v" + "%05d".formatLocal(java.util.Locale.ROOT,
-        VersionedSnapshot.currentVersion(spark, base).get) + "/_BLOOMS")
-    assert(bloomFile.exists(), "bloom sidecar must carry across merges once enabled")
-    // corrupt sidecar degrades to no-bloom (reads stay correct)
-    java.nio.file.Files.writeString(bloomFile.toPath, "garbage")
-    val legacy = VersionedSnapshot.readForKeys(spark, base, Seq(42L).toDF("k")).get
-    assert(legacy.as[(Long, Long)].collect().toSeq == Seq((42L, 1L)))
+    val cur = VersionedSnapshot.currentVersion(spark, base).get
+    assert(CommitRecordFiles.section(base, cur, "blooms").isDefined,
+      "blooms must carry across merges once enabled")
+    // a corrupt blooms section degrades to no-bloom, and so does none at
+    // all: reads stay correct, they only bind more files
+    for (body <- Seq(Some(Seq("garbage")), None)) {
+      CommitRecordFiles.rewriteSection(base, cur, "blooms", body)
+      val legacy = VersionedSnapshot.readForKeys(spark, base, Seq(42L).toDF("k")).get
+      assert(legacy.as[(Long, Long)].collect().toSeq == Seq((42L, 1L)))
+      assert(legacy.inputFiles.length >= after.inputFiles.length)
+    }
   }
 
   test("key blooms survive file-level carry: carried per-file refs keep pruning point reads") {
@@ -1247,11 +1248,10 @@ class VersionedSnapshotSpec extends SparkSpec {
     val (_, entries) = VersionedSnapshot.bucketManifest(spark, base).get
     assert(entries.values.flatten.exists(_.endsWith(".parquet")),
       "the narrow merge must have carried at least one file by reference")
-    // the bloom sidecar carried through the partial publish
-    val bloomFile = new java.io.File(new java.io.File(base),
-      "v" + "%05d".formatLocal(java.util.Locale.ROOT,
-        VersionedSnapshot.currentVersion(spark, base).get) + "/_BLOOMS")
-    assert(bloomFile.exists(), "bloom sidecar must survive a partial merge")
+    // the blooms section carried through the partial publish
+    assert(CommitRecordFiles.section(base,
+      VersionedSnapshot.currentVersion(spark, base).get, "blooms").isDefined,
+      "blooms must survive a partial merge")
     // a key living in a CARRIED file: correct value, pruned binding
     val probe = VersionedSnapshot.readForKeys(spark, base, Seq(500L).toDF("k")).get
     assert(probe.as[(Long, Long)].collect().toSeq == Seq((500L, 5000L)))
@@ -1274,13 +1274,11 @@ class VersionedSnapshotSpec extends SparkSpec {
       (1L to 100L).map(i => (i, i * 10L)).toDF("k", "v"), Seq("k"),
       UpdateMatched, insertUnmatched = true, marker = "seed", numBuckets = 4)
     val cur = VersionedSnapshot.currentVersion(spark, base).get
-    val zf = new java.io.File(new java.io.File(base),
-      "v" + "%05d".formatLocal(java.util.Locale.ROOT, cur) + "/_ZONES")
     for (junk <- Seq(
         "garbage with no header",                       // malformed header
         "keys=k\ntags=i\nfile.parquet\tnotanumber\tAA,BB", // bad count
         "keys=k\ntags=i\nfile.parquet\t5\tno-comma-here")) { // bad range field
-      java.nio.file.Files.writeString(zf.toPath, junk)
+      CommitRecordFiles.rewriteSection(base, cur, "zones", Some(junk.split('\n').toSeq))
       // read + point read + merge must all survive on the no-stats path
       val probe = VersionedSnapshot.readForKeys(spark, base, Seq(5000L).toDF("k")).get
       assert(probe.count() == 0 && probe.inputFiles.nonEmpty,
