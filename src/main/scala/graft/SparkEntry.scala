@@ -273,16 +273,6 @@ object SparkEntry {
       (base, v0, v2)
     })
 
-  /** Session-pinned deterministic micro-batch split of the events CDC
-    * projection (batch b = event_id % 3 == b, columns user_id /
-    * event_type / event_id / v_cents) — the relation every replay-family
-    * query (`incr_snapshot_replay`, `incr_snapshot_versioned`,
-    * `cdc_merge_replay`, `mor_delta_replay`, `dedup_stream_replay`)
-    * re-derived 3-4× each by query independence. The split is pinned
-    * eagerly (localCheckpoint, |events| rows total — bounded) so the
-    * events scan + projection + filter runs once per (session, corpus);
-    * the merge/replay cycles stay fully per-query, because the replay
-    * machinery is exactly what those queries exist to exercise. */
   /** The exact isotonic purchase-rate fit over bit-length value buckets —
     * shared by `isotonic_calibration` (which reports it) and
     * `brier_decomposition` (which scores it). Columns: b (bucket), n, p,
@@ -320,6 +310,16 @@ object SparkEntry {
     cum.join(iso, Seq("b")).select("b", "n", "p", "iso_e6")
   }
 
+  /** Session-pinned deterministic micro-batch split of the events CDC
+    * projection (batch b = event_id % 3 == b, columns user_id /
+    * event_type / event_id / v_cents) — the relation every replay-family
+    * query (`incr_snapshot_versioned`, `cdc_merge_replay`,
+    * `mor_delta_replay`, `dedup_stream_replay`) re-derived 3-4× each by
+    * query independence. The split is pinned eagerly (localCheckpoint,
+    * |events| rows total — bounded) so the events scan + projection +
+    * filter runs once per (session, corpus);
+    * the merge/replay cycles stay fully per-query, because the replay
+    * machinery is exactly what those queries exist to exercise. */
   private[graft] def replayBatchesFor(s: SparkSession, dir: String): IndexedSeq[DataFrame] =
     replayBatchesCache.getOrElseUpdate((s, dir), {
       val ev = Tables.events(s, dir).select(

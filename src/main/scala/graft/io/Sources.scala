@@ -69,11 +69,6 @@ object Sources {
       .schema(schema)
       .csv(paths: _*)
 
-  /** Permissive dev-convenience variant (schema inference): NOT for
-    * production paths. */
-  def csvInferred(spark: SparkSession, paths: String*): DataFrame =
-    spark.read.option("header", "true").option("inferSchema", "true").csv(paths: _*)
-
   /** Quarantining CSV read — the third failure policy, between FAILFAST
     * (one bad row kills a 100 TB load) and silent PERMISSIVE (bad rows
     * become nulls and vanish): malformed lines are routed to

@@ -411,32 +411,11 @@ private[graft] object CurationSnapshotQueries {
     }),
 
     // ---- streaming snapshot maintenance, batch-replay form: drive the
-    // REAL foreachBatch merge cycle (write-tmp → swap, replay-skip marker)
-    // over 3 deterministic micro-batches — batch 1 delivered TWICE to
-    // exercise the at-least-once redelivery skip — and return the final
-    // snapshot. Oracle: a full recompute over all events, which the
-    // monoid merge law guarantees is identical ----
-    "incr_snapshot_replay" -> ((s, dir) => {
-      val batches = replayBatchesFor(s, dir) // session pin, see its scaladoc
-        .map(_.select(col("event_type"), col("event_id"), col("v_cents").as("v")))
-      val snapDir = tempSnapshotBase("graft-snap")
-      val tag = "replay-lineage"
-      for (b <- 0L until 3L) {
-        val batch = batches(b.toInt)
-        graft.streaming.StreamingKpis.mergeBatchIntoSnapshot(
-          batch, Seq("event_type"), "v", snapDir, tag, b)
-        // foreachBatch is at-least-once: the same (tag, batchId) arriving
-        // again must be skipped, not double-counted
-        if (b == 1L) graft.streaming.StreamingKpis.mergeBatchIntoSnapshot(
-          batch, Seq("event_type"), "v", snapDir, tag, b)
-      }
-      s.read.parquet(snapDir).select("event_type", "n", "sum_v", "min_v", "max_v")
-    }),
-
-    // ---- same replay cycle through the reader-atomic VERSIONED snapshot
-    // (pointer-file commit instead of dir rename-swap) — proves the
-    // transactional publish path end-to-end against the same full-recompute
-    // oracle ----
+    // REAL foreachBatch merge cycle of the versioned snapshot (pointer
+    // commit, replay-skip marker) over 3 deterministic micro-batches —
+    // batch 1 delivered TWICE to exercise the at-least-once redelivery
+    // skip — and return the final snapshot. Oracle: a full recompute over
+    // all events, which the monoid merge law guarantees is identical ----
     "incr_snapshot_versioned" -> ((s, dir) => {
       val batches = replayBatchesFor(s, dir) // session pin, see its scaladoc
         .map(_.select(col("event_type"), col("event_id"), col("v_cents").as("v")))

@@ -671,13 +671,6 @@ private[graft] object OraclesCorpusAnalytics {
         |SELECT user_id, event_type, v_cents FROM mr
         |WHERE rn = 1 AND user_id % 7 <> 0""".stripMargin,
 
-    "incr_snapshot_replay" ->
-      """WITH q AS (
-        |  SELECT event_type, CAST(round(value * 100) AS BIGINT) AS v FROM events)
-        |SELECT event_type, count(*) AS n, CAST(sum(v) AS BIGINT) AS sum_v,
-        |       min(v) AS min_v, max(v) AS max_v
-        |FROM q GROUP BY 1""".stripMargin,
-
     "source_mix" ->
       """WITH c AS (SELECT lang, count(*) AS n FROM documents GROUP BY lang),
         |t AS (SELECT lang, n,

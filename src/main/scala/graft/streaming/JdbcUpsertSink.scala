@@ -3,8 +3,7 @@ package graft.streaming
 import java.sql.{Connection, DriverManager}
 
 import org.apache.spark.sql.{DataFrame, Row, SaveMode}
-import org.apache.spark.sql.functions.{col, row_number}
-import org.apache.spark.sql.streaming.{DataStreamWriter, OutputMode, Trigger}
+import org.apache.spark.sql.streaming.DataStreamWriter
 
 /** Streaming keyed upsert into a JDBC warehouse table — the reference's
   * terminal Redshift COPY stage
@@ -95,19 +94,8 @@ object JdbcUpsertSink {
       orderCol: String, url: String, table: String, checkpointTag: String,
       batchId: Long, options: Map[String, String] = Map.empty): Unit = {
     require(keys.nonEmpty, "upsert needs at least one key column")
-    require(!keys.contains(orderCol),
-      s"orderCol '$orderCol' cannot also be a key: it is dropped after the " +
-        "per-key reduce, which would silently remove a merge key")
-    require(!batch.columns.contains("__rn"),
-      "input column '__rn' collides with the reduce's internal rank column")
-    val (tag, lastId) = lastApplied(url, table)
-    if (tag == checkpointTag && lastId >= batchId) return // replay: skip
-    // last writer per key wins within the batch
-    val w = org.apache.spark.sql.expressions.Window
-      .partitionBy(keys.map(col): _*).orderBy(col(orderCol).desc)
-    val reduced = batch
-      .withColumn("__rn", row_number().over(w))
-      .filter(col("__rn") === 1).drop("__rn", orderCol)
+    val reduced = MicroBatch.latestPerKey(batch, keys, orderCol)
+    if (MicroBatch.applied(lastApplied(url, table), checkpointTag, batchId)) return
     // per-ATTEMPT staging table: a zombie driver racing its replacement
     // on a not-yet-applied batch must not overwrite the peer's staged
     // rows between its staging write and its apply transaction — each
@@ -148,7 +136,7 @@ object JdbcUpsertSink {
       val rs = st.executeQuery(s"SELECT tag, batch_id FROM ${table}_lineage")
       val cur = try { if (rs.next()) (rs.getString(1), rs.getLong(2)) else ("", -1L) }
         finally rs.close()
-      if (!(cur._1 == checkpointTag && cur._2 >= batchId)) {
+      if (!MicroBatch.applied(cur, checkpointTag, batchId)) {
         val keyMatch = keys.map(k =>
           s"$stage.${quoted(k)} = $table.${quoted(k)}").mkString(" AND ")
         st.executeUpdate(
@@ -238,12 +226,8 @@ object JdbcUpsertSink {
   def sink(updates: DataFrame, keys: Seq[String], orderCol: String,
       url: String, table: String, checkpoint: String,
       options: Map[String, String] = Map.empty): DataStreamWriter[Row] =
-    updates.writeStream
-      .outputMode(OutputMode.Append)
-      .option("checkpointLocation", checkpoint)
-      .trigger(Trigger.AvailableNow())
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        upsertBatch(batch, keys, orderCol, url, table,
-          checkpointTag = checkpoint, batchId = batchId, options = options)
-      }
+    MicroBatch.drain(updates, checkpoint) { (batch, batchId) =>
+      upsertBatch(batch, keys, orderCol, url, table,
+        checkpointTag = checkpoint, batchId = batchId, options = options)
+    }
 }

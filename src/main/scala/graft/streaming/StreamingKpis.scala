@@ -3,14 +3,14 @@ package graft.streaming
 import graft.etl.MusicKpis
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{DataStreamWriter, OutputMode, Trigger}
+import org.apache.spark.sql.streaming.{DataStreamWriter, OutputMode}
 import org.apache.spark.sql.types.StructType
 
 /** Structured Streaming variant of the reference pipeline (SURVEY.md §2.11).
   *
   * The reference's "streaming" is an hourly batch re-extract + full
   * recompute + overwrite (`/root/reference/dags/music_streaming_etl_dags
-  * .py:349`, `:253-257`, `:325-328`). Two faithful incremental forms:
+  * .py:349`, `:253-257`, `:325-328`). Three faithful incremental forms:
   *
   *  1. [[foreachBatchOverwrite]] — file-source stream, per-batch FULL
   *     recompute of the tiny KPI relations, overwrite sink. Exact parity
@@ -20,6 +20,10 @@ import org.apache.spark.sql.types.StructType
   *     tumbling window + watermark, append mode, explicit late-data policy
   *     (the reference has none — late events are silently absorbed by the
   *     next full recompute).
+  *  3. [[VersionedSnapshot.sink]] — each micro-batch's mergeable partials
+  *     merged into a persistent keyed snapshot and published through an
+  *     atomic pointer commit, effectively once per checkpoint lineage:
+  *     per-batch work follows the batch, not the history.
   *
   * At scale: the streaming aggregations keyed on (genre,date) / hour carry
   * bounded state (small keyspace); the watermark bounds state for the
@@ -62,119 +66,16 @@ object StreamingKpis {
       genreOut: String,
       hourlyOut: String,
       checkpoint: String): DataStreamWriter[org.apache.spark.sql.Row] =
-    enrichedStream.writeStream
-      .outputMode(OutputMode.Append)
-      .option("checkpointLocation", checkpoint)
-      .trigger(Trigger.AvailableNow())
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        val genre = MusicKpis.genreKpis(batch,
-          genreCol = "track_genre", countCol = "track_id",
-          avgCol = "duration_ms", modeCol = "track_name",
-          modeOut = "most_popular_track")
-        val hourly = MusicKpis.hourlyKpis(batch,
-          userCol = "user_id", artistCol = "artists", trackCol = "track_id")
-        graft.io.Sinks.parquet(genre, genreOut)
-        graft.io.Sinks.parquet(graft.io.Sinks.serializeArray(hourly, "top_artists"), hourlyOut)
-      }
-
-  /** Incremental KPI snapshot maintenance over a stream: each micro-batch
-    * is aggregated into mergeable partials
-    * ([[graft.operators.Incremental.partials]]) and MERGED into the
-    * persistent snapshot — per-batch work is O(batch + snapshot keys),
-    * never a rescan of history. Contrast [[foreachBatchOverwrite]], the
-    * reference's full-recompute parity mode; this is the form that
-    * survives a 100 TB history with a 1 GB day.
-    *
-    * The refresh cycle is write-tmp → rename-aside → rename, so the merged
-    * output is fully materialized before the files it was read from
-    * disappear (overwriting in place would delete its own lazy input), and
-    * a crash at ANY point leaves a live snapshot (either the old one, the
-    * `.old` aside, or the new one — recovery at batch start restores the
-    * aside if the final rename never ran).
-    *
-    * Idempotent under micro-batch replay WITHIN a checkpoint lineage:
-    * foreachBatch runs with at-least-once semantics — if the job dies
-    * after the swap but before the checkpoint commits, the SAME batchId
-    * is re-delivered on restart. The snapshot therefore records
-    * `<checkpointTag>:<batchId>` of the last merge (a `_LAST_BATCH`
-    * marker written inside the tmp dir, so it travels with the data
-    * through the swap); a batch already recorded FOR THE SAME CHECKPOINT
-    * is skipped instead of double-counted. The tag matters: batchIds are
-    * only meaningful within one checkpoint lineage — a re-pointed or
-    * rebuilt checkpoint restarts them at 0, and skipping those batches
-    * on id alone would silently drop whatever NEW data they carry. After
-    * a lineage reset the guarantee is therefore at-least-once (already-
-    * merged rows in re-delivered batches merge again); keep the
-    * checkpoint alongside the snapshot to stay in the exactly-once
-    * regime.
-    *
-    * Plain-filesystem rename is not atomic-visible to concurrent readers;
-    * a production deployment points this at a transactional table format
-    * and replaces the swap with its MERGE/replace commit. */
-  def incrementalSnapshot(events: DataFrame, keys: Seq[String],
-      valueCol: String, snapshotDir: String, checkpoint: String)
-      : DataStreamWriter[org.apache.spark.sql.Row] =
-    events.writeStream
-      .outputMode(OutputMode.Append)
-      .option("checkpointLocation", checkpoint)
-      .trigger(Trigger.AvailableNow())
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        mergeBatchIntoSnapshot(batch, keys, valueCol, snapshotDir,
-          checkpointTag = checkpoint, batchId = batchId)
-      }
-
-  /** One [[incrementalSnapshot]] merge cycle — exposed within graft so the
-    * replay/crash-recovery semantics are directly testable without
-    * contriving a real foreachBatch redelivery. */
-  private[graft] def mergeBatchIntoSnapshot(batch: DataFrame, keys: Seq[String],
-      valueCol: String, snapshotDir: String, checkpointTag: String,
-      batchId: Long): Unit = {
-    val spark = batch.sparkSession
-    val fs = org.apache.hadoop.fs.FileSystem.get(
-      new java.net.URI(snapshotDir), spark.sparkContext.hadoopConfiguration)
-    val snapPath = new org.apache.hadoop.fs.Path(snapshotDir)
-    val oldPath = new org.apache.hadoop.fs.Path(snapshotDir + ".old")
-    val tmpPath = new org.apache.hadoop.fs.Path(snapshotDir + ".tmp")
-    val marker = "_LAST_BATCH" // leading underscore: invisible to parquet reads
-    // crash recovery: a crash between (snapshot → .old) and
-    // (.tmp → snapshot) leaves only the aside live — restore it first
-    if (!fs.exists(snapPath) && fs.exists(oldPath)) fs.rename(oldPath, snapPath)
-    fs.delete(tmpPath, true) // stale tmp from a crashed attempt
-    // stale aside from a crash between the final rename and its delete
-    // — cleaned here (not only in the merge branch) so a skipped
-    // replay doesn't leave a snapshot-sized orphan behind
-    if (fs.exists(snapPath)) fs.delete(oldPath, true)
-    // (tag, batchId) of the last merge; tag mismatch = different
-    // checkpoint lineage = never skip
-    def lastApplied: (String, Long) = {
-      val f = new org.apache.hadoop.fs.Path(snapPath, marker)
-      if (!fs.exists(f)) ("", -1L)
-      else {
-        val in = fs.open(f)
-        val s = try scala.io.Source.fromInputStream(in).mkString.trim
-          finally in.close()
-        val cut = s.lastIndexOf(':')
-        if (cut < 0) ("", -1L) else (s.substring(0, cut), s.substring(cut + 1).toLong)
-      }
+    MicroBatch.drain(enrichedStream, checkpoint) { (batch, _) =>
+      val genre = MusicKpis.genreKpis(batch,
+        genreCol = "track_genre", countCol = "track_id",
+        avgCol = "duration_ms", modeCol = "track_name",
+        modeOut = "most_popular_track")
+      val hourly = MusicKpis.hourlyKpis(batch,
+        userCol = "user_id", artistCol = "artists", trackCol = "track_id")
+      graft.io.Sinks.parquet(genre, genreOut)
+      graft.io.Sinks.parquet(graft.io.Sinks.serializeArray(hourly, "top_artists"), hourlyOut)
     }
-    val (tag, lastId) = if (fs.exists(snapPath)) lastApplied else ("", -1L)
-    if (!(tag == checkpointTag && lastId >= batchId)) {
-      val partial = graft.operators.Incremental.partials(
-        batch, keys, col(valueCol))
-      val merged =
-        if (fs.exists(snapPath))
-          graft.operators.Incremental.merge(
-            Seq(spark.read.parquet(snapshotDir), partial), keys)
-        else partial
-      merged.write.mode("overwrite").parquet(tmpPath.toString)
-      val out = fs.create(new org.apache.hadoop.fs.Path(tmpPath, marker), true)
-      try out.write(s"$checkpointTag:$batchId".getBytes("UTF-8")) finally out.close()
-      fs.delete(oldPath, true)
-      if (fs.exists(snapPath)) fs.rename(snapPath, oldPath)
-      fs.rename(tmpPath, snapPath)
-      fs.delete(oldPath, true)
-    }
-  }
 
   /** Idiomatic extension: tumbling 1h event-time window + watermark.
     * Emits (window, unique_listeners≈, listen_count) per hour once the

@@ -3,11 +3,11 @@ package graft.streaming
 import org.apache.hadoop.fs.{FileContext, FileSystem, Options, Path}
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions.{array, assert_true, coalesce, col, count, explode, expr, lit, pmod, when, xxhash64}
-import org.apache.spark.sql.streaming.{DataStreamWriter, OutputMode, Trigger}
+import org.apache.spark.sql.streaming.DataStreamWriter
 
-/** Reader-atomic, multi-version snapshot publication — the transactional
-  * upgrade of [[StreamingKpis.incrementalSnapshot]]'s rename-swap (whose
-  * scaladoc documents exactly this seam).
+/** Reader-atomic, multi-version snapshot publication — the one table
+  * format the streaming sinks ([[sink]], [[mergeSink]], [[deltaSink]])
+  * maintain.
   *
   * Two physical layouts share the same pointer commit:
   *
@@ -50,8 +50,8 @@ import org.apache.spark.sql.streaming.{DataStreamWriter, OutputMode, Trigger}
   * update/delete-only [[mergeInto]] consult to skip files hash pruning
   * alone cannot rule out.
   *
-  * Why this beats the rename-swap:
-  *  - **Reader atomicity.** The swap has a window where the snapshot path
+  * Why a pointer commit rather than a directory rename-swap:
+  *  - **Reader atomicity.** A swap has a window where the snapshot path
   *    does not exist (between `snap→.old` and `.tmp→snap`), and rename
   *    visibility is not atomic on object stores at all. Here a reader
   *    resolves `_CURRENT` once and reads an immutable version (directory
@@ -5239,31 +5239,30 @@ object VersionedSnapshot {
     throw new IllegalStateException("unreachable")
   }
 
+  /** Apply one micro-batch at most once per checkpoint lineage: skip it
+    * when the table's marker already covers `batchId` of `checkpointTag`
+    * ([[MicroBatch.applied]]), else run `commit` with the batch's marker.
+    * The marker commits with the pointer flip, so the skip is exact. A
+    * concurrent maintenance compactor (or ad-hoc merge) can win the CAS
+    * against a micro-batch; `commit` then re-runs whole against the
+    * winner's table ([[retryOnConflict]]), keeping the sink exactly-once
+    * and the stream alive. */
+  private def applyOnce(spark: SparkSession, baseDir: String,
+      checkpointTag: String, batchId: Long)(commit: String => Unit): Unit =
+    if (!MicroBatch.applied(lastApplied(spark, baseDir), checkpointTag, batchId))
+      retryOnConflict()(commit(s"$checkpointTag:$batchId"))
+
   /** One delta-staging cycle driven by a micro-batch — [[stageDelta]]
-    * with the checkpoint-lineage replay skip and last-writer-wins batch
-    * reduction of [[mergeIntoBatch]]. */
+    * with the replay skip of [[applyOnce]] and the last-writer-wins batch
+    * reduction of [[MicroBatch.latestPerKey]]. */
   private[graft] def stageDeltaBatch(batch: DataFrame, keys: Seq[String],
       orderCol: String, baseDir: String, checkpointTag: String,
       batchId: Long, action: MatchedAction = UpdateMatched,
       retain: Int = 2, numBuckets: Int = 32): Unit = {
-    val spark = batch.sparkSession
-    val (tag, lastId) = lastApplied(spark, baseDir)
-    if (!(tag == checkpointTag && lastId >= batchId)) {
-      val w = org.apache.spark.sql.expressions.Window
-        .partitionBy(keys.map(col): _*)
-        .orderBy(col(orderCol).desc)
-      val latest = batch
-        .withColumn("__rn", org.apache.spark.sql.functions.row_number().over(w))
-        .filter(col("__rn") === 1).drop("__rn", orderCol)
-      // a concurrent maintenance compactor (or ad-hoc merge) can win the
-      // CAS against a micro-batch; the retry re-runs the whole staging
-      // against the compacted table, keeping the sink exactly-once
-      retryOnConflict() {
-        stageDelta(baseDir, latest, keys, action,
-          marker = s"$checkpointTag:$batchId", retain = retain,
-          numBuckets = numBuckets)
-      }
-      ()
+    val latest = MicroBatch.latestPerKey(batch, keys, orderCol)
+    applyOnce(batch.sparkSession, baseDir, checkpointTag, batchId) { marker =>
+      stageDelta(baseDir, latest, keys, action, marker = marker,
+        retain = retain, numBuckets = numBuckets)
     }
   }
 
@@ -5283,54 +5282,35 @@ object VersionedSnapshot {
       baseDir: String, checkpoint: String, retain: Int = 2,
       numBuckets: Int = 32, maxOverlays: Int = 8)
       : DataStreamWriter[org.apache.spark.sql.Row] =
-    updates.writeStream
-      .outputMode(OutputMode.Append)
-      .option("checkpointLocation", checkpoint)
-      .trigger(Trigger.AvailableNow())
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        stageDeltaBatch(batch, keys, orderCol, baseDir,
-          checkpointTag = checkpoint, batchId = batchId, retain = retain,
-          numBuckets = numBuckets)
-        if (maxOverlays != Int.MaxValue)
-          // an external writer racing the fold must not fail the stream
-          retryOnConflict() {
-            maintain(batch.sparkSession, baseDir, keys,
-              marker = s"$checkpoint:$batchId", maxOverlays = maxOverlays,
-              retain = retain)
-          }
-        ()
-      }
+    MicroBatch.drain(updates, checkpoint) { (batch, batchId) =>
+      stageDeltaBatch(batch, keys, orderCol, baseDir,
+        checkpointTag = checkpoint, batchId = batchId, retain = retain,
+        numBuckets = numBuckets)
+      if (maxOverlays != Int.MaxValue)
+        // an external writer racing the fold must not fail the stream
+        retryOnConflict() {
+          maintain(batch.sparkSession, baseDir, keys,
+            marker = s"$checkpoint:$batchId", maxOverlays = maxOverlays,
+            retain = retain)
+        }
+      ()
+    }
 
   /** One MERGE INTO cycle driven by a micro-batch — [[mergeInto]] with
-    * the same checkpoint-lineage replay skip as [[mergeBatch]]: a
-    * restarted stream re-delivering an already-applied batch id leaves
-    * the snapshot untouched (the marker records (tag, batchId), and the
-    * pointer flip made it atomic), so the sink is effectively-once. The
-    * batch is first reduced to ONE row per key — last writer by
-    * `orderCol` wins, the standard CDC convention — because a micro-batch
-    * can legally carry several updates for one key while MERGE requires
-    * unique source keys. */
+    * the replay skip of [[applyOnce]]: a restarted stream re-delivering an
+    * already-applied batch id leaves the snapshot untouched, so the sink
+    * is effectively-once. The batch is first reduced to ONE row per key
+    * ([[MicroBatch.latestPerKey]]), because a micro-batch can legally
+    * carry several updates for one key while MERGE requires unique source
+    * keys. */
   private[graft] def mergeIntoBatch(batch: DataFrame, keys: Seq[String],
       orderCol: String, baseDir: String, checkpointTag: String,
       batchId: Long, whenMatched: MatchedAction = UpdateMatched,
       retain: Int = 2, numBuckets: Int = 32): Unit = {
-    val spark = batch.sparkSession
-    val (tag, lastId) = lastApplied(spark, baseDir)
-    if (!(tag == checkpointTag && lastId >= batchId)) {
-      val w = org.apache.spark.sql.expressions.Window
-        .partitionBy(keys.map(col): _*)
-        .orderBy(col(orderCol).desc)
-      val latest = batch
-        .withColumn("__rn", org.apache.spark.sql.functions.row_number().over(w))
-        .filter(col("__rn") === 1).drop("__rn", orderCol)
-      // same contract as stageDeltaBatch: a racing maintenance commit
-      // must not fail the stream — re-run the merge against its result
-      retryOnConflict() {
-        mergeInto(baseDir, latest, keys, whenMatched,
-          insertUnmatched = true, marker = s"$checkpointTag:$batchId",
-          retain = retain, numBuckets = numBuckets)
-      }
-      ()
+    val latest = MicroBatch.latestPerKey(batch, keys, orderCol)
+    applyOnce(batch.sparkSession, baseDir, checkpointTag, batchId) { marker =>
+      mergeInto(baseDir, latest, keys, whenMatched, insertUnmatched = true,
+        marker = marker, retain = retain, numBuckets = numBuckets)
     }
   }
 
@@ -5345,58 +5325,49 @@ object VersionedSnapshot {
   def mergeSink(updates: DataFrame, keys: Seq[String], orderCol: String,
       baseDir: String, checkpoint: String, retain: Int = 2,
       numBuckets: Int = 32): DataStreamWriter[org.apache.spark.sql.Row] =
-    updates.writeStream
-      .outputMode(OutputMode.Append)
-      .option("checkpointLocation", checkpoint)
-      .trigger(Trigger.AvailableNow())
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        mergeIntoBatch(batch, keys, orderCol, baseDir,
-          checkpointTag = checkpoint, batchId = batchId, retain = retain,
-          numBuckets = numBuckets)
-      }
+    MicroBatch.drain(updates, checkpoint) { (batch, batchId) =>
+      mergeIntoBatch(batch, keys, orderCol, baseDir,
+        checkpointTag = checkpoint, batchId = batchId, retain = retain,
+        numBuckets = numBuckets)
+    }
 
-  /** One merge cycle against the versioned snapshot — the
-    * [[StreamingKpis.mergeBatchIntoSnapshot]] logic (mergeable
-    * (count,sum,min,max) partials, checkpoint-lineage-scoped replay skip)
-    * re-based on [[publish]]'s pointer commit. */
+  /** One merge cycle against the versioned snapshot: the batch's
+    * mergeable (count, sum, min, max) partials per key
+    * ([[graft.operators.Incremental.partials]]) merged into the current
+    * version and published through [[publish]]'s pointer commit, with the
+    * replay skip of [[applyOnce]]. Per-batch work is O(batch + snapshot
+    * keys), never a rescan of history. */
   private[graft] def mergeBatch(batch: DataFrame, keys: Seq[String],
       valueCol: String, baseDir: String, checkpointTag: String,
       batchId: Long, retain: Int = 2): Unit = {
     val spark = batch.sparkSession
-    val (tag, lastId) = lastApplied(spark, baseDir)
-    if (!(tag == checkpointTag && lastId >= batchId)) {
-      val partial = graft.operators.Incremental.partials(batch, keys, col(valueCol))
-      // the retry scope is read+merge+publish, NOT publish alone: a
-      // conflict means the snapshot changed, so the merge itself must
-      // recompute against the winner's rows or they would be lost. The
-      // basis version is pinned per attempt and travels to the CAS.
-      retryOnConflict() {
-        val basis = currentVersion(spark, baseDir)
-        withBasis(spark, baseDir, basis.getOrElse(-1L)) {
-          val merged = basis.map(versionFrame(spark, baseDir, _)) match {
-            case Some(snap) => graft.operators.Incremental.merge(Seq(snap, partial), keys)
-            case None => partial
-          }
-          publish(merged, baseDir, s"$checkpointTag:$batchId", retain,
-            expected = Some(basis.getOrElse(-1L)))
+    val partial = graft.operators.Incremental.partials(batch, keys, col(valueCol))
+    // the retry scope is read+merge+publish, NOT publish alone: a
+    // conflict means the snapshot changed, so the merge itself must
+    // recompute against the winner's rows or they would be lost. The
+    // basis version is pinned per attempt and travels to the CAS.
+    applyOnce(spark, baseDir, checkpointTag, batchId) { marker =>
+      val basis = currentVersion(spark, baseDir)
+      withBasis(spark, baseDir, basis.getOrElse(-1L)) {
+        val merged = basis.map(versionFrame(spark, baseDir, _)) match {
+          case Some(snap) => graft.operators.Incremental.merge(Seq(snap, partial), keys)
+          case None => partial
         }
+        publish(merged, baseDir, marker, retain,
+          expected = Some(basis.getOrElse(-1L)))
       }
-      ()
     }
   }
 
   /** Streaming sink: maintain the versioned snapshot from a stream of new
-    * rows — [[StreamingKpis.incrementalSnapshot]] with the pointer commit
-    * in place of the rename-swap. */
+    * rows, one [[mergeBatch]] per micro-batch — the streaming form of the
+    * reference's hourly full refresh that survives a long history with a
+    * small hourly batch. */
   def sink(events: DataFrame, keys: Seq[String], valueCol: String,
       baseDir: String, checkpoint: String, retain: Int = 2)
       : DataStreamWriter[org.apache.spark.sql.Row] =
-    events.writeStream
-      .outputMode(OutputMode.Append)
-      .option("checkpointLocation", checkpoint)
-      .trigger(Trigger.AvailableNow())
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        mergeBatch(batch, keys, valueCol, baseDir,
-          checkpointTag = checkpoint, batchId = batchId, retain = retain)
-      }
+    MicroBatch.drain(events, checkpoint) { (batch, batchId) =>
+      mergeBatch(batch, keys, valueCol, baseDir,
+        checkpointTag = checkpoint, batchId = batchId, retain = retain)
+    }
 }

@@ -1,9 +1,8 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
-import graft.Tables
+import graft.{GraftSession, Tables}
 
 /** Builds an SF-dilated corpus for scale-evidence runs: `factor` key-
   * shifted copies of a source SF's `documents` / `embeddings` / `events`
@@ -30,11 +29,8 @@ object Dilate {
     val outDir = args.lift(1).getOrElse("/tmp/sf1eq")
     val factor = args.lift(2).map(_.toInt).getOrElse(10)
     val stride = 100000000L // far above any source id
-    val spark = SparkSession.builder()
+    val spark = GraftSession.builder("dilate", shufflePartitions = 32)
       .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")}]")
-      .config("spark.sql.shuffle.partitions", 32)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
 

@@ -1,7 +1,6 @@
 package graft.tools
 
-import graft.SparkEntry
-import org.apache.spark.sql.SparkSession
+import graft.{GraftSession, SparkEntry}
 
 /** Dev profiler: run a named query warm, then sample the DRIVER thread
   * executing it every ~10 ms and aggregate stacks by the deepest
@@ -17,13 +16,8 @@ object HotSample {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.1")
     val name = args(1)
     val topN = args.lift(2).flatMap(_.toIntOption).getOrElse(40)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt
+    val spark = GraftSession.local(cpus, "hot-sample")
     spark.sparkContext.setLogLevel("WARN")
     val fn = SparkEntry.queries(name)
     fn(spark, sfDir).write.format("noop").mode("overwrite").save() // warm

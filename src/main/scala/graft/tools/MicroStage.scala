@@ -1,6 +1,6 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
+import graft.GraftSession
 import org.apache.spark.sql.functions._
 
 /** Dev micro-benchmark: what does one tiny shuffle-aggregate action and
@@ -13,13 +13,8 @@ import org.apache.spark.sql.functions._
 object MicroStage {
   def main(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt
+    val spark = GraftSession.local(cpus, "micro-stage")
     spark.sparkContext.setLogLevel("WARN")
     if (sys.env.contains("MICRO_FASTFS")) graft.io.LocalFs.installFast(spark)
     import spark.implicits._

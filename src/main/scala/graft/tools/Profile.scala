@@ -1,6 +1,6 @@
 package graft.tools
 
-import graft.SparkEntry
+import graft.{GraftSession, SparkEntry}
 import org.apache.spark.sql.SparkSession
 
 /** Dev profiler: run named queries (all if none given) with cold+warm
@@ -13,13 +13,8 @@ object Profile {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.1")
     val explain = args.contains("-explain")
     val names = args.drop(1).filterNot(_ == "-explain")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt
+    val spark = GraftSession.local(cpus, "profile")
     spark.sparkContext.setLogLevel("WARN")
     val selected: Seq[(String, (SparkSession, String) => org.apache.spark.sql.DataFrame)] =
       if (names.isEmpty) SparkEntry.queries.toSeq.sortBy(_._1)

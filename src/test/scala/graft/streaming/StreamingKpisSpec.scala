@@ -58,11 +58,11 @@ class StreamingKpisSpec extends SparkSpec {
         inDir.toString, maxFilesPerTrigger = 1)
       .withColumn("v", length(col("track_id")).cast("long"))
     val snap = dir.resolve("snap").toString
-    val q = StreamingKpis.incrementalSnapshot(stream, Seq("user_id"), "v",
+    val q = VersionedSnapshot.sink(stream, Seq("user_id"), "v",
       snap, dir.resolve("ckpt").toString).start()
     q.awaitTermination(60000)
 
-    val got = spark.read.parquet(snap)
+    val got = VersionedSnapshot.read(spark, snap).get
       .selectExpr("user_id", "n", "sum_v").collect()
       .map(r => (r.getAs[Number]("user_id").longValue(),
         r.getAs[Long]("n"), r.getAs[Long]("sum_v"))).toSet
@@ -85,30 +85,30 @@ class StreamingKpisSpec extends SparkSpec {
       .withColumn("v", length(col("track_id")).cast("long"))
     val snap = dir.resolve("snap").toString
     val ckpt = dir.resolve("ckpt1").toString
-    StreamingKpis.incrementalSnapshot(stream, Seq("user_id"), "v", snap, ckpt)
+    VersionedSnapshot.sink(stream, Seq("user_id"), "v", snap, ckpt)
       .start().awaitTermination(60000)
-    def read() = spark.read.parquet(snap)
+    def read() = VersionedSnapshot.read(spark, snap).get
       .selectExpr("user_id", "n", "sum_v").collect()
       .map(r => (r.getAs[Number]("user_id").longValue(),
         r.getAs[Long]("n"), r.getAs[Long]("sum_v"))).toSet
     val first = read()
     assert(first == Set((1L, 2L, 4L), (2L, 1L, 2L)))
     // same-lineage replay: re-deliver batchId 0 under the SAME checkpoint
-    // tag — exactly what foreachBatch does after a crash between the swap
-    // and the checkpoint commit. Must be skipped, not double-counted.
+    // tag — exactly what foreachBatch does after a crash between the
+    // commit and the checkpoint commit. Must be skipped, not double-counted.
     val batchDf = spark.read.schema(Sources.streamsSchema)
       .option("header", "true").csv(inDir.toString)
       .withColumn("v", length(col("track_id")).cast("long"))
-    StreamingKpis.mergeBatchIntoSnapshot(batchDf, Seq("user_id"), "v", snap,
+    val committed = VersionedSnapshot.currentVersion(spark, snap)
+    VersionedSnapshot.mergeBatch(batchDf, Seq("user_id"), "v", snap,
       checkpointTag = ckpt, batchId = 0L)
     assert(read() == first, "same-lineage replayed batch was merged twice")
-    // the swap never leaves working dirs behind
-    assert(!java.nio.file.Files.exists(java.nio.file.Paths.get(snap + ".tmp")))
-    assert(!java.nio.file.Files.exists(java.nio.file.Paths.get(snap + ".old")))
+    // the skipped replay commits nothing
+    assert(committed.isDefined && VersionedSnapshot.currentVersion(spark, snap) == committed)
     // lineage reset: a DIFFERENT checkpoint tag with restarted batchIds is
     // NOT a replay — batchId 0 may now carry never-seen data, so it merges
     // (at-least-once across resets; skipping on id alone would lose data)
-    StreamingKpis.mergeBatchIntoSnapshot(batchDf, Seq("user_id"), "v", snap,
+    VersionedSnapshot.mergeBatch(batchDf, Seq("user_id"), "v", snap,
       checkpointTag = dir.resolve("ckpt2").toString, batchId = 0L)
     assert(read() == Set((1L, 4L, 8L), (2L, 2L, 4L)),
       "lineage-reset batch should have merged")

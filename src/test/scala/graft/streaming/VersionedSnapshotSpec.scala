@@ -959,6 +959,35 @@ class VersionedSnapshotSpec extends SparkSpec {
     assert(VersionedSnapshot.lastApplied(spark, base) == ("ck", 7L))
   }
 
+  test("CDC batch sinks reject an orderCol key and a reserved __rn column before staging") {
+    import spark.implicits._
+    val base = Files.createTempDirectory("graft-guard").resolve("snap").toString
+    VersionedSnapshot.mergeIntoBatch(
+      Seq((1L, "a", 1L)).toDF("user_id", "track_id", "seq"), Seq("user_id"),
+      "seq", base, checkpointTag = "ck", batchId = 0L, numBuckets = 4)
+    val v0 = VersionedSnapshot.currentVersion(spark, base)
+    assert(v0.isDefined)
+    val batch = Seq((2L, "b", 2L)).toDF("user_id", "track_id", "seq")
+    type BatchSink = (org.apache.spark.sql.DataFrame, Seq[String]) => Unit
+    val sinks: Seq[(String, BatchSink)] = Seq(
+      "mergeIntoBatch" -> ((df, keys) => VersionedSnapshot.mergeIntoBatch(
+        df, keys, "seq", base, checkpointTag = "ck", batchId = 1L, numBuckets = 4)),
+      "stageDeltaBatch" -> ((df, keys) => VersionedSnapshot.stageDeltaBatch(
+        df, keys, "seq", base, checkpointTag = "ck", batchId = 1L, numBuckets = 4)))
+    for ((name, sink) <- sinks) {
+      // dropping the order column after the reduce would drop this key
+      val e1 = intercept[IllegalArgumentException](sink(batch, Seq("user_id", "seq")))
+      assert(e1.getMessage.contains("orderCol"), name)
+      // the internal rank column would replace, then drop, the input's own
+      val e2 = intercept[IllegalArgumentException](
+        sink(batch.withColumn("__rn", lit(7)), Seq("user_id")))
+      assert(e2.getMessage.contains("__rn"), name)
+      assert(VersionedSnapshot.currentVersion(spark, base) == v0,
+        s"$name committed a rejected batch")
+    }
+    assert(VersionedSnapshot.read(spark, base).get.columns.toSet == Set("user_id", "track_id"))
+  }
+
   test("maintain() compacts from metadata thresholds only: overlay pile-up and generation sprawl") {
     import spark.implicits._
     import VersionedSnapshot.{UpdateMatched, maintain}
