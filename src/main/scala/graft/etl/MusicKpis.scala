@@ -17,9 +17,11 @@ import org.apache.spark.sql.functions._
   * Scale notes: both dimension joins broadcast (songs ~114k rows, users 50k
   * — far under the broadcast threshold; at 100 TB the fact side streams
   * through map-side hash joins with zero shuffle). The aggregations are
-  * hash aggregates with map-side partial combine; the mode/top-k kernels run
-  * on the *pre-aggregated* counts relation (|groups × distinct values|, not
-  * |rows| — see [[graft.operators.GroupTop]]).
+  * hash aggregates with map-side partial combine. The genre mode is one more
+  * aggregate function of the genre aggregate (its buffer is a value→count map
+  * per group); the hourly top-k runs on the *pre-aggregated* counts relation
+  * (|groups × distinct values|, not |rows| — see
+  * [[graft.operators.GroupTop]]).
   */
 object MusicKpis {
 
@@ -57,15 +59,16 @@ object MusicKpis {
       modeOut: String = "most_popular",
       dropNullGroups: Boolean = false): DataFrame = {
     val base0 = if (dropNullGroups) enriched.filter(col(genreCol).isNotNull) else enriched
-    val kpis = base0
+    // deterministic `mode` ignores nulls and breaks count ties by the lowest
+    // value (UTF-8 byte order for strings), like GroupTop.mode; an all-null
+    // group yields NULL (pandas `mode()[0] if not empty else None`,
+    // reference `:190-193`).
+    base0
       .groupBy(col(genreCol), col("date"))
       .agg(
         count(col(countCol)).as("listen_count"),
-        avg(col(avgCol)).as("avg_duration"))
-    val modes = GroupTop.mode(base0, Seq(genreCol, "date"), modeCol, modeOut)
-    // left join: all-null-mode groups keep a NULL mode (pandas `mode()[0] if
-    // not empty else None`, reference `:190-193`).
-    kpis.join(modes, Seq(genreCol, "date"), "left")
+        avg(col(avgCol)).as("avg_duration"),
+        mode(col(modeCol), deterministic = true).as(modeOut))
   }
 
   /** A2: per-hour KPIs — exact distinct listeners, rank-ordered top-k values
@@ -91,6 +94,9 @@ object MusicKpis {
       .agg(
         distinctOf(userCol).as("unique_listeners"),
         (distinctOf(trackCol).cast("double") / count(lit(1))).as("track_diversity_index"))
+    // the window form, not a one-pass `Aggregates.topk_agg`: the typed
+    // hash-map buffer rides the Expand of the two distinct counts and
+    // measured slower (see [[graft.operators.Aggregates]])
     val top = GroupTop.topK(enriched, Seq("hour"), artistCol, k, "top_artists")
     base.join(top, Seq("hour"), "left")
       .select(col("hour"), col("unique_listeners"), col("top_artists"), col("track_diversity_index"))

@@ -21,10 +21,12 @@ import org.apache.spark.sql.functions._
   */
 object GroupTop {
 
-  /** Most frequent non-null `valueCol` per group; ties → smallest value.
-    * Groups whose `valueCol` is entirely null are dropped (pandas-mode
-    * parity for grouped KPIs is handled by callers via a left join back —
-    * see [[graft.etl.MusicKpis]]).
+  /** Most frequent non-null `valueCol` per group; ties → smallest value
+    * (UTF-8 byte order for strings). Groups whose `valueCol` is entirely
+    * null are dropped; a caller that needs them with a NULL mode (pandas
+    * `mode()[0] if not empty else None`) uses Spark's `mode(col, true)`
+    * inside its own aggregate, which breaks ties the same way — see
+    * [[graft.etl.MusicKpis.genreKpis]].
     *
     * Output: groupCols :+ out.
     */

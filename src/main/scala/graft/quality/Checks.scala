@@ -2,6 +2,7 @@ package graft.quality
 
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{ArrayType, DataType, MapType, StructType, VariantType}
 
 /** Data-quality operator family.
   *
@@ -104,20 +105,42 @@ object Checks {
   }
 
   /** [[run]] for many tables in ONE job: each table's scalar checks (no
-    * `Unique`, as in [[observed]]) ride an [[observed]] scan of it, and the union of those scans (projected
-    * to no columns) is written to the `noop` sink. Reports come back in
-    * input order; enforcing them in that order throws the same message as
-    * one [[run]] per table. Every call builds fresh `Observation`s (Spark
-    * allows one action per `Observation`), so the same frames can be
-    * checked again, e.g. by a retried stage. */
+    * `Unique`, as in [[observed]]) ride an [[observed]] scan of it, and the
+    * union of those scans (each projected to [[readsEveryColumn]]) is
+    * written to the `noop` sink. The scan reads every column, so a strict
+    * source (FAILFAST CSV/JSON) parses all of its fields here, and a
+    * malformed one fails this job rather than whichever later plan first
+    * reads that column. Reports come back in input order; enforcing them in
+    * that order throws the same message as one [[run]] per table. Every
+    * call builds fresh `Observation`s (Spark allows one action per
+    * `Observation`), so the same frames can be checked again, e.g. by a
+    * retried stage. */
   def runAll(tables: Seq[(DataFrame, Seq[Check])]): Seq[QualityReport] = {
     require(tables.nonEmpty, "runAll() needs at least one table")
     val observedScans = tables.zipWithIndex.map { case ((df, checks), i) =>
       observed(df, checks, s"graft_quality_$i")
     }
-    observedScans.map(_._1.select()).reduce(_ union _)
+    observedScans.map { case (df, _) => df.select(readsEveryColumn(df.schema)) }
+      .reduce(_ union _)
       .write.format("noop").mode("overwrite").save()
     observedScans.zip(tables).map { case ((_, obs), (_, checks)) => reportFrom(obs, checks) }
+  }
+
+  /** One int column that references every column of `schema`, so column
+    * pruning keeps them all. `hash` rejects maps and variants at any
+    * depth; a top-level column holding one is hashed as its JSON text. */
+  private def readsEveryColumn(schema: StructType): Column =
+    if (schema.isEmpty) lit(0)
+    else hash(schema.fields.toSeq.map { f =>
+      val c = col(s"`${f.name.replace("`", "``")}`")
+      if (unhashable(f.dataType)) to_json(c) else c
+    }: _*).as("row_hash")
+
+  private def unhashable(t: DataType): Boolean = t match {
+    case _: MapType | _: VariantType => true
+    case ArrayType(e, _) => unhashable(e)
+    case s: StructType => s.fields.exists(f => unhashable(f.dataType))
+    case _ => false
   }
 
   /** Materialize `df` with its checks riding the same action: collect the

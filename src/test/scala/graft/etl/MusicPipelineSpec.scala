@@ -10,7 +10,8 @@ import scala.jdk.CollectionConverters._
   * users/songs/streams shapes. */
 class MusicPipelineSpec extends SparkSpec {
 
-  private def writeFixtures(dir: Path, badStreams: Boolean = false): PipelineConfig = {
+  private def writeFixtures(dir: Path, badStreams: Boolean = false,
+      badDanceability: Boolean = false): PipelineConfig = {
     Files.writeString(dir.resolve("users.csv"),
       """user_id,user_name,user_age,user_country,created_at
         |1,Alice,30,US,2024-01-01
@@ -23,7 +24,7 @@ class MusicPipelineSpec extends SparkSpec {
     Files.writeString(dir.resolve("songs.csv"),
       s"""$songCols
          |1,t1,Artist 1,Alb,Song A,50,200000,false,0.5,0.5,1,-5.0,1,0.1,0.1,0.0,0.1,0.5,120.0,4,rock
-         |2,t2,Artist 2,Alb,Song B,40,100000,false,0.5,0.5,1,-5.0,1,0.1,0.1,0.0,0.1,0.5,120.0,4,rock
+         |2,t2,Artist 2,Alb,Song B,40,100000,false,${if (badDanceability) "lively" else "0.5"},0.5,1,-5.0,1,0.1,0.1,0.0,0.1,0.5,120.0,4,rock
          |3,t3,Artist 1,Alb,Song C,30,300000,true,0.5,0.5,1,-5.0,1,0.1,0.1,0.0,0.1,0.5,120.0,4,jazz
          |""".stripMargin)
     val streamRows =
@@ -74,6 +75,15 @@ class MusicPipelineSpec extends SparkSpec {
     assert(e.getCause.getMessage.contains("no_nulls"))
   }
 
+  test("a malformed field in a column no KPI reads fails validate_data, before any KPI work") {
+    val dir = Files.createTempDirectory("graft-pipe-malformed")
+    val cfg = writeFixtures(dir, badDanceability = true)
+    val e = intercept[PipelineFailure](MusicPipeline.run(spark, cfg))
+    assert(e.stage == "validate_data")
+    val causes = Iterator.iterate(e.getCause: Throwable)(_.getCause).takeWhile(_ != null)
+    assert(causes.exists(c => String.valueOf(c.getMessage).contains("lively")), e)
+  }
+
   /** The contents of the part files under `dir`, in file-name order. */
   private def partFiles(dir: String): Seq[String] = {
     val files = Files.list(Path.of(dir))
@@ -116,10 +126,9 @@ class MusicPipelineSpec extends SparkSpec {
     assert(jobs.get("load_genre_kpis").contains(1), jobs)
     assert(jobs.get("load_hourly_kpis").contains(1), jobs)
     assert(!jobs.contains(""), jobs)
-    // measured on these fixtures, stage by stage: 1 + 0 + 15 + 1 + 1 = 18
-    // jobs (validate_kpis runs each KPI plan once, mode and top-k windows
-    // included). With one check job per input, a check aggregate per KPI
-    // and loads that recomputed the plans it was 6 + 0 + 13 + 5 + 6 = 30.
-    assert(jobs.values.sum <= 18, jobs)
+    // measured on these fixtures, stage by stage: 1 + 0 + 11 + 1 + 1 = 14
+    // jobs (validate_kpis runs each KPI plan once: the genre mode inside its
+    // aggregate, the hourly top-k window included)
+    assert(jobs.values.sum <= 14, jobs)
   }
 }

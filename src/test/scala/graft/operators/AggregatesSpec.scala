@@ -1,7 +1,8 @@
 package graft.operators
 
 import graft.SparkSpec
-import org.apache.spark.sql.functions.col
+import graft.etl.MusicKpis
+import org.apache.spark.sql.functions.{col, lit}
 import org.scalacheck.Gen
 import org.scalacheck.rng.Seed
 
@@ -68,5 +69,23 @@ class AggregatesSpec extends SparkSpec {
     val viaWindow = GroupTop.mode(df, Seq("g"), "v", "m")
       .collect().map(r => r.getString(0) -> r.getString(1)).toMap
     assert(viaWindow("g1") == viaAgg("g1")._1)
+  }
+
+  test("every mode/top-k form breaks a count tie in UTF-8 byte order, not UTF-16") {
+    // "Ａ" (U+FF21) is EF BC A1 in UTF-8 and "😀" (U+1F600) is F0 9F 98 80,
+    // so "Ａ" is the smaller in bytes; in UTF-16 "😀" (D83D DE00) sorts first
+    val (fullA, smile) = ("\uFF21", "\uD83D\uDE00")
+    val df = Seq(smile, fullA, fullA, smile).toDF("v")
+      .withColumn("g", lit("g")).withColumn("date", lit("2024-06-25").cast("date"))
+      .withColumn("d", lit(1.0))
+    assert(GroupTop.mode(df, Seq("g"), "v", "m").head().getString(1) == fullA)
+    assert(GroupTop.topK(df, Seq("g"), "v", 2, "t").head().getSeq[String](1) == Seq(fullA, smile))
+    val viaAgg = df.groupBy("g")
+      .agg(Aggregates.mode_agg(col("v")), Aggregates.topk_agg(2)(col("v"))).head()
+    assert(viaAgg.getString(1) == fullA)
+    assert(viaAgg.getSeq[String](2) == Seq(fullA, smile))
+    val genre = MusicKpis.genreKpis(df, genreCol = "g", countCol = "v", avgCol = "d",
+      modeCol = "v", modeOut = "m").head()
+    assert(genre.getAs[String]("m") == fullA)
   }
 }

@@ -4,6 +4,7 @@ import graft.{JobCounter, SparkSpec}
 import graft.io.Sources
 import java.nio.file.Files
 import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.functions.{lit, parse_json}
 import scala.concurrent.{Await, Future}
 import scala.concurrent.ExecutionContext.Implicits.global
 import scala.concurrent.duration._
@@ -121,6 +122,19 @@ class ChecksSpec extends SparkSpec {
     val (reports, jobs) = JobCounter(spark)(Checks.runAll(tables))
     assert(reports.map(_.results) == tables.map { case (df, checks) => Checks.run(df, checks).results })
     assert(reports.map(_.passed) == Seq(true, false, false))
+    assert(jobs.values.sum == 1, jobs)
+  }
+
+  test("runAll reads frames with map, array and struct columns: same reports as run, in one job") {
+    val nested = Seq(
+      (Some(1), Map("a" -> 1), Seq(Map(1 -> "x")), ("s", Map(2 -> "y"))),
+      (None, Map.empty[String, Int], Seq.empty[Map[Int, String]], ("t", Map.empty[Int, String])))
+      .toDF("id", "m", "arr", "st")
+      .withColumn("var", parse_json(lit("""{"a": 1}""")))
+    val tables = (nested -> Seq(NotEmpty, NoNulls(Seq("id", "m")))) +: triple
+    val (reports, jobs) = JobCounter(spark)(Checks.runAll(tables))
+    assert(reports.map(_.results) == tables.map { case (df, checks) => Checks.run(df, checks).results })
+    assert(reports.map(_.passed) == Seq(false, true, false, false))
     assert(jobs.values.sum == 1, jobs)
   }
 

@@ -24,7 +24,7 @@ if [ "${1:-}" != "--quick" ]; then
 fi
 
 echo "== gate: 4-query bench smoke (sf0.001) =="
-SMOKE=$(SPARK_GRAFT_SF_DIR=/root/testdata/sf0.001 SPARK_GRAFT_CPUS=16 \
+SMOKE=$(SPARK_GRAFT_SF_DIR=/root/testdata/sf0.001 SPARK_GRAFT_CPUS="$(env -u OMP_NUM_THREADS nproc)" \
   tools/run.sh graft.Bench dedup_embed_keepers,margin_align_pairs,hybrid_rrf_topk,dup_graph_kcore \
   2>/dev/null | grep '"metric"' | tail -1)
 [ -n "$SMOKE" ] || fail "bench smoke produced no JSON line"
