@@ -67,6 +67,13 @@ import org.apache.spark.sql.streaming.DataStreamWriter
   *    flip leaves extra old versions — pruned likewise. There is no
   *    recovery dance at batch start; the pointer IS the commit.
   *
+  * Every operation that writes a new version — publish, merge, compact,
+  * overlay staging, restore, clone, rename/drop column, the purge bump —
+  * commits through ONE protocol, [[commit]]: basis check → claim →
+  * stage → record → pointer CAS → retention, aborting its claim on any
+  * in-JVM failure. Only purge's in-place pass rewrites committed versions
+  * outside it.
+  *
   * Concurrent writers (r11): publishes run OPTIMISTICALLY, the
   * Delta/Iceberg commit discipline reduced to the same plain-file
   * machinery. Each publish first CLAIMS its version number (an atomic
@@ -212,18 +219,20 @@ object VersionedSnapshot {
     "graft.snapshot.test.failBeforeReplicateUpsert"
   /** Spec-only power-loss seam: when the active session's conf names one
     * of the seam points, the JVM halts outright — `Runtime.halt` skips
-    * finally blocks, [[guardStaged]]'s abort, and shutdown hooks,
+    * finally blocks, the [[commit]] protocol's abort, and shutdown hooks,
     * modeling a writer killed mid-operation (kill -9, OOM-killer, node
     * loss) the way an in-JVM thrown exception cannot. Driven only from a
     * child JVM spawned by CrashRecoverySpec; the parent process then
-    * proves readers hold and the next writer heals the litter. Points:
-    * `staged-data` (bucket files written, no record), `staged-sidecars`
-    * (commit record written — the single pre-flip metadata step — pointer
-    * not flipped; every staging path passes it), `post-flip` (pointer
-    * flipped, claim NOT released, commit lock still held), `mid-retention`
-    * (old versions dropped, orphan gc not run), `staged-overlay`
-    * (overlay file written, version dir absent), `mid-purge` (first
-    * retained version purged, the rest not). */
+    * proves readers hold and the next writer heals the litter. The three
+    * commit phases fire once each, in [[commit]], for every operation
+    * that commits a new version: `staged-data` (the stage ran — data,
+    * overlay or retraction files written, or nothing for a metadata-only
+    * commit — claim live, no record), `staged-sidecars` (commit record
+    * written, pointer not flipped), `post-flip` (pointer flipped, claim
+    * NOT released, commit lock still held). Beside them:
+    * `mid-retention` (old versions dropped, orphan gc not run) and
+    * `mid-purge` (first retained version purged in place, the rest
+    * not). */
   private[graft] val HaltAtConf = "graft.snapshot.test.haltAt"
   /** JVM system property that ARMS the halt seam. `Runtime.halt` must
     * not be reachable from a session conf alone — on a shared driver,
@@ -1474,9 +1483,10 @@ object VersionedSnapshot {
     currentVersion(spark, baseDir).map(v =>
       recordOf(fs(spark, baseDir), versionPath(new Path(baseDir), v)))
 
-  /** Write version dir `target`'s record — the single pre-flip metadata
-    * step of every staging path: the inventory is listed and the staging
-    * time stamped here. */
+  /** Write version dir `target`'s record (creating the dir when the stage
+    * wrote nothing into it) — the single pre-flip metadata step of the
+    * [[commit]] protocol: the inventory is listed and the staging time
+    * stamped here. */
   private def stageRecord(f: FileSystem, base: Path, target: Path, rec: Commit): Unit = {
     writeSmallFile(f, new Path(target, CommitName),
       rec.copy(inventory = inventory(f, base, target, rec),
@@ -2408,19 +2418,16 @@ object VersionedSnapshot {
   def restore(spark: SparkSession, baseDir: String, version: Long,
       marker: String = "restore", retain: Int = 2): Option[Long] = {
     require(retain >= 1, "retain must keep at least the current version")
-    val f = fs(spark, baseDir)
-    val base = new Path(baseDir)
     val current = currentVersion(spark, baseDir).getOrElse(-1L)
     retained(spark, baseDir, version).filter(_ => version <= current).map { src =>
-      if (src.buckets.isEmpty)
-        publish(frameOf(spark, baseDir, version, src), baseDir,
-          s"$marker:v$version", retain, expected = Some(current))
-      else {
-        val next = prepareNext(f, base, current)
-        republishMeta(spark, f, base, next, src.derive(s"$marker:v$version"),
-          expected = current)()
-        applyRetention(f, base, current, next, retain)
-        next
+      val restored = s"$marker:v$version"
+      commit(spark, baseDir, current, Some(retain)) { (_, target) =>
+        if (src.buckets.isDefined) src.derive(restored)
+        else {
+          frameOf(spark, baseDir, version, src).write.mode("overwrite")
+            .parquet(target.toString)
+          Commit(restored)
+        }
       }
     }
   }
@@ -2495,8 +2502,6 @@ object VersionedSnapshot {
     val bucketsOpt = srcRec.buckets
     val deltasOpt = srcRec.deltas
     val cloneMarker = if (marker.nonEmpty) marker else s"clone:$srcBase@v$v"
-    mkdirsFast(df0, dst)
-    val next = prepareNext(df0, dst, -1L)
 
     // the source record with every data ref remapped (old ref → new ref),
     // applied uniformly to the bucket/overlay sections and to the
@@ -2532,8 +2537,7 @@ object VersionedSnapshot {
       val allRefs = bucketsOpt.toSeq.flatMap(_._2.values.flatten) ++
         deltasOpt.toSeq.flatMap(_._2)
       val refMap = allRefs.distinct.map(r => r -> extify(r)).toMap
-      republishMeta(spark, df0, dst, next, cloneRecord(refMap), expected = -1L)()
-      next
+      commit(spark, dstBase, -1L, retain = None)((_, _) => cloneRecord(refMap))
     } else {
       // deep: one fresh local generation dir per distinct source ref,
       // preserving the ref's bucket tail so layout conventions carry
@@ -2553,24 +2557,22 @@ object VersionedSnapshot {
           r -> (if (isFileRef(r)) s"$dir/${r.split('/').last}" else dir)
         } ++ overlayRefs.map(r => r -> s"$DataDirName/${allocGen('d')}")).toMap
       // expand refs to (srcFile, dstFile) pairs — driver does LISTINGS
-      // only; the bytes move in one distributed job below
-      val pairs: Seq[(String, String)] =
-        if (bucketsOpt.isEmpty)
-          // flat source: its data files ARE the version dir's content
-          dataFiles(sf, srcVdir).map { case (name, _) =>
-            (new Path(srcVdir, name).toString,
-              new Path(versionPath(dst, next), name).toString)
-          }
-        else refMap.toSeq.flatMap { case (o, n) =>
+      // only, all before the claim; the bytes move in one distributed job
+      // below. A flat source's data files ARE its version dir's content
+      // and land in the clone's (claimed) version dir.
+      val flatFiles =
+        if (bucketsOpt.isEmpty) dataFiles(sf, srcVdir).map(_._1) else Nil
+      val refPairs: Seq[(String, String)] =
+        refMap.toSeq.flatMap { case (o, n) =>
           val from = resolveRef(src, o)
           if (isFileRef(o)) Seq((from.toString, new Path(dst, n).toString))
           else dataFiles(sf, from).map { case (name, _) =>
             (new Path(from, name).toString, new Path(dst, s"$n/$name").toString)
           }
         }
-      guardStaged(df0, dst, next) {
-        val target = versionPath(dst, next)
-        mkdirsFast(df0, target)
+      commit(spark, dstBase, -1L, retain = None) { (_, target) =>
+        val pairs = refPairs ++ flatFiles.map(name =>
+          (new Path(srcVdir, name).toString, new Path(target, name).toString))
         if (pairs.nonEmpty) {
           // serialize the Hadoop conf as plain pairs (Configuration is not
           // serializable); each task re-opens the filesystems it needs
@@ -2604,10 +2606,8 @@ object VersionedSnapshot {
           require(got.contains(want),
             s"deep clone incomplete: $d has $got bytes, want $want")
         }
-        stageRecord(df0, dst, target, cloneRecord(refMap))
-        commitPointer(spark, df0, dst, next, expected = -1L)
+        cloneRecord(refMap)
       }
-      next
     }
   }
 
@@ -2694,15 +2694,11 @@ object VersionedSnapshot {
     * about the FILES changed), CAS-pinned to the basis. */
   private def commitColMap(spark: SparkSession, baseDir: String, basis: Long,
       src: Commit, newCm: ColMap, marker: String): Long = {
-    val f = fs(spark, baseDir)
-    val base = new Path(baseDir)
     require(src.buckets.isDefined,
       "column mapping requires the bucketed layout — one mergeInto migrates " +
         "a flat table")
-    val next = prepareNext(f, base, basis)
-    republishMeta(spark, f, base, next, src.derive(marker).copy(colMap = newCm),
-      expected = basis)()
-    next
+    commit(spark, baseDir, basis, retain = None)((_, _) =>
+      src.derive(marker).copy(colMap = newCm))
   }
 
   /** Right-to-be-forgotten: physically remove every row matching
@@ -2888,10 +2884,8 @@ object VersionedSnapshot {
     * applied: purge must never age out history. */
   private def purgeCommit(spark: SparkSession, baseDir: String, basis: Long,
       marker: String, keys: Seq[String], keyRows: Seq[Seq[Any]],
-      heldLockToken: Option[String] = None): Unit = {
-    val f = fs(spark, baseDir)
-    val base = new Path(baseDir)
-    val src = recordOf(f, versionPath(base, basis))
+      heldLockToken: Option[String] = None): Long = {
+    val src = recordOf(fs(spark, baseDir), versionPath(new Path(baseDir), basis))
     // retraction dir content: the purged key tuples, typed with the
     // table's key schema (see [[purgedKeys]]). Written into the bump
     // version so the erasure has a CDF-consumable record — the in-place
@@ -2905,12 +2899,10 @@ object VersionedSnapshot {
       val keySchema = org.apache.spark.sql.types.StructType(
         keys.map(k => curSchema(k).copy(name = src.colMap.toPhysical(k))))
       import scala.jdk.CollectionConverters._
-      withMicrosTimestamps(spark) {
-        spark.createDataFrame(
-            keyRows.map(r => org.apache.spark.sql.Row.fromSeq(r)).asJava, keySchema)
-          .coalesce(1).write.mode("overwrite")
-          .parquet(new Path(target, PurgedName).toString)
-      }
+      spark.createDataFrame(
+          keyRows.map(r => org.apache.spark.sql.Row.fromSeq(r)).asJava, keySchema)
+        .coalesce(1).write.mode("overwrite")
+        .parquet(new Path(target, PurgedName).toString)
     }
     // LINEAGE PRESERVATION: overwriting a streaming lineage marker
     // ("tag:batchId") with the purge marker would make lastApplied
@@ -2933,33 +2925,13 @@ object VersionedSnapshot {
     // pointer flip: a purge commit never exists without its record of
     // what it erased.
     val flat = src.buckets.isEmpty
-    val next = prepareNext(f, base, basis)
-    republishMeta(spark, f, base, next,
-        (if (flat) Commit(outMarker) else src.derive(outMarker)).copy(purged = true),
-        expected = basis, heldLockToken = heldLockToken) { target =>
-      if (flat) withMicrosTimestamps(spark) {
+    commit(spark, baseDir, basis, retain = None, heldLockToken) { (_, target) =>
+      if (flat)
         frameOf(spark, baseDir, basis, src).write.mode("overwrite").parquet(target.toString)
-      }
       writePurged(target)
+      (if (flat) Commit(outMarker) else src.derive(outMarker)).copy(purged = true)
     }
   }
-
-  /** Stage-and-commit shell of the metadata commits ([[restore]],
-    * [[commitColMap]], [[purgeCommit]], shallow [[cloneTo]]): run `stage`
-    * against the next version's dir (data writes, the retraction dir —
-    * everything besides the record that must exist before the flip),
-    * stage `rec`, and CAS-commit against `expected`. */
-  private def republishMeta(spark: SparkSession, f: FileSystem, base: Path,
-      next: Long, rec: Commit, expected: Long,
-      heldLockToken: Option[String] = None)(stage: Path => Unit = _ => ()): Unit =
-    guardStaged(f, base, next) {
-      val target = versionPath(base, next)
-      mkdirsFast(f, target)
-      stage(target)
-      stageRecord(f, base, target, rec)
-      commitPointer(spark, f, base, next, expected = expected,
-        heldLockToken = heldLockToken)
-    }
 
   /** The key tuples a purge's linearization commit erased — the
     * retraction record [[changesWithPurges]] folds into the change feed.
@@ -4191,44 +4163,69 @@ object VersionedSnapshot {
       expected: Option[Long] = None): Long = {
     require(retain >= 1, "retain must keep at least the current version")
     val spark = df.sparkSession
-    val f = fs(spark, baseDir)
-    val base = new Path(baseDir)
-    mkdirsFast(f, base)
-    val fresh = currentVersion(spark, baseDir).getOrElse(-1L)
     // callers whose `df` derives from a table read pass the version they
     // read as `expected` (basis pinning, see mergeInto) — a pointer that
     // already moved means the frame is stale, so fail fast and retryably
     // rather than committing a lost update. Callers publishing
     // independent content omit it and race only at the CAS itself.
-    val current = expected.getOrElse(fresh)
-    if (current != fresh)
-      throw new ConcurrentSnapshotUpdate(baseDir, current, fresh)
-    val next = prepareNext(f, base, current)
-    guardStaged(f, base, next) {
-      val target = versionPath(base, next)
-      withMicrosTimestamps(spark) {
-        df.write.mode("overwrite").parquet(target.toString)
-      }
-      stageRecord(f, base, target, Commit(marker))
-      commitPointer(spark, f, base, next, expected = current)
+    val basis = expected.getOrElse(currentVersion(spark, baseDir).getOrElse(-1L))
+    commit(spark, baseDir, basis, Some(retain)) { (_, target) =>
+      df.write.mode("overwrite").parquet(target.toString)
+      Commit(marker)
     }
-    applyRetention(f, base, current, next, retain)
-    next
   }
 
-  /** Run `body` — the staging + commit of version `next` — and on ANY
-    * in-JVM failure abort the staged version before rethrowing, so the
-    * claim never sits live for `staleClaimMs` shielding garbage from
-    * every sweep. Conflict losses ([[ConcurrentSnapshotUpdate]])
-    * additionally drop the staged dir itself (see [[abortStaged]]).
-    * Every staging path — flat publish, bucketed publish, merge-on-read
-    * overlay, restore — commits through this guard. */
-  private def guardStaged[A](f: FileSystem, base: Path, next: Long)(body: => A): A =
-    try body catch {
+  /** The commit protocol — the one sequence every write of a NEW version
+    * runs (publish, bucketed publish and so merge/compact, overlay
+    * staging, restore, clone, column-mapping and purge commits):
+    *
+    *  1. '''basis check''': the pointer must still read `expected` (the
+    *     version the caller's frames, manifests and refs derive from),
+    *     else [[ConcurrentSnapshotUpdate]] before anything is claimed;
+    *  1. '''claim''' the next version number ([[prepareNext]]) — only
+    *     after the caller finished validating and listing, so a rejected
+    *     operation never leaves a claim behind;
+    *  1. '''stage''': `stage(next, target)` writes whatever must exist
+    *     before the flip (data files, the retraction dir; nothing for a
+    *     metadata-only commit) with TIMESTAMP_MICROS output
+    *     ([[withMicrosTimestamps]]) and returns the version's record;
+    *     then the `staged-data` halt point;
+    *  1. '''record''' ([[stageRecord]], then `staged-sidecars`);
+    *  1. '''CAS''' ([[commitPointer]], `post-flip` inside);
+    *  1. '''retain''' when `retain` is given — metadata commits (clone,
+    *     column mapping, purge) pass None: they never age out history.
+    *
+    * Any in-JVM failure from the claim to the CAS aborts the staged
+    * version before rethrowing ([[abortStaged]]), so the claim never sits
+    * live for `staleClaimMs` shielding garbage from every sweep; a
+    * conflict loss also drops the staged dir, before the claim. A writer
+    * that DIES skips the abort; the stale-claim sweep collects its
+    * litter. `heldLockToken`: the caller already holds the commit lock
+    * (purge escalation). Returns the committed version. */
+  private def commit(spark: SparkSession, baseDir: String, expected: Long,
+      retain: Option[Int], heldLockToken: Option[String] = None)
+      (stage: (Long, Path) => Commit): Long = {
+    val f = fs(spark, baseDir)
+    val base = new Path(baseDir)
+    mkdirsFast(f, base)
+    val found = currentVersion(spark, baseDir).getOrElse(-1L)
+    if (found != expected)
+      throw new ConcurrentSnapshotUpdate(baseDir, expected, found)
+    val next = prepareNext(f, base, expected)
+    try {
+      val target = versionPath(base, next)
+      val rec = withMicrosTimestamps(spark)(stage(next, target))
+      haltPoint("staged-data")
+      stageRecord(f, base, target, rec)
+      commitPointer(spark, f, base, next, expected, heldLockToken)
+    } catch {
       case c: ConcurrentSnapshotUpdate =>
         abortStaged(f, base, next, conflictLoss = true); throw c
       case t: Throwable => abortStaged(f, base, next); throw t
     }
+    retain.foreach(applyRetention(f, base, expected, next, _))
+    next
+  }
 
   /** Run a transaction whose reads are pinned to `basis`. A concurrent
     * writer pushing the pointer `retain` versions ahead RETIRES the basis
@@ -4299,20 +4296,14 @@ object VersionedSnapshot {
     val spark = df.sparkSession
     val f = fs(spark, baseDir)
     val base = new Path(baseDir)
-    mkdirsFast(f, base)
-    val current = currentVersion(spark, baseDir).getOrElse(-1L)
-    // snapshot-isolation pre-check: `expected` is the version every input
-    // frame, manifest, and carry ref was derived FROM (pinned by the
-    // caller at its transaction start). If the pointer already moved,
-    // committing would pass the CAS while silently dropping the
-    // interloper's rows — the lost update the stress spec caught when
-    // this method re-read the pointer for itself. Fail fast, retryably,
-    // before staging a byte.
-    if (current != expected)
-      throw new ConcurrentSnapshotUpdate(baseDir, expected, current)
-    val next = prepareNext(f, base, current)
-    guardStaged(f, base, next) {
-      val target = versionPath(base, next)
+    // snapshot isolation: `expected` is the version every input frame,
+    // manifest, and carry ref was derived FROM (pinned by the caller at
+    // its transaction start), and the commit's basis check refuses a
+    // moved pointer before staging a byte — committing would otherwise
+    // pass the CAS while silently dropping the interloper's rows, the
+    // lost update the stress spec caught when this method re-read the
+    // pointer for itself
+    commit(spark, baseDir, expected, Some(retain)) { (next, target) =>
       val gName = "g" + "%05d".formatLocal(java.util.Locale.ROOT, next)
       val gDir = new Path(new Path(base, DataDirName), gName)
       // repartition ON the bucket value: each bucket lands wholly in one
@@ -4343,15 +4334,15 @@ object VersionedSnapshot {
       // file of every generation carries the full physical column set,
       // which is what keeps multi-path reads schema-uniform
       val pKeys = keys.map(cm.toPhysical)
-      lazy val prev = if (current < 0) None else Some(recordOf(f, versionPath(base, current)))
+      lazy val prev = if (expected < 0) None else Some(recordOf(f, versionPath(base, expected)))
       val toPhysical: DataFrame => DataFrame = d =>
         if (cm.isIdentity) d
         else {
           val renamed = d.columns.toIndexedSeq.map(c => col(c).as(cm.toPhysical(c)))
           val padded =
-            if (cm.dropped.isEmpty || current < 0) Nil
+            if (cm.dropped.isEmpty || expected < 0) Nil
             else {
-              val raw = rawFrame(d.sparkSession, base, versionPath(base, current), prev.get).schema
+              val raw = rawFrame(d.sparkSession, base, versionPath(base, expected), prev.get).schema
               cm.dropped.toSeq.sorted.flatMap(dc =>
                 raw.fields.find(_.name == dc)
                   .map(fl => lit(null).cast(fl.dataType).as(dc)))
@@ -4385,12 +4376,9 @@ object VersionedSnapshot {
         }
       val physDf = toPhysical(checked)
       val writer = physDf.write.mode("overwrite").partitionBy(BucketCol)
-      withMicrosTimestamps(df.sparkSession) {
-        (if (maxRecordsPerFile > 0L)
-           writer.option("maxRecordsPerFile", maxRecordsPerFile)
-         else writer).parquet(gDir.toString)
-      }
-      haltPoint("staged-data")
+      (if (maxRecordsPerFile > 0L)
+         writer.option("maxRecordsPerFile", maxRecordsPerFile)
+       else writer).parquet(gDir.toString)
       // which buckets actually produced files (a bucket whose merge result
       // is empty writes no partition dir — it must vanish from the manifest)
       val written: Map[Int, String] =
@@ -4413,17 +4401,14 @@ object VersionedSnapshot {
             inherited.getOrElse(b, Nil))).toMap
           .filter(_._2.nonEmpty)
       }
-      val rec = if (manifest.isEmpty) {
+      if (manifest.isEmpty) {
         // nothing anywhere (e.g. a full delete): flat empty dir keeps schema
         // (the PHYSICAL schema — the colmap still presents the logical view)
         f.delete(gDir, true)
-        withMicrosTimestamps(df.sparkSession) {
-          physDf.drop(BucketCol).limit(0)
-            .write.mode("overwrite").parquet(target.toString)
-        }
+        physDf.drop(BucketCol).limit(0)
+          .write.mode("overwrite").parquet(target.toString)
         Commit(marker, colMap = cm)
       } else {
-        mkdirsFast(f, target)
         // zonemap: fresh stats for the files this publish wrote (one narrow
         // aggregate over the delta), inherited files copy their rows from
         // the previous version's zonemap driver-side (absent there, they
@@ -4499,11 +4484,7 @@ object VersionedSnapshot {
         Commit(marker, buckets = Some(numBuckets -> manifest), zones = Some(zones),
           blooms = blooms, colMap = cm)
       }
-      stageRecord(f, base, target, rec)
-      commitPointer(spark, f, base, next, expected = current)
     }
-    applyRetention(f, base, current, next, retain)
-    next
   }
 
   /** Rewrite the CURRENT bucketed snapshot into one fresh generation —
@@ -5180,30 +5161,19 @@ object VersionedSnapshot {
                 .map(fl => lit(null).cast(fl.dataType).as(dc)))
             overlayRows.select(renamed ++ padded: _*)
           }
-        val next = prepareNext(f, base, cur)
-        guardStaged(f, base, next) {
-          val dName = "d" + "%05d".formatLocal(java.util.Locale.ROOT, next)
-          val dRel = s"$DataDirName/$dName"
+        commit(spark, baseDir, cur, Some(retain)) { (next, _) =>
+          val dRel = s"$DataDirName/d" + "%05d".formatLocal(java.util.Locale.ROOT, next)
           // one file per overlay: a delta is batch-sized by definition, and
           // overlay count — not file count per overlay — is the read cost
-          withMicrosTimestamps(overlayRows.sparkSession) {
-            overlayRowsP.coalesce(1).write.mode("overwrite")
-              .parquet(resolveRef(base, dRel).toString)
-          }
-          haltPoint("staged-overlay")
-          val target = versionPath(base, next)
-          mkdirsFast(f, target)
+          overlayRowsP.coalesce(1).write.mode("overwrite")
+            .parquet(resolveRef(base, dRel).toString)
           // bucket files are untouched by a blind overlay — their refs,
           // zonemap and blooms carry forward verbatim so delta versions
           // keep data skipping (overlay files themselves get no stats:
           // they are delta-sized and reconciliation reads them in full by
           // design)
-          stageRecord(f, base, target, curRec.derive(marker)
-            .copy(deltas = Some((pKeys, priorOverlays :+ dRel))))
-          commitPointer(spark, f, base, next, expected = cur)
+          curRec.derive(marker).copy(deltas = Some((pKeys, priorOverlays :+ dRel)))
         }
-        applyRetention(f, base, cur, next, retain)
-        next
       }
     }
   }

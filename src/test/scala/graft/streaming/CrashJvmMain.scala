@@ -15,7 +15,9 @@ import org.apache.spark.sql.SparkSession
   * committed generation supersedes all prior ones — what mid-retention
   * needs to orphan the old generation); `overlay <base> <point>` stages a
   * blind upsert delta; `purge <base> <point> <key>` point-purges one key
-  * across all retained versions. */
+  * across all retained versions; `publish <base> <point>` publishes a
+  * whole flat version; `restore <base> <point> <version>` restores a
+  * retained version; `rename <base> <point>` renames column `v` to `w`. */
 object CrashJvmMain {
   def main(args: Array[String]): Unit = {
     val op = args(0)
@@ -44,6 +46,15 @@ object CrashJvmMain {
         VersionedSnapshot.purgeKeys(spark, base, Seq("k"),
           Seq(Seq(args(3).toLong)))
         ()
+      case "publish" =>
+        val df = (0L until 20L).map(k => (k, k * 10 + 9)).toDF("k", "v")
+        VersionedSnapshot.publish(df, base, "crash-child-publish")
+      case "restore" =>
+        VersionedSnapshot.restore(spark, base, args(3).toLong,
+          marker = "crash-child-restore")
+      case "rename" =>
+        VersionedSnapshot.renameColumns(spark, base, Map("v" -> "w"),
+          marker = "crash-child-rename")
       case other => sys.error(s"unknown crash-child op $other")
     }
     println("CRASHCHILD_NO_HALT")

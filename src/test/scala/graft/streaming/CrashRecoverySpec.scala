@@ -6,7 +6,7 @@ import java.util.concurrent.TimeUnit
 
 /** True power-loss fault injection, one named crash point at a time: a
   * child JVM ([[CrashJvmMain]]) runs a table operation and `Runtime.halt`s
-  * mid-flight — skipping finally blocks, `guardStaged`'s abort, and
+  * mid-flight — skipping finally blocks, the commit protocol's abort, and
   * shutdown hooks, which is what distinguishes a killed PROCESS from the
   * in-JVM thrown-exception crashes the older specs cover. For every point
   * the parent then proves the two halves of the durability contract:
@@ -20,8 +20,12 @@ import java.util.concurrent.TimeUnit
   *     abandoned commit lock broken, orphan generations GC'd — and leaves
   *     zero claims, no lock, and a manifest-valid current version.
   *
-  * Crash points (see [[VersionedSnapshot.HaltAtConf]]): staged-data,
-  * staged-sidecars, post-flip, mid-retention, staged-overlay, mid-purge. */
+  * Crash points (see [[VersionedSnapshot.HaltAtConf]]): the commit
+  * protocol's staged-data, staged-sidecars and post-flip, which every
+  * operation committing a new version passes once, plus mid-retention and
+  * mid-purge. staged-data is crashed for merge, overlay staging, flat
+  * publish, restore and renameColumns; staged-sidecars and post-flip for
+  * merge. */
 class CrashRecoverySpec extends SparkSpec {
   import org.apache.spark.sql.functions.col
 
@@ -208,7 +212,7 @@ class CrashRecoverySpec extends SparkSpec {
     val base = tmp.resolve("snap").toString
     seed(base)
     val before = content(base)
-    crashChild(tmp, Seq("overlay", base, "staged-overlay"))
+    crashChild(tmp, Seq("overlay", base, "staged-data"))
     assert(content(base) == before, "reader saw an uncommitted overlay")
     assert(dataDirs(tmp).contains("d00001"),
       s"expected the orphaned overlay file, got ${dataDirs(tmp)}")
@@ -218,6 +222,33 @@ class CrashRecoverySpec extends SparkSpec {
     assertHealed(tmp, base, want)
     assert(!dataDirs(tmp).contains("d00001"),
       s"orphan overlay survived the healing gc: ${dataDirs(tmp)}")
+  }
+
+  test("power loss at staged-data in flat publish, restore and renameColumns: " +
+      "readers hold, one merge heals") {
+    import spark.implicits._
+    Seq(Seq("publish"), Seq("restore", "0"), Seq("rename")).foreach { op =>
+      val tmp = Files.createTempDirectory("graft-crash")
+      val base = tmp.resolve("snap").toString
+      // v0 flat (so restore takes the flat, data-rewriting branch), v1 a
+      // merge that moves the table to the bucketed layout renameColumns
+      // needs
+      VersionedSnapshot.publish((0L until 20L).map(k => (k, k * 10)).toDF("k", "v"),
+        base, "seed-flat", retain = 3)
+      VersionedSnapshot.mergeInto(base,
+        (10L until 20L).map(k => (k, k * 10 + 5)).toDF("k", "v"), Seq("k"),
+        VersionedSnapshot.UpdateMatched, insertUnmatched = false,
+        marker = "v1", retain = 3)
+      val before = content(base)
+      crashChild(tmp, Seq(op.head, base, "staged-data") ++ op.tail)
+      assert(content(base) == before, s"${op.head}: reader saw uncommitted staging")
+      assert(VersionedSnapshot.currentVersion(spark, base).contains(1L),
+        s"${op.head}: the pointer moved")
+      healMerge(base)
+      val want = (0L until 20L).map(k =>
+        k -> (if (k < 10) k * 10 + 1000 else k * 10 + 5)).toMap
+      assertHealed(tmp, base, want)
+    }
   }
 
   test("power loss mid-purge: rerunning the same purge completes the erasure") {

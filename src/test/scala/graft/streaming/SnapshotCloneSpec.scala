@@ -182,7 +182,13 @@ class SnapshotCloneSpec extends SparkSpec {
     val flat = tmp("graft-clsrc7f"); val dflat = tmp("graft-cldst7f")
     publish((1L to 5L).map(k => (k, k)).toDF("k", "v"), flat, "flat-seed", 5)
     intercept[IllegalArgumentException] { cloneTo(spark, flat, dflat) }
-    cloneTo(spark, flat, dflat, deep = true)
+    // rejected before the claim: no claim left to push the next clone past v0
+    val claims = new java.io.File(dflat, "_claims")
+    assert(Option(claims.list).forall(_.isEmpty),
+      s"the rejected clone left claims: ${Option(claims.list).map(_.toSeq)}")
+    assert(cloneTo(spark, flat, dflat, deep = true) == 0L)
+    assert(history(spark, dflat).select("version").collect().map(_.getLong(0))
+      .toSeq == Seq(0L))
     assert(read(spark, dflat).get.count() == 5L)
   }
 

@@ -5,7 +5,8 @@
 # check. It fails fast and loudly — a non-zero exit means DO NOT COMMIT.
 #
 #   tools/gate.sh          # compile + full ScalaTest + 4-query bench smoke
-#   tools/gate.sh --quick  # compile + 4-query bench smoke (skip sbt test)
+#                          #   + commit-path oracle
+#   tools/gate.sh --quick  # the same without sbt test
 #
 # Output tail is meant to be pasted into the snapshot commit message.
 set -uo pipefail
@@ -29,5 +30,21 @@ SMOKE=$(SPARK_GRAFT_SF_DIR=/root/testdata/sf0.001 SPARK_GRAFT_CPUS="$(env -u OMP
   2>/dev/null | grep '"metric"' | tail -1)
 [ -n "$SMOKE" ] || fail "bench smoke produced no JSON line"
 echo "  $SMOKE"
+
+# the smoke queries commit no table; the snapshot_/mor_ queries drive every
+# VersionedSnapshot commit path (publish, merge, overlay, compact, restore,
+# clone, column mapping, purge), checked by result against DuckDB
+echo "== gate: commit-path oracle (snapshot_,mor_ at sf0.001) =="
+VOUT=$(mktemp -d)
+trap 'rm -rf "$VOUT"' EXIT
+SPARK_GRAFT_CPUS="$(env -u OMP_NUM_THREADS nproc)" \
+  tools/run.sh graft.Verify /root/testdata/sf0.001 "$VOUT/out" snapshot_,mor_ \
+  > "$VOUT/verify.log" 2>&1 || { tail -5 "$VOUT/verify.log" >&2; fail "commit-path Verify"; }
+python3 tools/check_correctness.py /root/testdata/sf0.001 "$VOUT/out" > "$VOUT/check.log" 2>&1
+CHECK=$?
+grep -v ' OK$' "$VOUT/check.log" | sed 's/^/  /'
+echo "  $(grep -c ' OK$' "$VOUT/check.log") queries OK"
+[ "$CHECK" -eq 0 ] || fail "commit-path oracle"
+grep -q ' OK$' "$VOUT/check.log" || fail "commit-path oracle checked no query"
 
 echo "GATE OK"
