@@ -526,44 +526,6 @@ private[graft] object CurationSnapshotQueries {
       VS.read(s, base).get.select("doc_id", "n_chars", "lang")
     }),
 
-    // ---- CONDITIONAL-PUT backend race (r14): the same disjoint-key
-    // two-writer merge race, but with the pointer flip routed through
-    // the cas-file PointerStore (the local double of an object store's
-    // put-if-match) instead of the fenced rename — the driver-verified
-    // face of the r14 backend. Same closed form: both effects land no
-    // matter which writer wins; a backend that lost an update (or
-    // double-flipped) erases one CASE branch ----
-    "snapshot_cas_backend" -> ((s, dir) => {
-      val VS = graft.streaming.VersionedSnapshot
-      val docs = Tables.documents(s, dir).select("doc_id", "n_chars", "lang")
-      val base = tempSnapshotBase("graft-casb")
-      s.conf.set(VS.PointerStoreConf, VS.CasFilePointerStore.name)
-      val errs = new java.util.concurrent.ConcurrentLinkedQueue[Throwable]()
-      try {
-        VS.mergeInto(base, docs, Seq("doc_id"), VS.UpdateMatched,
-          insertUnmatched = true, marker = "seed", numBuckets = 8)
-        val srcA = docs.filter(col("doc_id") < 50)
-          .withColumn("n_chars", col("n_chars") + 5000)
-        val srcB = docs.filter(col("doc_id") >= 50 && col("doc_id") % 7 === 0)
-          .withColumn("lang", lit("zz"))
-        val skipSeam = s.conf.getOption("graft.bench.skipRaceSeam").contains("true")
-        if (!skipSeam) s.conf.set(VS.TestDelayBeforeCommitConf, "400")
-        try {
-          val threads = Seq(("a", srcA), ("b", srcB)).map { case (n, src) =>
-            val t = new Thread(() => {
-              try VS.retryOnConflict() {
-                VS.mergeInto(base, src, Seq("doc_id"), VS.UpdateMatched,
-                  insertUnmatched = false, marker = s"cas-writer-$n"); ()
-              } catch { case e: Throwable => errs.add(e); () }
-            }, s"graft-casb-$n")
-            t.start(); t
-          }
-          threads.foreach(_.join(300000))
-        } finally s.conf.unset(VS.TestDelayBeforeCommitConf)
-      } finally s.conf.unset(VS.PointerStoreConf)
-      if (!errs.isEmpty) throw errs.peek()
-      VS.read(s, base).get.select("doc_id", "n_chars", "lang")
-    }),
     // ---- crash-consistency heal (r13): a merge that dies AFTER fully
     // staging (data, sidecars, manifest) but BEFORE the pointer flip
     // leaves the table reading as the seed; the retried merge then

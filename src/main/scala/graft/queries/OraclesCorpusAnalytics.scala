@@ -521,16 +521,6 @@ private[graft] object OraclesCorpusAnalytics {
         |            ELSE lang END AS lang
         |FROM documents""".stripMargin,
 
-    // the same closed form under the conditional-put (cas-file) pointer
-    // backend: a lost update or double flip erases one CASE branch
-    "snapshot_cas_backend" ->
-      """SELECT doc_id,
-        |       CASE WHEN doc_id < 50 THEN n_chars + 5000
-        |            ELSE n_chars END AS n_chars,
-        |       CASE WHEN doc_id >= 50 AND doc_id % 7 = 0 THEN 'zz'
-        |            ELSE lang END AS lang
-        |FROM documents""".stripMargin,
-
     // crash heal in closed form: the crashed attempt must contribute
     // NOTHING on its own; only the retried merge's arithmetic lands
     "snapshot_crash_heal" ->

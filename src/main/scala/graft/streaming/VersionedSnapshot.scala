@@ -1,6 +1,6 @@
 package graft.streaming
 
-import org.apache.hadoop.fs.{FileContext, FileSystem, Options, Path}
+import org.apache.hadoop.fs.{CommonPathCapabilities, FileContext, FileSystem, Options, Path}
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions.{array, assert_true, coalesce, col, count, explode, expr, lit, pmod, when, xxhash64}
 import org.apache.spark.sql.streaming.DataStreamWriter
@@ -55,8 +55,9 @@ import org.apache.spark.sql.streaming.DataStreamWriter
   *    does not exist (between `snap→.old` and `.tmp→snap`), and rename
   *    visibility is not atomic on object stores at all. Here a reader
   *    resolves `_CURRENT` once and reads an immutable version (directory
-  *    or manifest); the pointer flip is a single-file atomic rename
-  *    (`FileContext.rename(OVERWRITE)`), so every reader sees exactly the
+  *    or manifest); the pointer flip replaces one small file atomically
+  *    (an atomic move on `file:`, a rename on HDFS, one object PUT on an
+  *    object store — [[PointerStore]]), so every reader sees exactly the
   *    old or exactly the new version — never a mix, never an absent path.
   *  - **Concurrent-reader grace.** Old versions survive until `retain`
   *    more publishes, so a reader that resolved the pointer just before a
@@ -87,7 +88,7 @@ import org.apache.spark.sql.streaming.DataStreamWriter
   * the new current, exactly Delta's conflict-retry contract). The lock
   * is FENCED (r12): committers stamp a unique token and prove ownership
   * by reading it back — at acquire, before breaking a stale lock, as
-  * the last act before the pointer rename, and at release — so a
+  * the last act before the pointer flip, and at release — so a
   * GC-paused committer whose lock was legitimately broken aborts
   * retryably instead of double-flipping over its successor. A writer
   * that dies mid-publish leaves its claim behind; claims older than
@@ -186,10 +187,13 @@ object VersionedSnapshot {
   private[graft] val TestDelayBeforeCommitConf = "graft.snapshot.test.delayBeforeCommitMs"
   private[graft] val TestDelayInCommitConf = "graft.snapshot.test.delayInCommitMs"
   /** Spec-only seam: stall AFTER the commit section's fence read-back,
-    * immediately before the pointer flip — the exact position of the
-    * documented rename-backend double-flip window. Drives the
-    * stalled-committer specs that prove a conditional-put backend closes
-    * the window the fenced rename cannot. */
+    * at the pointer store's last step before its write that holds no
+    * store-side exclusion — between the rename store's compare and its
+    * rename (its double-flip window), before cas-file takes its lock,
+    * between etag-cas's reads and its conditional PUT. Drives
+    * SnapshotStalledCommitterSpec, which shows the window open on an
+    * HDFS-like filesystem (rename) and closed on `file:` (cas-file) and
+    * on an ETag store (etag-cas). */
   private[graft] val TestDelayAfterFenceConf = "graft.snapshot.test.delayAfterFenceMs"
   /** Spec-only seam: stall a committer between its pointer flip and its
     * retention deletions — the real window in which a purge pass can
@@ -468,48 +472,37 @@ object VersionedSnapshot {
     }
   }
 
-  // ---- pluggable pointer-commit backend (r14) ----
+  // ---- the pointer flip: one store per platform ----
 
-  /** The single-key commit primitive behind the pointer flip. The flip
-    * is logically "replace `_CURRENT`'s content with `next` ONLY IF it
-    * still reads what this committer read when it validated its basis" —
-    * i.e. a conditional put.
+  /** The single-key commit primitive behind the pointer flip: replace
+    * `_CURRENT`'s content with `next` ONLY IF it still reads what this
+    * committer read when it validated its basis — a conditional put.
     *
-    * Two shipped backends:
-    *  - [[RenamePointerStore]] (default): plain atomic
-    *    rename-with-overwrite. NOT conditional — the compare and the
-    *    write are separate steps, so it is only safe under the fenced
-    *    commit lock, and even then a committer stalled between its fence
-    *    read and the rename can overwrite a successor (the documented
-    *    double-flip window; see [[commitPointer]]).
-    *  - [[CasFilePointerStore]]: a genuine compare-and-swap for `file:`
-    *    tables — the precondition check and the write happen atomically
-    *    under an OS file lock on a `_CURRENT.caslock` sidecar (held
-    *    cross-process; same-JVM threads serialize on a striped monitor
-    *    first, because the JVM throws on overlapping [[java.nio.channels
-    *    .FileLock]]s from one process). A committer stalled ARBITRARILY
-    *    long before calling `putIfMatch` simply loses: the store rejects
-    *    the stale expectation. This is the local double of an object
-    *    store's conditional put (S3 `If-Match`/`If-None-Match` on the
-    *    pointer key, GCS `x-goog-if-generation-match`, Azure ETag):
-    *    deploying there is implementing this 2-method trait over the
-    *    store SDK and registering it — no protocol change.
+    * No conf selects the store: [[pointerStoreFor]] picks the one that
+    * runs on the table's `FileSystem`.
+    *  - `file:` → [[CasFilePointerStore]]: compare and write are one
+    *    atomic unit under an OS file lock on a `_CURRENT.caslock`
+    *    sidecar (held cross-process; same-JVM threads serialize on a
+    *    striped monitor first, because the JVM throws on overlapping
+    *    [[java.nio.channels.FileLock]]s from one process).
+    *  - a `FileSystem` that reports `ETAGS_AVAILABLE` for the pointer
+    *    path (S3A, ABFS) → [[EtagPointerStore]]: Hadoop's public
+    *    conditional-write API (HTTP `If-Match`/`If-None-Match`).
+    *  - anything else (HDFS-like: atomic server-side rename, no
+    *    conditional put) → [[RenamePointerStore]]: compare, then an
+    *    atomic rename-with-overwrite. The compare and the write are
+    *    separate steps, so it is safe only under the fenced commit lock,
+    *    and even then a committer stalled between its compare and its
+    *    rename can overwrite a successor (the double-flip window; see
+    *    [[commitPointer]]).
     *
-    * Third shipped backend (r15): [[EtagPointerStore]] — the S3A/ABFS
-    * deployment face over Hadoop's public conditional-write API (HTTP
-    * If-Match / If-None-Match via FS_OPTION_CREATE_CONDITIONAL_OVERWRITE*
-    * builder keys, hadoop 3.4.2+), certified in-repo against an
-    * etag-exposing local double.
-    *
-    * Select per session with conf `graft.snapshot.pointerStore` =
-    * `rename` | `cas-file` | `etag-cas` | a [[registerPointerStore]]'d
-    * name. */
-  trait PointerStore {
-    /** Backend name (the conf value that selects it). */
+    * Under the two conditional stores a committer stalled ARBITRARILY
+    * long before calling `putIfMatch` simply loses: the store rejects the
+    * stale expectation. `PointerStoreContract` certifies each store
+    * directly. */
+  private[graft] trait PointerStore {
+    /** Store name, reported in [[detail]]'s `pointer_store` column. */
     def name: String
-    /** True when `putIfMatch`'s precondition check and write are one
-      * atomic unit against every other writer (any process). */
-    def conditional: Boolean
     /** Atomically set `ptr`'s content to `value` iff the current content
       * equals `expected` (None = the file must not exist). Returns false
       * when the precondition failed; the write must be atomic for
@@ -518,33 +511,38 @@ object VersionedSnapshot {
         value: String, expected: Option[String]): Boolean
   }
 
-  /** Session conf selecting the pointer-commit backend (default
-    * `rename`). */
-  private[graft] val PointerStoreConf = "graft.snapshot.pointerStore"
-
-  /** Default backend: unconditional atomic rename, safe only under the
-    * fenced commit lock (the r11-r13 protocol, unchanged). */
-  object RenamePointerStore extends PointerStore {
-    val name = "rename"
-    val conditional = false
-    def putIfMatch(spark: SparkSession, f: FileSystem, ptr: Path,
-        value: String, expected: Option[String]): Boolean = {
-      val cur = if (f.exists(ptr)) Some(readSmallFile(f, ptr).trim) else None
-      if (cur != expected.map(_.trim)) false
-      else { atomicOverwrite(spark, f, ptr, value); true }
-    }
+  /** Read `ptr`, and [[atomicOverwrite]] it with `value` iff it reads
+    * `expected` (running `beforeWrite` between the two) — atomic against
+    * other writers only under an exclusion the caller holds. */
+  private def compareAndOverwrite(spark: SparkSession, f: FileSystem,
+      ptr: Path, value: String, expected: Option[String])(
+      beforeWrite: => Unit): Boolean = {
+    val cur = if (f.exists(ptr)) Some(readSmallFile(f, ptr).trim) else None
+    if (cur != expected.map(_.trim)) false
+    else { beforeWrite; atomicOverwrite(spark, f, ptr, value); true }
   }
 
-  /** Conditional-put backend for `file:` tables: compare and write are
-    * one atomic unit under an OS `FileLock` on `<ptr>.caslock`, so a
-    * committer that stalls for ANY length of time between validating its
-    * basis and flipping the pointer cannot overwrite a successor — its
-    * `putIfMatch` finds the content moved and returns false. The pointer
-    * file itself is still replaced via temp-file + `ATOMIC_MOVE`, so
-    * lock-free readers never observe a partial write. */
-  object CasFilePointerStore extends PointerStore {
+  /** The store of HDFS-like filesystems: no conditional put, so the
+    * compare and the rename are only as atomic as the fenced commit lock
+    * around them. */
+  private[graft] object RenamePointerStore extends PointerStore {
+    val name = "rename"
+    def putIfMatch(spark: SparkSession, f: FileSystem, ptr: Path,
+        value: String, expected: Option[String]): Boolean =
+      // spec-only stall: the double-flip window is this compare→rename gap
+      compareAndOverwrite(spark, f, ptr, value, expected)(
+        specDelay(spark, TestDelayAfterFenceConf))
+  }
+
+  /** The store of `file:` tables: the same compare-and-overwrite as
+    * [[RenamePointerStore]], run under an OS `FileLock` on
+    * `<ptr>.caslock`, so a committer that stalls for ANY length of time
+    * between validating its basis and flipping the pointer cannot
+    * overwrite a successor — its `putIfMatch` finds the content moved and
+    * returns false. The pointer file itself is replaced by
+    * [[atomicOverwrite]], so lock-free readers never see a partial write. */
+  private[graft] object CasFilePointerStore extends PointerStore {
     val name = "cas-file"
-    val conditional = true
     // FileLock is per-PROCESS: a second lock attempt on the same file
     // from another thread of this JVM throws OverlappingFileLockException
     // instead of blocking, so same-JVM writers serialize on a per-path
@@ -554,53 +552,34 @@ object VersionedSnapshot {
     def putIfMatch(spark: SparkSession, f: FileSystem, ptr: Path,
         value: String, expected: Option[String]): Boolean = {
       require(f.getScheme == "file",
-        s"$name is the local double of an object-store conditional put; " +
-          s"for scheme '${f.getScheme}' implement PointerStore over the " +
-          "store's put-if-match API and registerPointerStore it")
-      import java.nio.file.{Files => JFiles, Paths => JPaths, StandardCopyOption, StandardOpenOption}
-      val dst = JPaths.get(ptr.toUri.getPath)
-      JFiles.createDirectories(dst.getParent)
+        s"$name flips only file: pointers; a '${f.getScheme}' table flips " +
+          "through etag-cas when its FileSystem reports ETags, else " +
+          "through rename under the fenced commit lock")
+      // spec-only stall, taken before the lock: inside it a stall only
+      // delays the next committer
+      specDelay(spark, TestDelayAfterFenceConf)
+      val dst = java.nio.file.Paths.get(ptr.toUri.getPath)
       val lockFile = dst.resolveSibling(dst.getFileName.toString + ".caslock")
       val mon = monitors.computeIfAbsent(
         dst.toAbsolutePath.toString, _ => new Object)
       mon.synchronized {
         val ch = java.nio.channels.FileChannel.open(lockFile,
-          StandardOpenOption.CREATE, StandardOpenOption.WRITE)
+          java.nio.file.StandardOpenOption.CREATE,
+          java.nio.file.StandardOpenOption.WRITE)
         try {
           val lk = ch.lock() // blocks until cross-process exclusive
-          try {
-            val cur =
-              if (JFiles.exists(dst))
-                Some(new String(JFiles.readAllBytes(dst), "UTF-8").trim)
-              else None
-            if (cur != expected.map(_.trim)) false
-            else {
-              val tmp = dst.resolveSibling(dst.getFileName.toString + "." +
-                java.util.UUID.randomUUID().toString + ".tmp")
-              JFiles.write(tmp, value.getBytes("UTF-8"))
-              // same checksum hygiene as atomicOverwrite: a stale .crc
-              // left by a checksummed-FS writer would fail readers
-              Seq(dst.getFileName.toString, tmp.getFileName.toString)
-                .foreach { n =>
-                  JFiles.deleteIfExists(dst.resolveSibling("." + n + ".crc")); ()
-                }
-              JFiles.move(tmp, dst, StandardCopyOption.REPLACE_EXISTING,
-                StandardCopyOption.ATOMIC_MOVE)
-              true
-            }
-          } finally lk.release()
+          try compareAndOverwrite(spark, f, ptr, value, expected)(())
+          finally lk.release()
         } finally ch.close()
       }
     }
   }
 
-  /** Conditional-put backend over Hadoop's PUBLIC conditional-write API
-    * (HADOOP-19256, hadoop-client-api 3.4.2+) — the DEPLOYMENT store for
-    * object stores whose `FileStatus` carries ETags (S3A with
-    * `fs.s3a.create.conditional.enabled`, ABFS): the S3 put-if-match
-    * integration face that closes the double-flip window with zero
-    * custom SDK code, selected with `graft.snapshot.pointerStore =
-    * etag-cas`.
+  /** The store of object stores whose `FileStatus` carries ETags (S3A
+    * with conditional creates switched on, ABFS), over Hadoop's
+    * PUBLIC conditional-write API (HADOOP-19256, hadoop-client-api
+    * 3.4.2+): the S3 put-if-match face that closes the double-flip window
+    * with zero custom SDK code.
     *
     *  - `expected = Some(x)`: read the pointer's status (must be an
     *    [[org.apache.hadoop.fs.EtagSource]]) and content; verify content
@@ -621,16 +600,14 @@ object VersionedSnapshot {
     * get [[org.apache.hadoop.fs.FileAlreadyExistsException]], proxies
     * may wrap a bare 412 — so the failure mapping walks the cause chain
     * for any of those shapes and maps them to `false`; everything else
-    * propagates. A filesystem without ETags fails loudly with the
-    * supported alternatives (a store that IGNORED the mandatory etag
-    * key would write unconditionally — which is exactly what the
-    * [[PointerStore]] contract laws 3/4 catch at certification time, so
-    * run `PointerStoreContract` against the target store before
-    * flipping the conf; the in-repo certification runs these laws over
-    * an etag-exposing local double). */
-  object EtagPointerStore extends PointerStore {
+    * propagates. A filesystem whose statuses carry no ETags fails
+    * loudly (a store that IGNORED the mandatory etag key would write
+    * unconditionally — which is exactly what the [[PointerStore]]
+    * contract laws 3/4 catch, so run `PointerStoreContract` against a
+    * new object store before deploying on it; the in-repo certification
+    * runs these laws over an etag-exposing local double). */
+  private[graft] object EtagPointerStore extends PointerStore {
     val name = "etag-cas"
-    val conditional = true
     // Options.CreateFileOptionKeys statics (hadoop 3.4.2+)
     private val CondOverwriteKey =
       org.apache.hadoop.fs.Options.CreateFileOptionKeys.FS_OPTION_CREATE_CONDITIONAL_OVERWRITE
@@ -688,35 +665,27 @@ object VersionedSnapshot {
               if e.getEtag != null && e.getEtag.nonEmpty => e.getEtag
           case _ => sys.error(
             s"$name requires a FileSystem whose FileStatus carries ETags " +
-              s"(S3A/ABFS — EtagSource); scheme '${f.getScheme}' does not. " +
-              "Use 'rename' (fenced-lock protocol), 'cas-file' (local), " +
-              "or registerPointerStore a store-native backend")
+              s"(S3A/ABFS — EtagSource); scheme '${f.getScheme}' does not")
         }
         if (readSmallFile(f, ptr).trim != exp.trim) false
-        else putConditional(f, ptr, value,
-          mustKey = CondEtagKey, mustVal = etag, overwrite = true)
+        else {
+          // spec-only stall between the reads and the PUT: the etag
+          // precondition, not this check, must refuse a moved pointer
+          specDelay(spark, TestDelayAfterFenceConf)
+          putConditional(f, ptr, value,
+            mustKey = CondEtagKey, mustVal = etag, overwrite = true)
+        }
     }
   }
 
-  @volatile private var customPointerStores: Map[String, PointerStore] = Map.empty
-
-  /** Register a deployment backend (e.g. an S3 put-if-match
-    * implementation) under its [[PointerStore.name]]; select it with the
-    * `graft.snapshot.pointerStore` session conf. */
-  def registerPointerStore(store: PointerStore): Unit =
-    synchronized { customPointerStores += store.name -> store }
-
-  private def pointerStoreFor(spark: SparkSession): PointerStore =
-    spark.conf.getOption(PointerStoreConf).getOrElse(RenamePointerStore.name) match {
-      case RenamePointerStore.name => RenamePointerStore
-      case CasFilePointerStore.name => CasFilePointerStore
-      case EtagPointerStore.name => EtagPointerStore
-      case other => customPointerStores.getOrElse(other,
-        sys.error(s"unknown $PointerStoreConf '$other' — registered: " +
-          (Seq(RenamePointerStore.name, CasFilePointerStore.name,
-            EtagPointerStore.name) ++
-            customPointerStores.keys).mkString(", ")))
-    }
+  /** The one store that runs on `f`, chosen from the filesystem alone:
+    * `file:` → cas-file; ETags reported for `ptr` → etag-cas; anything
+    * else → rename (see [[PointerStore]]). */
+  private def pointerStoreFor(f: FileSystem, ptr: Path): PointerStore =
+    if (f.getScheme == "file") CasFilePointerStore
+    else if (f.hasPathCapability(ptr, CommonPathCapabilities.ETAGS_AVAILABLE))
+      EtagPointerStore
+    else RenamePointerStore
 
   /** The committed version number, if any publish has completed. */
   def currentVersion(spark: SparkSession, baseDir: String): Option[Long] = {
@@ -2351,14 +2320,15 @@ object VersionedSnapshot {
     * the table depends on its clone source until a compact localizes),
     * `renamed_columns`/`dropped_columns` (the live column mapping — a
     * nonzero dropped count means bytes are awaiting a reifying compact),
-    * and the active `pointer_store` backend. Empty frame when the table
-    * has never committed. */
+    * and the `pointer_store` the table's filesystem flips through. Empty
+    * frame when the table has never committed. */
   def detail(spark: SparkSession, baseDir: String): DataFrame = {
     import spark.implicits._
     val rows: Seq[(Long, String, String, Option[Int], Long, Long, Int, Long,
         Seq[String], Seq[String], String)] =
       currentVersion(spark, baseDir).toSeq.map { c =>
-        val rec = recordOf(fs(spark, baseDir), versionPath(new Path(baseDir), c))
+        val f = fs(spark, baseDir)
+        val rec = recordOf(f, versionPath(new Path(baseDir), c))
         val s = summary(rec)
         val nExternal =
           (rec.buckets.toSeq.flatMap(_._2.values.flatten) ++
@@ -2367,7 +2337,7 @@ object VersionedSnapshot {
           nExternal,
           rec.colMap.renames.toSeq.sortBy(_._1).map { case (p, l) => s"$p->$l" },
           rec.colMap.dropped.toSeq.sorted,
-          pointerStoreFor(spark).name)
+          pointerStoreFor(f, new Path(baseDir, PointerName)).name)
       }
     rows.toDF("version", "marker", "layout", "num_buckets", "n_files",
       "bytes", "n_overlays", "n_external_refs", "renamed_columns",
@@ -3952,8 +3922,8 @@ object VersionedSnapshot {
   /** The commit: crash-injection seam, then the optimistic-concurrency
     * CAS — under a short `_COMMIT_LOCK` critical section, re-read the
     * pointer, refuse the flip if another writer moved it past `expected`
-    * ([[ConcurrentSnapshotUpdate]]), else a single-file atomic
-    * rename-with-overwrite onto `_CURRENT` and release of `next`'s claim
+    * ([[ConcurrentSnapshotUpdate]]), else one conditional put of
+    * `_CURRENT` ([[PointerStore]]) and release of `next`'s claim
     * (the version becomes committed and claim-free in the same critical
     * section). Everything staged before this call is uncommitted;
     * everything after is visible.
@@ -3968,22 +3938,22 @@ object VersionedSnapshot {
     * was legitimately broken would otherwise wake and flip the pointer
     * OVER the successor's commit — the exact lost update the CAS exists
     * to prevent. The paused writer now re-reads the token as the last
-    * act before the rename and aborts (retryably) when it lost the lock.
+    * act before the flip and aborts (retryably) when it lost the lock.
     *
-    * LIMIT OF THE DEFAULT BACKEND, AND ITS CLOSURE: with filesystem
-    * rename only ([[RenamePointerStore]]), the fence NARROWS but cannot
-    * CLOSE the double-flip window — a committer stalled between the
-    * fence read and the pointer rename (a sub-millisecond gap, vs the
-    * seconds-long staleness horizon needed to break the lock in the
-    * first place) still overwrites the successor. A CONDITIONAL backend
-    * ([[CasFilePointerStore]] locally; an object store's put-if-match in
-    * deployment, selected via `graft.snapshot.pointerStore`) closes it
-    * outright: the flip is `putIfMatch(expected = the content this
-    * committer validated)`, so a stalled committer's late write is
-    * rejected by the store itself no matter how long the stall —
-    * proven by SnapshotStalledCommitterSpec, which drives the identical
-    * post-fence stall through both backends and shows the rename
-    * backend double-flip and the CAS backend refusal. */
+    * THE FLIP, AND THE LIMIT OF RENAME: the flip is always
+    * `putIfMatch(expected = the content this committer validated)` on
+    * the store the table's filesystem selects ([[pointerStoreFor]]). On
+    * `file:` ([[CasFilePointerStore]]) and on ETag object stores
+    * ([[EtagPointerStore]]) the store itself rejects a stalled
+    * committer's late write, however long the stall. On an HDFS-like
+    * filesystem the only primitive is rename ([[RenamePointerStore]]):
+    * there the fence NARROWS but cannot CLOSE the double-flip window — a
+    * committer stalled between the store's compare and its rename (a
+    * sub-millisecond gap, vs the seconds-long staleness horizon needed
+    * to break the lock in the first place) still overwrites the
+    * successor. SnapshotStalledCommitterSpec drives the identical
+    * post-fence stall through all three stores: the double flip on
+    * rename, the refusal on cas-file and etag-cas. */
   private def commitPointer(spark: SparkSession, f: FileSystem, base: Path,
       next: Long, expected: Long,
       heldLockToken: Option[String] = None): Unit = {
@@ -4023,23 +3993,15 @@ object VersionedSnapshot {
       // instead of double-committing over the successor
       if (!lockToken().contains(token))
         throw new ConcurrentSnapshotUpdate(base.toString, expected, cur)
-      // spec-only post-fence stall: the rename backend's residual
-      // double-flip window sits exactly here
-      specDelay(spark, TestDelayAfterFenceConf)
-      val store = pointerStoreFor(spark)
-      if (store.conditional) {
-        // conditional backend: the store re-checks `rawCur` atomically
-        // with the write, so even a committer that stalled past its
-        // fence read cannot land on a moved pointer — the refusal
-        // surfaces as the same retryable conflict as a lost CAS
-        if (!store.putIfMatch(spark, f, ptr, next.toString, rawCur)) {
-          val now =
-            if (!f.exists(ptr)) -1L
-            else readSmallFile(f, ptr).trim.toLongOption.getOrElse(-1L)
-          throw new ConcurrentSnapshotUpdate(base.toString, expected, now)
-        }
-      } else
-        atomicOverwrite(spark, f, ptr, next.toString)
+      // the flip: the store re-checks `rawCur` at write time (atomically
+      // with the write on a conditional store); a moved pointer surfaces
+      // as the same retryable conflict as a lost CAS
+      if (!pointerStoreFor(f, ptr).putIfMatch(spark, f, ptr, next.toString, rawCur)) {
+        val now =
+          if (!f.exists(ptr)) -1L
+          else readSmallFile(f, ptr).trim.toLongOption.getOrElse(-1L)
+        throw new ConcurrentSnapshotUpdate(base.toString, expected, now)
+      }
       // power-loss window: pointer flipped (the version IS committed) but
       // the claim is never released and the commit lock never deleted —
       // the worst-litter crash shape the healing paths must absorb

@@ -272,7 +272,8 @@ object MergeBench {
         i += 1
       }
       val fencedUs = (System.nanoTime() - t1) / 1e3 / M
-      // smallest real publish: 1 row, flat layout — staging floor
+      // smallest real publish: 1 row, flat layout — staging floor (its
+      // flip, unlike the timed sequences, also takes cas-file's FileLock)
       val pubDir = taxRoot.resolve("pub").toString
       val one = spark.range(1).selectExpr("id AS k", "id AS v")
       VersionedSnapshot.publish(one, pubDir, "warm", retain = 1)
@@ -284,23 +285,6 @@ object MergeBench {
       println(f"concurrency tax: pre-r11 commit ${preUs}%.0f µs, fenced ${fencedUs}%.0f µs " +
         f"(tax ${fencedUs - preUs}%.0f µs/publish); 1-row publish ${pubMs}%.1f ms end-to-end " +
         f"=> tax ~ ${(fencedUs - preUs) / (pubMs * 10)}%.2f%% of the smallest possible publish")
-      // r14: the conditional-put backend's tax — the same smallest-real
-      // publish with the flip routed through cas-file (striped monitor +
-      // OS FileLock + read-compare + ATOMIC_MOVE instead of a blind
-      // rename). The delta vs the rename number above is what closing
-      // the double-flip window costs per commit.
-      val casDir = taxRoot.resolve("pubcas").toString
-      spark.conf.set(VersionedSnapshot.PointerStoreConf, "cas-file")
-      try {
-        VersionedSnapshot.publish(one, casDir, "warm", retain = 1)
-        val t3 = System.nanoTime()
-        (0 until K).foreach(j =>
-          VersionedSnapshot.publish(one, casDir, s"c$j", retain = 1))
-        val casMs = (System.nanoTime() - t3) / 1e6 / K
-        println(f"cas-file backend: 1-row publish ${casMs}%.1f ms end-to-end " +
-          f"(vs rename ${pubMs}%.1f ms => conditional-put delta " +
-          f"${(casMs - pubMs) * 1000}%.0f µs/publish)")
-      } finally spark.conf.unset(VersionedSnapshot.PointerStoreConf)
       org.apache.commons.io.FileUtils.deleteDirectory(taxRoot.toFile)
     }
 

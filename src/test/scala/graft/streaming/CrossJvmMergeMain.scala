@@ -16,10 +16,7 @@ import org.apache.spark.sql.SparkSession
   * CAS must coordinate through the filesystem alone. */
 object CrossJvmMergeMain {
   def main(args: Array[String]): Unit = {
-    // optional 8th arg: pointer-store backend name (r14 — lets the spec
-    // race the cas-file conditional put across OS processes, where its
-    // FileLock serialization is an OS lock, not a JVM monitor)
-    val Array(base, readyPath, gatePath, lo, hi, delta, delayMs) = args.take(7)
+    val Array(base, readyPath, gatePath, lo, hi, delta, delayMs) = args
     val spark = SparkSession.builder()
       .master("local[4]")
       .appName("graft-crossjvm-writer")
@@ -34,7 +31,6 @@ object CrossJvmMergeMain {
       // widen the staging→commit window so the two processes' merges
       // genuinely interleave instead of accidentally serializing
       spark.conf.set(VersionedSnapshot.TestDelayBeforeCommitConf, delayMs)
-      args.lift(7).foreach(spark.conf.set(VersionedSnapshot.PointerStoreConf, _))
       java.nio.file.Files.createFile(java.nio.file.Paths.get(readyPath))
       val deadline = System.currentTimeMillis() + 120000L
       while (!java.nio.file.Files.exists(java.nio.file.Paths.get(gatePath))) {

@@ -10,7 +10,9 @@ import java.util.concurrent.TimeUnit
   * NOT share. Here a second OS process (own JVM, own SparkSession, own
   * FileSystem/NIO state) races `mergeInto` against this JVM on one base
   * dir, so the `_claims` O_EXCL create, the fenced `_COMMIT_LOCK`, and
-  * the pointer CAS must coordinate through the filesystem alone.
+  * the pointer CAS must coordinate through the filesystem alone — on
+  * `file:` that CAS is the cas-file store, whose FileLock is an OS lock,
+  * so this race also proves it across JVMs.
   * Disjoint key effects make the racing merges commute, so the final
   * table is closed-form regardless of commit order — a lost update,
   * duplicated claim number, or swept live version shows up as a wrong
@@ -25,15 +27,6 @@ class CrossProcessMergeSpec extends SparkSpec {
   ).flatMap(p => Seq("--add-opens", s"java.base/$p=ALL-UNNAMED"))
 
   test("two OS processes race mergeInto on one table: claims + fenced CAS hold across JVMs") {
-    raceAcrossProcesses(backend = None)
-  }
-
-  test("the same two-process race through the cas-file conditional put: " +
-      "its FileLock serialization is an OS lock, proven across JVMs") {
-    raceAcrossProcesses(backend = Some(VersionedSnapshot.CasFilePointerStore.name))
-  }
-
-  private def raceAcrossProcesses(backend: Option[String]): Unit = {
     import spark.implicits._
     val tmp = Files.createTempDirectory("graft-xjvm")
     val base = tmp.resolve("snap").toString
@@ -51,8 +44,7 @@ class CrossProcessMergeSpec extends SparkSpec {
       "-Dspark.ui.enabled=false",
       "-cp", sys.props("java.class.path"),
       "graft.streaming.CrossJvmMergeMain",
-      base, ready.toString, gate.toString, "50", "100", "7", "1500") ++
-      backend.toSeq
+      base, ready.toString, gate.toString, "50", "100", "7", "1500")
     val pb = new ProcessBuilder(cmd: _*)
     pb.redirectErrorStream(true)
     pb.redirectOutput(childLog.toFile)
@@ -71,7 +63,6 @@ class CrossProcessMergeSpec extends SparkSpec {
       // commit window, released together with the child by the gate
       val srcA = (0L until 50L).map(k => (k, k * 10 + 1000)).toDF("k", "v")
       spark.conf.set(VersionedSnapshot.TestDelayBeforeCommitConf, "1500")
-      backend.foreach(spark.conf.set(VersionedSnapshot.PointerStoreConf, _))
       try {
         Files.createFile(gate)
         VersionedSnapshot.retryOnConflict() {
@@ -80,10 +71,7 @@ class CrossProcessMergeSpec extends SparkSpec {
             marker = "in-jvm-writer")
         }
         ()
-      } finally {
-        spark.conf.unset(VersionedSnapshot.TestDelayBeforeCommitConf)
-        backend.foreach(_ => spark.conf.unset(VersionedSnapshot.PointerStoreConf))
-      }
+      } finally spark.conf.unset(VersionedSnapshot.TestDelayBeforeCommitConf)
       assert(proc.waitFor(240, TimeUnit.SECONDS),
         "child JVM did not exit — " + tailOf(childLog))
       assert(proc.exitValue == 0,

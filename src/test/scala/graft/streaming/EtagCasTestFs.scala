@@ -17,6 +17,8 @@ class RemoteFileChangedException(path: String, msg: String)
   * without a live S3/ABFS endpoint. The doubled semantics are exactly
   * the store-side half of HADOOP-19256's conditional-write contract:
   *
+  *  - the filesystem reports `ETAGS_AVAILABLE` for every path, which is
+  *    what makes a table on it flip through etag-cas;
   *  - every file's `FileStatus` is an [[EtagSource]] whose etag is the
   *    md5 of the content — S3's simple-PUT etag semantics, so a
   *    successful flip always changes the etag (pointer content is a
@@ -60,6 +62,10 @@ class EtagCasTestFileSystem extends RawLocalFileSystem {
       null, null, null, s.getPath) with EtagSource {
     override def getEtag: String = etag
   }
+
+  override def hasPathCapability(p: Path, capability: String): Boolean =
+    CommonPathCapabilities.ETAGS_AVAILABLE.equalsIgnoreCase(capability) ||
+      super.hasPathCapability(p, capability)
 
   override def getFileStatus(p: Path): FileStatus = {
     val s = super.getFileStatus(p)

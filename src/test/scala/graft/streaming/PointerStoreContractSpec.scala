@@ -4,13 +4,12 @@ import graft.SparkSpec
 import java.nio.file.{Files, Paths}
 import org.apache.hadoop.fs.Path
 
-/** The CONTRACT a deployment [[VersionedSnapshot.PointerStore]] must
-  * satisfy before `graft.snapshot.pointerStore` may select it — written
-  * as reusable behaviors so an object-store backend (S3 `If-Match`,
-  * GCS generation-match, Azure ETag) is certified by subclassing with
-  * its store and a scratch location: the sandbox has no object store,
-  * but the contract is the part that must not drift, so deployment is
-  * "implement the trait, extend this spec, flip the conf".
+/** The CONTRACT a [[VersionedSnapshot.PointerStore]] must satisfy on
+  * the filesystems that select it — written as reusable behaviors so a
+  * store is certified by subclassing with the store and a scratch
+  * location on its filesystem. No object store is reachable from the
+  * test suite, but the contract is the part that must not drift: before
+  * a table is deployed on a new ETag store, run this spec against it.
   *
   * The five laws, each an independent test against a fresh pointer:
   *  1. create-if-absent: expected=None writes iff nothing exists.
@@ -133,18 +132,18 @@ class CasFilePointerStoreContractSpec extends PointerStoreContract {
   }
 }
 
-/** The rename backend passes the sequential laws (1-3) by construction
+/** The rename store passes the sequential laws (1-3) by construction
   * but is NOT certified: law 4 (single-winner under concurrency) is
   * exactly what it cannot promise without the external fenced lock,
-  * which is why [[VersionedSnapshot.commitPointer]] keeps that lock
-  * protocol for non-conditional stores. No subclass on purpose. */
+  * which is why [[VersionedSnapshot.commitPointer]] takes that lock
+  * around every flip. No subclass on purpose. */
 object RenameStoreIsNotCertified
 
 /** r15 certification of [[VersionedSnapshot.EtagPointerStore]] — the
   * S3A/ABFS deployment face over Hadoop's public conditional-write API
   * — against the etag-exposing local double. Laws 3/4 are precisely
   * what a store that silently IGNORED the mandatory etag key would
-  * fail, which is why certification gates the conf flip. */
+  * fail, which is why a new ETag store is certified before use. */
 class EtagPointerStoreContractSpec extends PointerStoreContract {
   protected def store: VersionedSnapshot.PointerStore =
     VersionedSnapshot.EtagPointerStore
@@ -180,8 +179,9 @@ class EtagPointerStoreContractSpec extends PointerStoreContract {
 
 /** End-to-end: the whole snapshot life cycle committing through
   * conditional puts on the etag store — merges, a CAS-losing concurrent
-  * writer, purge linearization — with `graft.snapshot.pointerStore =
-  * etag-cas`, proving the deployment face is a conf, not a port. */
+  * writer, purge linearization — on an `etagfs://` table, which flips
+  * through etag-cas because its filesystem reports ETags: deploying on
+  * an ETag object store takes no conf and no port. */
 class EtagBackendEndToEndSpec extends graft.SparkSpec {
   import spark.implicits._
   import VersionedSnapshot._
@@ -195,48 +195,45 @@ class EtagBackendEndToEndSpec extends graft.SparkSpec {
     val base = s"etagfs://$tmp/t"
     val f = new Path(base).getFileSystem(hc)
     assert(f.getScheme == "etagfs")
-    spark.conf.set(PointerStoreConf, EtagPointerStore.name)
-    try {
-      mergeInto(base, (0L until 40L).map(k => (k, k)).toDF("k", "v"),
-        Seq("k"), UpdateMatched, insertUnmatched = true, marker = "seed",
-        retain = 10, numBuckets = 4)
-      // two writers race on disjoint keys: every pointer flip is a
-      // conditional put; the loser's 412 surfaces as the retryable
-      // conflict and the retry lands it
-      val errs = new java.util.concurrent.ConcurrentLinkedQueue[Throwable]()
-      val ts = Seq(("a", 1L), ("b", 2L)).map { case (tag, off) =>
-        val t = new Thread(() => {
-          try (1 to 3).foreach { i =>
-            retryOnConflict(attempts = 30, backoffMs = 30L) {
-              mergeInto(base,
-                Seq((off * 100 + i, 1000L + i)).toDF("k", "v"), Seq("k"),
-                UpdateMatched, insertUnmatched = true,
-                marker = s"w-$tag-$i", retain = 10)
-            }
-            ()
-          } catch { case e: Throwable => errs.add(e); () }
-        }, s"graft-etag-w$tag")
-        t.start(); t
-      }
-      ts.foreach(_.join(120000))
-      assert(errs.isEmpty, s"racing writers must both land: ${errs.peek}")
-      val ks = read(spark, base).get.select("k").collect().map(_.getLong(0)).toSet
-      assert((1 to 3).forall(i => ks(100L + i) && ks(200L + i)),
-        s"a conditional-put loser's merge was dropped: $ks")
-      // purge linearizes through the same conditional commit
-      assert(purgeKeys(spark, base, Seq("k"), Seq(Seq(7L))) > 0)
-      assert(!read(spark, base).get.select("k").collect()
-        .map(_.getLong(0)).toSet.contains(7L))
-      // and the stream face reads the erasure back out
-      val ckpt = Files.createTempDirectory("graft-etag-ck").toString
-      var purgeSeen = false
-      changesStream(spark, base, Seq("k"), ckpt,
-          startVersion = Some(currentVersion(spark, base).get - 1)) {
-        (feed, _, _) =>
-          purgeSeen = feed.filter(org.apache.spark.sql.functions.col("op") === "purge")
-            .count() > 0
-      }
-      assert(purgeSeen, "the purge retraction must flow on the etag backend")
-    } finally spark.conf.unset(PointerStoreConf)
+    mergeInto(base, (0L until 40L).map(k => (k, k)).toDF("k", "v"),
+      Seq("k"), UpdateMatched, insertUnmatched = true, marker = "seed",
+      retain = 10, numBuckets = 4)
+    // two writers race on disjoint keys: every pointer flip is a
+    // conditional put; the loser's 412 surfaces as the retryable
+    // conflict and the retry lands it
+    val errs = new java.util.concurrent.ConcurrentLinkedQueue[Throwable]()
+    val ts = Seq(("a", 1L), ("b", 2L)).map { case (tag, off) =>
+      val t = new Thread(() => {
+        try (1 to 3).foreach { i =>
+          retryOnConflict(attempts = 30, backoffMs = 30L) {
+            mergeInto(base,
+              Seq((off * 100 + i, 1000L + i)).toDF("k", "v"), Seq("k"),
+              UpdateMatched, insertUnmatched = true,
+              marker = s"w-$tag-$i", retain = 10)
+          }
+          ()
+        } catch { case e: Throwable => errs.add(e); () }
+      }, s"graft-etag-w$tag")
+      t.start(); t
+    }
+    ts.foreach(_.join(120000))
+    assert(errs.isEmpty, s"racing writers must both land: ${errs.peek}")
+    val ks = read(spark, base).get.select("k").collect().map(_.getLong(0)).toSet
+    assert((1 to 3).forall(i => ks(100L + i) && ks(200L + i)),
+      s"a conditional-put loser's merge was dropped: $ks")
+    // purge linearizes through the same conditional commit
+    assert(purgeKeys(spark, base, Seq("k"), Seq(Seq(7L))) > 0)
+    assert(!read(spark, base).get.select("k").collect()
+      .map(_.getLong(0)).toSet.contains(7L))
+    // and the stream face reads the erasure back out
+    val ckpt = Files.createTempDirectory("graft-etag-ck").toString
+    var purgeSeen = false
+    changesStream(spark, base, Seq("k"), ckpt,
+        startVersion = Some(currentVersion(spark, base).get - 1)) {
+      (feed, _, _) =>
+        purgeSeen = feed.filter(org.apache.spark.sql.functions.col("op") === "purge")
+          .count() > 0
+    }
+    assert(purgeSeen, "the purge retraction must flow on the etag backend")
   }
 }

@@ -4,14 +4,16 @@ import graft.SparkSpec
 import java.nio.file.{Files, Paths}
 import org.apache.hadoop.fs.Path
 
-/** Unit-level pins on the pointer-commit backends ([[VersionedSnapshot
-  * .PointerStore]]): the CAS double's atomicity (exactly one winner per
-  * generation under thread races), its create-if-absent semantics, and
-  * the property the whole seam exists for — a committer that read the
-  * pointer, then stalled while another writer flipped it, LOSES when it
-  * finally writes, no matter how long the stall. The rename backend is
-  * pinned only for its compare behavior (it is documented non-atomic;
-  * the fenced lock around it is specced in SnapshotConcurrencySpec). */
+/** Unit-level pins on the pointer stores ([[VersionedSnapshot
+  * .PointerStore]]): which store each filesystem selects, the cas-file
+  * store's atomicity (exactly one winner per generation under thread
+  * races), its create-if-absent semantics, and the property the
+  * conditional stores exist for — a committer that read the pointer,
+  * then stalled while another writer flipped it, LOSES when it finally
+  * writes, no matter how long the stall. The rename store is pinned only
+  * for its compare behavior (it is documented non-atomic; the fenced
+  * lock around it is specced in HdfsSchemeSnapshotSpec and
+  * SnapshotStalledCommitterSpec). */
 class PointerStoreSpec extends SparkSpec {
 
   private def fsFor(dir: String) =
@@ -101,9 +103,6 @@ class PointerStoreSpec extends SparkSpec {
     assert(!store.putIfMatch(spark, f, ptr, "2", Some("0")),
       "a moved pointer must fail the compare")
     assert(contentOf(ptr).contains("1"))
-    assert(!store.conditional,
-      "rename must DECLARE itself non-conditional so commitPointer keeps " +
-        "the fenced-lock protocol around it")
   }
 
   test("cas-file refuses non-file schemes with a pointer to the deployment path") {
@@ -115,19 +114,27 @@ class PointerStoreSpec extends SparkSpec {
       store.putIfMatch(spark, gfs,
         new Path("graftfs:///tmp/nowhere/_CURRENT"), "0", None)
     }
-    assert(e.getMessage.contains("registerPointerStore"))
+    assert(e.getMessage.contains("graftfs") && e.getMessage.contains("etag-cas"))
   }
 
-  test("unknown pointerStore conf names fail loudly at commit, listing the registry") {
+  test("each filesystem flips through its one store: file → cas-file, " +
+      "an ETag filesystem → etag-cas, any other scheme → rename") {
     import spark.implicits._
-    val base = Files.createTempDirectory("graft-ps-conf").resolve("snap").toString
-    spark.conf.set(VersionedSnapshot.PointerStoreConf, "no-such-backend")
-    try {
-      val e = intercept[RuntimeException] {
+    val hc = spark.sparkContext.hadoopConfiguration
+    hc.set("fs.etagfs.impl", classOf[EtagCasTestFileSystem].getName)
+    hc.set("fs.AbstractFileSystem.etagfs.impl", classOf[EtagCasAbstractFs].getName)
+    hc.set("fs.graftfs.impl", classOf[GraftTestFileSystem].getName)
+    hc.set("fs.AbstractFileSystem.graftfs.impl", classOf[GraftTestAbstractFs].getName)
+    Seq("" -> "cas-file", "etagfs://" -> "etag-cas", "graftfs://" -> "rename")
+      .foreach { case (scheme, want) =>
+        val local = Files.createTempDirectory("graft-ps-sel").resolve("snap")
+        val base = scheme + local
         VersionedSnapshot.publish(Seq((1L, 1L)).toDF("k", "v"), base, "seed")
+        val got = VersionedSnapshot.detail(spark, base).head()
+          .getAs[String]("pointer_store")
+        assert(got == want, s"a '$scheme' table flipped through $got, not $want")
+        // the flip itself went through it: only cas-file leaves its lock file
+        assert(Files.exists(local.resolve("_CURRENT.caslock")) == (want == "cas-file"))
       }
-      assert(e.getMessage.contains("no-such-backend") &&
-        e.getMessage.contains("cas-file"))
-    } finally spark.conf.unset(VersionedSnapshot.PointerStoreConf)
   }
 }

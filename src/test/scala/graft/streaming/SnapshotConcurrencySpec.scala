@@ -14,28 +14,11 @@ import org.apache.spark.sql.functions._
   * publishing at once, a GC-paused committer whose lock was broken, a
   * leaked claim shielding or sweeping retained history.
   *
-  * The whole battery runs once per pointer-commit backend:
-  * [[SnapshotConcurrencySpec]] = default rename,
-  * [[SnapshotConcurrencyCasSpec]] = the conditional-put (`cas-file`)
-  * backend — every protocol invariant must hold identically under both
-  * (the backends differ only in whether the residual post-fence stall
-  * window exists, which SnapshotStalledCommitterSpec pins separately). */
-abstract class SnapshotConcurrencyBehaviors extends SparkSpec {
-
-  /** None = default (rename); Some(name) = conf-selected backend. */
-  protected def pointerStoreName: Option[String]
-
-  override def beforeAll(): Unit = {
-    super.beforeAll()
-    pointerStoreName.foreach(
-      spark.conf.set(VersionedSnapshot.PointerStoreConf, _))
-  }
-
-  override def afterAll(): Unit = {
-    pointerStoreName.foreach(_ =>
-      spark.conf.unset(VersionedSnapshot.PointerStoreConf))
-    super.afterAll()
-  }
+  * On `file:` tables every flip goes through the cas-file store, so
+  * each invariant here holds under the fenced lock AND the conditional
+  * put; SnapshotStalledCommitterSpec pins the one window in which the
+  * stores differ (rename's post-fence double flip). */
+class SnapshotConcurrencySpec extends SparkSpec {
 
   private def fsFor(dir: String) =
     new Path(dir).getFileSystem(spark.sparkContext.hadoopConfiguration)
@@ -366,15 +349,3 @@ abstract class SnapshotConcurrencyBehaviors extends SparkSpec {
   }
 }
 
-/** The battery under the default rename backend. */
-class SnapshotConcurrencySpec extends SnapshotConcurrencyBehaviors {
-  protected def pointerStoreName: Option[String] = None
-}
-
-/** The identical battery under the conditional-put backend: every
-  * interleaving the fenced-rename protocol survives must also hold when
-  * the flip is a genuine compare-and-swap. */
-class SnapshotConcurrencyCasSpec extends SnapshotConcurrencyBehaviors {
-  protected def pointerStoreName: Option[String] =
-    Some(VersionedSnapshot.CasFilePointerStore.name)
-}

@@ -9,8 +9,8 @@ import org.apache.spark.sql.functions._
 /** The one-row `DESCRIBE DETAIL` face ([[VersionedSnapshot.detail]]):
   * O(metadata), and it must surface the three health signals history()
   * cannot — clone borrows, pending (unreified) column drops/renames, and
-  * the active pointer backend — tracking each back to zero as the table
-  * is localized/normalized. */
+  * the pointer store its filesystem selects — tracking each back to zero
+  * as the table is localized/normalized. */
 class SnapshotDetailSpec extends SparkSpec {
   import spark.implicits._
 

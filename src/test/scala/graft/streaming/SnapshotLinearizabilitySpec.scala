@@ -34,24 +34,10 @@ class SnapshotLinearizabilitySpec extends SparkSpec {
     fuzz()
   }
 
-  test("the same fuzz through the cas-file conditional-put backend") {
-    spark.conf.set(VersionedSnapshot.PointerStoreConf,
-      VersionedSnapshot.CasFilePointerStore.name)
-    try fuzz()
-    finally spark.conf.unset(VersionedSnapshot.PointerStoreConf)
-  }
-
   test("retention storm (r15): aggressive compact-retention interleaves " +
       "with merges, overlays, restores and purges — no op errors out on " +
       "retired-version collateral, and current matches the recorded fold") {
     retentionStorm()
-  }
-
-  test("the same retention storm through the cas-file backend") {
-    spark.conf.set(VersionedSnapshot.PointerStoreConf,
-      VersionedSnapshot.CasFilePointerStore.name)
-    try retentionStorm()
-    finally spark.conf.unset(VersionedSnapshot.PointerStoreConf)
   }
 
   test("retention storm with a live replica (r16): replicateTo races " +
@@ -59,13 +45,6 @@ class SnapshotLinearizabilitySpec extends SparkSpec {
       "absorbs transient collateral, rebases on horizon loss, propagates " +
       "renames, and converges to the source's quiesced state") {
     retentionStorm(withReplica = true)
-  }
-
-  test("the same replica storm through the cas-file backend") {
-    spark.conf.set(VersionedSnapshot.PointerStoreConf,
-      VersionedSnapshot.CasFilePointerStore.name)
-    try retentionStorm(withReplica = true)
-    finally spark.conf.unset(VersionedSnapshot.PointerStoreConf)
   }
 
   /** r15: both judge-visible r14 races (the fixed purge-vs-purge lost

@@ -4,24 +4,25 @@ import graft.SparkSpec
 import java.nio.file.Files
 import org.apache.hadoop.fs.Path
 
-/** THE window the r14 conditional-put backend exists to close, driven
-  * end-to-end through `publish` under both backends with the identical
-  * interleaving:
+/** THE window the conditional-put stores exist to close, driven
+  * end-to-end through `publish` on each store's own filesystem with the
+  * identical interleaving:
   *
   *   writer A passes its CAS check AND its lock-fence read-back, then
   *   stalls (GC pause / object-store stall); a successor breaks A's
   *   now-stale lock, commits, and moves on; A wakes and writes.
   *
-  * Under the default rename backend A's blind rename lands ON TOP of the
-  * successor's commit — the double flip the r13 scaladoc documented as
-  * un-closeable with filesystem primitives (the fence read happened
-  * BEFORE the stall, so it proved nothing about the world A wakes into).
-  * Under the cas-file backend the same late write is REFUSED by the
+  * On an HDFS-like filesystem (the `graftfs` double: no `file:` scheme,
+  * no ETags) the flip is the rename store, and A's compare-then-rename
+  * lands ON TOP of the successor's commit — the double flip filesystem
+  * rename cannot close (the fence read happened BEFORE the stall, so it
+  * proved nothing about the world A wakes into). On `file:` (cas-file)
+  * and on an ETag store (etag-cas) the same late write is REFUSED by the
   * store itself — the compare and the write are one atomic unit at wake
   * time — so the successor's commit survives and A aborts retryably.
-  * The first test pins the window OPEN on rename (so if someone
-  * "fixes" rename into safety silently, we learn our model is wrong);
-  * the second pins it CLOSED on cas-file. */
+  * The first test pins the window OPEN on rename (so if someone "fixes"
+  * rename into safety silently, we learn our model is wrong); the other
+  * two pin it CLOSED. */
 class SnapshotStalledCommitterSpec extends SparkSpec {
 
   private val StallTag = "graft-stalled-committer"
@@ -34,18 +35,16 @@ class SnapshotStalledCommitterSpec extends SparkSpec {
   /** Run the interleaving once; None = inconclusive scheduling (A woke
     * before the successor committed), retried by [[scenario]]. Some =
     * (v0, A's outcome, successor's version, final pointer, base). */
-  private def runScenario(backend: Option[String], tag: String,
-      schemePrefix: String = ""):
+  private def runScenario(tag: String, schemePrefix: String):
       Option[(Long, Option[Throwable], Long, Long, String)] = {
     import spark.implicits._
-    // schemePrefix routes the TABLE through a non-file FileSystem (the
-    // etag double) while the spec's own white-box reads stay on the
-    // underlying local path
+    // schemePrefix routes the TABLE through a non-file FileSystem (and so
+    // through that filesystem's pointer store) while the spec's own
+    // white-box reads stay on the underlying local path
     val localBase = Files.createTempDirectory(s"graft-stall-$tag").resolve("snap").toString
     val base = schemePrefix + localBase
     VersionedSnapshot.publish(Seq((1L, 1L)).toDF("k", "v"), base, "seed", retain = 5)
     val v0 = VersionedSnapshot.currentVersion(spark, base).get
-    backend.foreach(spark.conf.set(VersionedSnapshot.PointerStoreConf, _))
     // only threads named with the tag stall at the post-fence seam — the
     // successor (this thread) runs the same code unstalled
     spark.conf.set(VersionedSnapshot.TestDelayAfterFenceConf, s"8000:$StallTag")
@@ -89,14 +88,12 @@ class SnapshotStalledCommitterSpec extends SparkSpec {
     } finally {
       spark.conf.unset(VersionedSnapshot.TestDelayAfterFenceConf)
       spark.conf.unset(VersionedSnapshot.CommitLockStaleMsConf)
-      backend.foreach(_ => spark.conf.unset(VersionedSnapshot.PointerStoreConf))
     }
   }
 
-  private def scenario(backend: Option[String], tag: String,
-      schemePrefix: String = ""):
+  private def scenario(tag: String, schemePrefix: String = ""):
       (Long, Option[Throwable], Long, Long, String) = {
-    val r = (1 to 3).iterator.map(i => runScenario(backend, s"$tag$i", schemePrefix))
+    val r = (1 to 3).iterator.map(i => runScenario(s"$tag$i", schemePrefix))
       .collectFirst { case Some(x) => x }
     assert(r.nonEmpty,
       "A kept waking before the successor committed across 3 attempts")
@@ -105,7 +102,12 @@ class SnapshotStalledCommitterSpec extends SparkSpec {
 
   test("rename backend: the post-fence stall window is REAL — the stalled " +
       "committer overwrites the successor (the documented residual hazard)") {
-    val (v0, aOutcome, vSucc, ptrFinal, _) = scenario(None, "rename")
+    val hc = spark.sparkContext.hadoopConfiguration
+    hc.set("fs.graftfs.impl", classOf[GraftTestFileSystem].getName)
+    hc.set("fs.AbstractFileSystem.graftfs.impl", classOf[GraftTestAbstractFs].getName)
+    val (v0, aOutcome, vSucc, ptrFinal, base) = scenario("rename", "graftfs://")
+    assert(VersionedSnapshot.detail(spark, base).head()
+      .getAs[String]("pointer_store") == "rename")
     assert(aOutcome.isEmpty,
       s"under rename the stalled committer believes it succeeded, got $aOutcome")
     assert(ptrFinal != vSucc && ptrFinal == v0 + 1,
@@ -116,7 +118,7 @@ class SnapshotStalledCommitterSpec extends SparkSpec {
 
   test("cas-file backend: the identical stall LOSES — the successor's commit " +
       "survives and the stalled committer aborts retryably") {
-    val (v0, aOutcome, vSucc, ptrFinal, base) = scenario(Some("cas-file"), "cas")
+    val (v0, aOutcome, vSucc, ptrFinal, base) = scenario("cas")
     assert(ptrFinal == vSucc,
       s"the successor's commit must survive the stalled committer's wake " +
         s"(ptr=$ptrFinal, successor=$vSucc)")
@@ -144,7 +146,7 @@ class SnapshotStalledCommitterSpec extends SparkSpec {
     hc.set("fs.etagfs.impl", classOf[EtagCasTestFileSystem].getName)
     hc.set("fs.AbstractFileSystem.etagfs.impl", classOf[EtagCasAbstractFs].getName)
     val (v0, aOutcome, vSucc, ptrFinal, base) =
-      scenario(Some("etag-cas"), "etag", "etagfs://")
+      scenario("etag", "etagfs://")
     assert(ptrFinal == vSucc,
       s"the successor's commit must survive the stalled committer's wake " +
         s"(ptr=$ptrFinal, successor=$vSucc)")

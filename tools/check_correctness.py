@@ -7,6 +7,7 @@ For each query result parquet under <verifyOutDir>/<name>/, runs the
 corresponding oracle SQL (from <verifyOutDir>/oracle_sql.json) in DuckDB
 against the parquet tables in <sfDir>, sorts columns by name and rows by
 value, and compares row counts, schemas (loosely) and value hashes.
+Exits non-zero on any failure, and when the dump holds no query at all.
 """
 import sys, json, glob, hashlib
 import duckdb
@@ -83,6 +84,10 @@ def main(sf_dir, out_dir):
                n.rstrip('/').split('/')[-1] not in oracle]
     for n in sorted(skipped):
         print(f"{n.rstrip('/').split('/')[-1]:24s} (no oracle — rows-only)")
+    if not oracle:
+        # an empty dump (e.g. a mistyped Verify prefix filter) proves nothing
+        print("NO QUERY COMPARED: oracle_sql.json is empty")
+        sys.exit(1)
     sys.exit(1 if failures else 0)
 
 
