@@ -27,6 +27,18 @@ class CrossProcessMergeSpec extends SparkSpec {
   ).flatMap(p => Seq("--add-opens", s"java.base/$p=ALL-UNNAMED"))
 
   test("two OS processes race mergeInto on one table: claims + fenced CAS hold across JVMs") {
+    raceAcrossProcesses()
+  }
+
+  // kept under the name it had when a conf chose cas-file for it: `file:`
+  // tables now always flip through cas-file, so this is a second sample
+  // of the same cross-process race
+  test("the same two-process race through the cas-file conditional put: " +
+      "its FileLock serialization is an OS lock, proven across JVMs") {
+    raceAcrossProcesses()
+  }
+
+  private def raceAcrossProcesses(): Unit = {
     import spark.implicits._
     val tmp = Files.createTempDirectory("graft-xjvm")
     val base = tmp.resolve("snap").toString

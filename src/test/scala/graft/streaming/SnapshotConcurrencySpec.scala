@@ -17,7 +17,9 @@ import org.apache.spark.sql.functions._
   * On `file:` tables every flip goes through the cas-file store, so
   * each invariant here holds under the fenced lock AND the conditional
   * put; SnapshotStalledCommitterSpec pins the one window in which the
-  * stores differ (rename's post-fence double flip). */
+  * stores differ (rename's post-fence double flip).
+  *
+  * [[SnapshotConcurrencyCasSpec]] runs the battery a second time. */
 class SnapshotConcurrencySpec extends SparkSpec {
 
   private def fsFor(dir: String) =
@@ -349,3 +351,8 @@ class SnapshotConcurrencySpec extends SparkSpec {
   }
 }
 
+/** The same battery a second time, under the name it had when a conf
+  * chose the cas-file store for it. `file:` tables now always flip
+  * through cas-file, so this is a second sample of the same thread
+  * interleavings, not a second backend. */
+class SnapshotConcurrencyCasSpec extends SnapshotConcurrencySpec

@@ -34,9 +34,21 @@ class SnapshotLinearizabilitySpec extends SparkSpec {
     fuzz()
   }
 
+  // The three "through the cas-file" tests below rerun their battery
+  // under the names they had when a conf chose the store: `file:` tables
+  // now always flip through cas-file, so each is a second sample of the
+  // same thread interleavings.
+  test("the same fuzz through the cas-file conditional-put backend") {
+    fuzz()
+  }
+
   test("retention storm (r15): aggressive compact-retention interleaves " +
       "with merges, overlays, restores and purges — no op errors out on " +
       "retired-version collateral, and current matches the recorded fold") {
+    retentionStorm()
+  }
+
+  test("the same retention storm through the cas-file backend") {
     retentionStorm()
   }
 
@@ -44,6 +56,10 @@ class SnapshotLinearizabilitySpec extends SparkSpec {
       "merges, renames, restores, purges and aggressive retention — " +
       "absorbs transient collateral, rebases on horizon loss, propagates " +
       "renames, and converges to the source's quiesced state") {
+    retentionStorm(withReplica = true)
+  }
+
+  test("the same replica storm through the cas-file backend") {
     retentionStorm(withReplica = true)
   }
 
