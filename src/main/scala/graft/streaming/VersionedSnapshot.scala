@@ -48,7 +48,12 @@ import org.apache.spark.sql.streaming.DataStreamWriter
   * record additionally carries a per-file key min/max zonemap (the Delta
   * `stats` / Iceberg bounds analog) that [[readForKeys]] and
   * update/delete-only [[mergeInto]] consult to skip files hash pruning
-  * alone cannot rule out.
+  * alone cannot rule out. The skip rule lives in one place, the zonemap
+  * consult: [[refsNaming]] (which stats entries a manifest ref names),
+  * [[filesByRef]] + [[consult]] (a ref list split into bound and
+  * skipped files), [[zoneMeets]] (the range test), [[probeAggs]] +
+  * [[probesOf]] (the wanted ranges) and [[bindRefs]]; every read, merge,
+  * stats carry-forward, purge and clone asks it.
   *
   * Why a pointer commit rather than a directory rename-swap:
   *  - **Reader atomicity.** A swap has a window where the snapshot path
@@ -764,7 +769,7 @@ object VersionedSnapshot {
     * versions through this. */
   private def readForKeysAt(spark: SparkSession, baseDir: String, v: Long,
       keyRows: DataFrame, viewV: Long = -1L): DataFrame = {
-      import org.apache.spark.sql.functions.{collect_set, max => fMax, min => fMin}
+      import org.apache.spark.sql.functions.collect_set
       val base = new Path(baseDir)
       val vdir = versionPath(base, v)
       val rec = recordOf(fs(spark, baseDir), vdir)
@@ -800,20 +805,11 @@ object VersionedSnapshot {
       val wanted = aligned.distinct()
       val baseFrame = rec.buckets match {
         case Some((nb, entries)) =>
-          val zones = rec.zones
           val wTags = keyCols.map(c => zoneTag(wanted.schema(c).dataType))
           // ONE driver job: the keys' bucket set and per-column value
           // ranges (+ null presence) together
           val aggs = Seq(collect_set(bucketOf(keyCols, nb)).as("__bs"),
-            count(lit(1)).as("__n")) ++
-            keyCols.zip(wTags).flatMap { case (c, tag) =>
-              if (tag == "x") Nil
-              else {
-                val e = zoneNormExpr(wanted.schema(c).dataType, c)
-                Seq(fMin(e).as(s"__min_$c"), fMax(e).as(s"__max_$c"),
-                  fMax(col(c).isNull.cast("int")).as(s"__null_$c"))
-              }
-            }
+            count(lit(1)).as("__n")) ++ probeAggs(wanted.schema, keyCols, wTags)
           val row = wanted.agg(aggs.head, aggs.tail: _*).collect()(0)
           val touched = row.getAs[Seq[Int]]("__bs").toSet
           val nWanted = row.getAs[Long]("__n")
@@ -832,81 +828,39 @@ object VersionedSnapshot {
             else rec.blooms.filter(_._1 == keyCols).map(_._2)
           val wantedHashes: Array[(Long, Long)] = keyVals.map(r =>
             (r.getAs[Long]("__h1"), r.getAs[Long]("__h2")))
-          def bloomKeeps(frel: String): Boolean = blooms match {
-            case Some(bs) => bs.get(frel) match {
-              case Some(b) => wantedHashes.exists { case (h1, h2) =>
-                bloomMayContain(b, h1, h2) }
-              case None => true // no bloom for this file: cannot prune
-            }
-            case None => true
+          def bloomKeeps(frel: String): Boolean =
+            blooms.flatMap(_.get(frel)).forall(b => // no bloom: cannot prune
+              wantedHashes.exists { case (h1, h2) => bloomMayContain(b, h1, h2) })
+          val probes = probesOf(row, keyCols, wTags)
+          val refs = touched.toSeq.sorted.flatMap(entries.get).flatten
+          val bound = rec.zones.filter(z => z.keys == keyCols && z.tags == wTags) match {
+            case Some(z) =>
+              consult(refs, filesByRef(z.entries)) { case (frel, (_, fRanges)) =>
+                zoneMeets(fRanges, probes) && bloomKeeps(frel)
+              }._1
+            // no zonemap or key-shape drift: bucket-level binding, but
+            // the blooms section can still prune per file
+            case None =>
+              blooms.fold(refs)(bs =>
+                consult(refs, filesByRef(bs))((frel, _) => bloomKeeps(frel))._1)
           }
-          val wRanges: Seq[Option[(String, String)]] =
-            keyCols.zip(wTags).map { case (c, tag) =>
-              if (tag == "x" || touched.isEmpty) None
-              // a wanted NULL key can live in any file (file stats cover
-              // non-null values only) — no pruning on this column then
-              else if (row.getAs[Int](s"__null_$c") == 1) None
-              else for {
-                lo <- renderZoneVal(tag, row.getAs[Any](s"__min_$c"))
-                hi <- renderZoneVal(tag, row.getAs[Any](s"__max_$c"))
-              } yield (lo, hi)
+          // fully pruned: an empty relation of the snapshot's schema
+          val scan = bindRefs(spark, base, bound)(tableSchema)
+          // row-group pushdown: literal-sized key sets become an IN
+          // filter the parquet reader can evaluate against row-group
+          // stats/dictionaries. Per-column (a superset on composite
+          // keys — the final semi-join keeps semantics exact); a
+          // column with a wanted NULL key contributes no filter
+          // (IN never matches NULL).
+          if (bound.isEmpty || keyVals.isEmpty) scan
+          else {
+            val perCol = keyCols.zipWithIndex.map { case (c, i) =>
+              val vals = keyVals.map(_.get(i)).toSeq.distinct
+              if (vals.contains(null)) lit(true)
+              else col(c).isInCollection(vals)
             }
-          // a manifest ref is a bucket dir or (r10 partial merges) one
-          // file: dir refs expand through the zone/bloom prefix keys, file
-          // refs look themselves up exactly
-          val paths = touched.toSeq.sorted.flatMap(entries.get).flatten.flatMap { rel =>
-            zones match {
-              case Some(z) if z.keys == keyCols && z.tags == wTags =>
-                val files =
-                  if (isFileRef(rel)) z.entries.get(rel).map(rel -> _).toSeq
-                  else z.entries.toSeq.filter(_._1.startsWith(rel + "/"))
-                if (files.isEmpty) Seq(rel) // no stats for this ref
-                else files.collect {
-                  case (frel, (_, fRanges)) if keyCols.indices.forall { i =>
-                        (fRanges(i), wRanges(i)) match {
-                          case (Some(fr), Some(wr)) => zoneOverlaps(wTags(i), fr, wr)
-                          case _ => true // missing stats on either side
-                        }
-                      } && bloomKeeps(frel) => frel
-                }.sorted
-              // no zonemap or key-shape drift: bucket-level binding, but
-              // the blooms section can still prune per file
-              case _ =>
-                rec.blooms.filter(_._1 == keyCols) match {
-                  case Some((_, bs)) if keyVals.nonEmpty =>
-                    val files =
-                      if (isFileRef(rel)) bs.keys.toSeq.filter(_ == rel)
-                      else bs.keys.toSeq.filter(_.startsWith(rel + "/"))
-                    if (files.isEmpty) Seq(rel)
-                    else files.filter(bloomKeeps).sorted
-                  case _ => Seq(rel)
-                }
-            }
-          }.map(rel => resolveRef(base, rel).toString)
-          if (paths.nonEmpty) {
-            val scan = readUniform(spark, paths)
-            // row-group pushdown: literal-sized key sets become an IN
-            // filter the parquet reader can evaluate against row-group
-            // stats/dictionaries. Per-column (a superset on composite
-            // keys — the final semi-join keeps semantics exact); a
-            // column with a wanted NULL key contributes no filter
-            // (IN never matches NULL).
-            if (keyVals.nonEmpty) {
-              val perCol = keyCols.zipWithIndex.map { case (c, i) =>
-                val vals = keyVals.map(_.get(i)).toSeq.distinct
-                if (vals.contains(null)) lit(true)
-                else col(c).isInCollection(vals)
-              }
-              scan.filter(perCol.reduce(_ && _))
-            } else scan
-          } else
-            // fully pruned: an empty LOCAL relation with the snapshot's
-            // schema (schema comes from one driver-side footer read) — a
-            // limit(0) over the version frame would still BIND every data
-            // file, defeating the point of reading zero of them
-            spark.createDataFrame(
-              spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
-              tableSchema)
+            scan.filter(perCol.reduce(_ && _))
+          }
         case None => readUniform(spark, Seq(vdir.toString))
       }
       presentLogical(reconcileOverlays(spark, base, rec.deltas, baseFrame)
@@ -943,16 +897,6 @@ object VersionedSnapshot {
     norm.flatMap(renderZoneVal(tag, _))
   }
 
-  /** Could a file's [min,max] intersect the (possibly half-open) wanted
-    * range? Errs on true — absent bounds or undecodable values never
-    * prune. */
-  private def zoneRangeMatches(tag: String, fr: (String, String),
-      lo: Option[String], hi: Option[String]): Boolean = {
-    val wantedBelowFile = hi.flatMap(h => zoneLt(tag, h, fr._1)) // hi < fileMin
-    val fileBelowWanted = lo.flatMap(l => zoneLt(tag, fr._2, l)) // fileMax < lo
-    !(wantedBelowFile.getOrElse(false) || fileBelowWanted.getOrElse(false))
-  }
-
   /** Current-version read pruned by VALUE-column range predicates — the
     * data-skipping read Delta/Iceberg serve from their per-file column
     * stats, from the same zonemap that serves key pruning.
@@ -984,40 +928,24 @@ object VersionedSnapshot {
     val ranges = rangesL.map { case (c, b) => cm.toPhysical(c) -> b }
     val baseFrame = rec.buckets match {
       case Some((_, entries)) =>
-        val zones = rec.zones
-        val paths = entries.toSeq.sortBy(_._1).flatMap(_._2).flatMap { rel =>
-          zones match {
-            case Some(z) =>
-              val statCols = z.keys ++ z.vcols
-              val statTags = z.tags ++ z.vtags
-              val checks = ranges.toSeq.flatMap { case (c, (lo, hi)) =>
-                val i = statCols.indexOf(c)
-                if (i < 0) None
-                else Some((i, statTags(i),
-                  lo.flatMap(renderZoneLiteral(statTags(i), _)),
-                  hi.flatMap(renderZoneLiteral(statTags(i), _))))
-              }
-              val files =
-                if (isFileRef(rel)) z.entries.get(rel).map(rel -> _).toSeq
-                else z.entries.toSeq.filter(_._1.startsWith(rel + "/"))
-              if (files.isEmpty) Seq(rel) // no stats for this ref
-              else files.collect {
-                case (frel, (_, fRanges))
-                    if checks.forall { case (i, tag, lo, hi) =>
-                      fRanges.lift(i).flatten match {
-                        case Some(fr) => zoneRangeMatches(tag, fr, lo, hi)
-                        case None => true // no stats on either side
-                      }
-                    } => frel
-              }.sorted
-            case None => Seq(rel) // no zonemap
-          }
-        }.map(rel => resolveRef(base, rel).toString)
-        if (paths.nonEmpty) readUniform(spark, paths)
-        else
-          spark.createDataFrame(
-            spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
-            rawFrame(spark, base, vdir, rec).schema)
+        val refs = entries.toSeq.sortBy(_._1).flatMap(_._2)
+        val bound = rec.zones match {
+          case Some(z) =>
+            val statCols = z.keys ++ z.vcols
+            val statTags = z.tags ++ z.vtags
+            val probes = ranges.toSeq.flatMap { case (c, (lo, hi)) =>
+              val i = statCols.indexOf(c)
+              if (i < 0) None
+              else Some(ZoneProbe(i, statTags(i),
+                lo.flatMap(renderZoneLiteral(statTags(i), _)),
+                hi.flatMap(renderZoneLiteral(statTags(i), _))))
+            }
+            consult(refs, filesByRef(z.entries)) { case (_, (_, fRanges)) =>
+              zoneMeets(fRanges, probes)
+            }._1
+          case None => refs // no zonemap
+        }
+        bindRefs(spark, base, bound)(rawFrame(spark, base, vdir, rec).schema)
       case None => readUniform(spark, Seq(vdir.toString))
     }
     val reconciled = presentLogical(
@@ -1110,15 +1038,10 @@ object VersionedSnapshot {
         if (shared.isEmpty) full()
         else {
           def pruned(v: Long, rec: Commit, entries: Map[Int, Seq[String]]) = {
-            val paths = entries.toSeq.sortBy(_._1)
-              .flatMap(_._2).filterNot(shared)
-              .map(rel => resolveRef(base, rel).toString)
-            val raw =
-              if (paths.nonEmpty) readUniform(spark, paths)
-              else spark.createDataFrame(
-                spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
-                rawFrame(spark, base, versionPath(base, v), rec).schema)
-            presentLogical(raw, crossColMap(spark, baseDir, v, toVersion))
+            val refs = entries.toSeq.sortBy(_._1).flatMap(_._2).filterNot(shared)
+            presentLogical(
+              bindRefs(spark, base, refs)(rawFrame(spark, base, versionPath(base, v), rec).schema),
+              crossColMap(spark, baseDir, v, toVersion))
           }
           (pruned(fromVersion, recA, eA), pruned(toVersion, recB, eB))
         }
@@ -1709,14 +1632,107 @@ object VersionedSnapshot {
       case _: NumberFormatException | _: IllegalArgumentException => None
     }
 
-  /** Could ranges [aMin,aMax] and [bMin,bMax] intersect? Errs on true. */
-  private def zoneOverlaps(tag: String, a: (String, String), b: (String, String)): Boolean = {
-    val disjoint = for {
-      aBelowB <- zoneLt(tag, a._2, b._1) // aMax < bMin
-      bBelowA <- zoneLt(tag, b._2, a._1) // bMax < aMin
-    } yield aBelowB || bBelowA
-    !disjoint.getOrElse(false)
+  // ---------------------------------------------------- the zonemap consult
+  // The file-skipping rule lives here and nowhere else: which stats
+  // entries a manifest ref names ([[refsNaming]], indexed by
+  // [[filesByRef]]), which files a consult binds or skips ([[consult]]),
+  // whether a file's range can meet a wanted one ([[zoneMeets]]), and the
+  // probe side's ranges ([[probeAggs]] + [[probesOf]]). The key read, the
+  // value-range read, mergeInto's file split, stats carry-forward, purge
+  // and clone all ask these.
+
+  /** The manifest refs that name data file `frel`: the file itself (a
+    * file ref, r10 partial merges) and every directory it sits under (a
+    * dir ref covers `rel + "/"`…). A set of refs names `frel` iff this
+    * meets it — O(path depth) per file, whatever the manifest's size. */
+  private def refsNaming(frel: String): Iterator[String] = {
+    val dirs = Iterator.iterate(frel.lastIndexOf('/'))(i => frel.lastIndexOf('/', i - 1))
+      .takeWhile(_ >= 0).map(frel.substring(0, _)).filterNot(isFileRef)
+    if (isFileRef(frel)) Iterator.single(frel) ++ dirs else dirs
   }
+
+  /** Per-file stats (zone entries or blooms) indexed by the refs that name
+    * them, each ref's files sorted — built once per consult, so expanding
+    * a ref is one lookup, not a scan of every entry. */
+  private def filesByRef[V](stats: Map[String, V]): Map[String, Seq[(String, V)]] =
+    stats.toSeq.sortBy(_._1)
+      .flatMap { case e @ (frel, _) => refsNaming(frel).map(_ -> e) }
+      .groupMap(_._1)(_._2)
+
+  /** `refs` expanded through indexed per-file stats into (bound, skipped)
+    * files: a file is skipped only when `keeps` rejects it. A ref no stats
+    * entry falls under is bound whole and never skipped — its files are
+    * unknown, so a merge can never carry it. Bound files keep `refs`
+    * order. */
+  private def consult[V](refs: Seq[String], byRef: Map[String, Seq[(String, V)]])(
+      keeps: (String, V) => Boolean): (Seq[String], Seq[String]) = {
+    val (bound, skipped) = refs.map { rel =>
+      byRef.get(rel) match {
+        case None => (Seq(rel), Nil)
+        case Some(files) =>
+          val (k, s) = files.partition { case (frel, v) => keeps(frel, v) }
+          (k.map(_._1), s.map(_._1))
+      }
+    }.unzip
+    (bound.flatten, skipped.flatten)
+  }
+
+  /** A wanted range on stats column `i` (either bound open), in the
+    * zonemap's at-rest form, compared under `tag`. */
+  private final case class ZoneProbe(i: Int, tag: String,
+      lo: Option[String], hi: Option[String])
+
+  /** Can a file with per-column stats `fRanges` hold a row inside every
+    * probe? Superset rule: a file fails only when a decoded comparison
+    * proves it disjoint (hi < fileMin or fileMax < lo); absent stats or
+    * undecodable values never prune. */
+  private def zoneMeets(fRanges: Seq[Option[(String, String)]],
+      probes: Seq[ZoneProbe]): Boolean =
+    probes.forall { p =>
+      fRanges.lift(p.i).flatten.forall { case (fMin, fMax) =>
+        !(p.hi.flatMap(zoneLt(p.tag, _, fMin)).getOrElse(false) ||
+          p.lo.flatMap(zoneLt(p.tag, fMax, _)).getOrElse(false))
+      }
+    }
+
+  /** The probe side's aggregate: per prunable column of `cols`, the
+    * min/max of its zone-normalized value and whether a NULL occurs —
+    * decoded per aggregated row by [[probesOf]]. */
+  private def probeAggs(schema: org.apache.spark.sql.types.StructType,
+      cols: Seq[String], tags: Seq[String]): Seq[Column] = {
+    import org.apache.spark.sql.functions.{max => fMax, min => fMin}
+    cols.zip(tags).flatMap { case (c, tag) =>
+      if (tag == "x") Nil
+      else {
+        val e = zoneNormExpr(schema(c).dataType, c)
+        Seq(fMin(e).as(s"__min_$c"), fMax(e).as(s"__max_$c"),
+          fMax(col(c).isNull.cast("int")).as(s"__null_$c"))
+      }
+    }
+  }
+
+  /** One [[probeAggs]] row as closed probes on `cols`' positions. A column
+    * probes nothing when it has no stats tag, holds a wanted NULL (a NULL
+    * key can live in any file: file stats cover non-null values only), or
+    * has a bound that does not render. */
+  private def probesOf(r: org.apache.spark.sql.Row, cols: Seq[String],
+      tags: Seq[String]): Seq[ZoneProbe] =
+    cols.zip(tags).zipWithIndex.flatMap { case ((c, tag), i) =>
+      if (tag == "x" || r.getAs[Int](s"__null_$c") == 1) None
+      else for {
+        lo <- renderZoneVal(tag, r.getAs[Any](s"__min_$c"))
+        hi <- renderZoneVal(tag, r.getAs[Any](s"__max_$c"))
+      } yield ZoneProbe(i, tag, Some(lo), Some(hi))
+    }
+
+  /** Bind `refs` as one frame or, when none is left to bind, an empty
+    * LOCAL relation of the version's schema: a limit(0) over the version
+    * frame would still bind every data file. */
+  private def bindRefs(spark: SparkSession, base: Path, refs: Seq[String])(
+      schema: => org.apache.spark.sql.types.StructType): DataFrame =
+    if (refs.nonEmpty) readUniform(spark, refs.map(rel => resolveRef(base, rel).toString))
+    else spark.createDataFrame(
+      spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], schema)
 
   /** One version's zonemap: the merge-key columns and their tags, plus
     * (r9) optional VALUE-column stats (`vcols`/`vtags` — the Delta
@@ -2480,11 +2496,8 @@ object VersionedSnapshot {
     // as is (no refs inside)
     def cloneRecord(refMap: Map[String, String]): Commit = {
       def km(key: String): String =
-        refMap.getOrElse(key,
-          refMap.collectFirst {
-            case (o, n) if !isFileRef(o) && key.startsWith(o + "/") =>
-              n + key.substring(o.length)
-          }.getOrElse(key))
+        refMap.getOrElse(key, refsNaming(key).find(refMap.contains)
+          .map(o => refMap(o) + key.substring(o.length)).getOrElse(key))
       srcRec.derive(cloneMarker).copy(
         buckets = bucketsOpt.map { case (nb, entries) =>
           nb -> entries.map { case (b, rels) => b -> rels.map(refMap) } },
@@ -3613,9 +3626,9 @@ object VersionedSnapshot {
             }
         }
       }.toSet
+    val matchedRefs: Set[String] = matchedFiles.flatMap(refsNaming)
     def matched(rel: String): Boolean =
-      matchedFiles.contains(rel) ||
-        (!isFileRef(rel) && matchedFiles.exists(_.startsWith(rel + "/")))
+      matchedFiles.contains(rel) || matchedRefs.contains(rel)
 
     // shared-ref memo: rewrite each matching data ref exactly once, no
     // matter how many retained versions reference it
@@ -3625,7 +3638,7 @@ object VersionedSnapshot {
         // the ref's own key naming (dir refs and their file-level
         // children share a generation, hence a naming)
         val pkV = relKeys.getOrElse(rel, relKeys.collectFirst {
-          case (r, pk) if rel.startsWith(r + "/") || r.startsWith(rel + "/") => pk
+          case (r, pk) if refsNaming(rel).contains(r) || refsNaming(r).contains(rel) => pk
         }.getOrElse(pKeys))
         val d = readUniform(spark, Seq(resolveRef(base, rel).toString))
         // "" for overlays; file refs rewrite into their bucket subdir.
@@ -3696,10 +3709,7 @@ object VersionedSnapshot {
         // lacks)
         val newDirs = bucketUpdates.values.toSeq.distinct.map(new Path(base, _))
         def kept[V](entries: Map[String, V]): Map[String, V] =
-          entries.filterNot { case (frel, _) =>
-            bucketUpdates.keySet.exists(r =>
-              if (isFileRef(r)) frel == r else frel.startsWith(r + "/"))
-          }
+          entries.filterNot { case (frel, _) => refsNaming(frel).exists(bucketUpdates.contains) }
         val (zones, blooms) =
           if (newDirs.isEmpty) (rec.zones, rec.blooms)
           else (rec.zones.map { z =>
@@ -4402,11 +4412,7 @@ object VersionedSnapshot {
         // inherited file ref (an earlier partial merge), or named by this
         // merge's carryFiles
         val carryRefs = inherited.values.flatten.toSet ++ carryFiles.values.flatten
-        val carryDirRefs = carryRefs.filterNot(isFileRef)
-        val carryFileRefs = carryRefs.filter(isFileRef)
-        def stillReferenced(rel: String): Boolean =
-          carryFileRefs.contains(rel) ||
-            carryDirRefs.contains(rel.take(math.max(0, rel.lastIndexOf('/'))))
+        def stillReferenced(rel: String): Boolean = refsNaming(rel).exists(carryRefs)
         val carried: Seq[(String, Long, Seq[Option[(String, String)]])] =
           prev.flatMap(_.zones) match {
             case Some(z) if z.keys == pKeys && z.tags == tags &&
@@ -4842,7 +4848,6 @@ object VersionedSnapshot {
         // are identical whether taken over rows or over distinct keys, so
         // the stats are unchanged while the job shuffles only key columns
         // and the write path no longer carries a count-over-window.
-        import org.apache.spark.sql.functions.{max => fMax, min => fMin}
         val srcTags = keys.map(k => zoneTag(src.schema(k).dataType))
         // the key universe this merge touches: the source's keys plus —
         // for the per-row-action apply path — the keys it deletes. Both
@@ -4858,14 +4863,7 @@ object VersionedSnapshot {
           .agg(count(lit(1)).as("__kn"))
           .withColumn("__chk", assert_true(col("__kn") === 1, lit(dupMsg)))
           .filter(col("__chk").isNull).drop("__kn", "__chk")
-        val statAggs = keys.zip(srcTags).flatMap { case (k, tag) =>
-          if (tag == "x") Nil
-          else {
-            val e = zoneNormExpr(src.schema(k).dataType, k)
-            Seq(fMin(e).as(s"__min_$k"), fMax(e).as(s"__max_$k"),
-              fMax(col(k).isNull.cast("int")).as(s"__null_$k"))
-          }
-        }
+        val statAggs = probeAggs(src.schema, keys, srcTags)
         val grouped = keyLevel.groupBy(bucketOf(keys, nb).as("__b"))
         val bRows = (if (statAggs.isEmpty) grouped.agg(count(lit(1)).as("__n"))
                      else grouped.agg(statAggs.head, statAggs.tail: _*)).collect()
@@ -4910,69 +4908,26 @@ object VersionedSnapshot {
             deleteUnmatchedBySource.isDefined ||
             updateUnmatchedBySource.isDefined) None
           else basisRec.zones.filter(z => z.keys == pKeys && z.tags == srcTags)
-        val srcRange: Map[Int, Seq[Option[(String, String)]]] = bRows.map { r =>
-          r.getAs[Int]("__b") -> keys.zip(srcTags).map { case (k, tag) =>
-            if (tag == "x") None
-            else if (r.getAs[Int](s"__null_$k") == 1) None
-            else for {
-              lo <- renderZoneVal(tag, r.getAs[Any](s"__min_$k"))
-              hi <- renderZoneVal(tag, r.getAs[Any](s"__max_$k"))
-            } yield (lo, hi)
-          }
-        }.toMap
-        def fileOverlaps(b: Int, fRanges: Seq[Option[(String, String)]]): Boolean =
-          keys.indices.forall { i =>
-            (fRanges(i), srcRange.get(b).flatMap(_(i))) match {
-              case (Some(fr), Some(sr)) => zoneOverlaps(srcTags(i), fr, sr)
-              case _ => true // missing stats: cannot prune
-            }
-          }
-        // a bucket's manifest refs expanded to per-file zone entries: a
-        // file ref looks itself up exactly, a dir ref through the prefix
-        // (mirrors the read path). Refs the zonemap doesn't know are
-        // returned separately — they must be read wholly, never carried.
-        def zoneFiles(z: Zones, rels: Seq[String])
-            : (Seq[(String, Seq[Option[(String, String)]])], Seq[String]) = {
-          val hits = Seq.newBuilder[(String, Seq[Option[(String, String)]])]
-          val statless = Seq.newBuilder[String]
-          rels.foreach { rel =>
-            val fs0 =
-              if (isFileRef(rel)) z.entries.get(rel).map(rel -> _).toSeq
-              else z.entries.toSeq.filter(_._1.startsWith(rel + "/"))
-            if (fs0.isEmpty) statless += rel
-            else fs0.foreach { case (frel, (_, ranges)) => hits += (frel -> ranges) }
-          }
-          (hits.result(), statless.result())
+        val srcProbes: Map[Int, Seq[ZoneProbe]] =
+          bRows.map(r => r.getAs[Int]("__b") -> probesOf(r, keys, srcTags)).toMap
+        // each touched bucket's refs split into the files the merge reads
+        // and rewrites and the files it carries by reference
+        val split: Map[Int, (Seq[String], Seq[String])] = {
+          val byRef = zonesOpt.map(z => filesByRef(z.entries))
+          touchedAll.map { b =>
+            val rels = entries.getOrElse(b, Nil)
+            b -> byRef.fold((rels, Seq.empty[String]))(idx => consult(rels, idx) {
+              case (_, (_, fRanges)) => zoneMeets(fRanges, srcProbes.getOrElse(b, Nil))
+            })
+          }.toMap
         }
-        val touched: Set[Int] = zonesOpt match {
-          case Some(z) if !insertUnmatched =>
-            touchedAll.filter { b =>
-              entries.get(b) match {
-                case None => true // empty bucket: stays touched, writes nothing
-                case Some(rels) =>
-                  val (files, statless) = zoneFiles(z, rels)
-                  statless.nonEmpty || files.isEmpty ||
-                    files.exists { case (_, fRanges) => fileOverlaps(b, fRanges) }
-              }
-            }
-          case _ => touchedAll
-        }
-        // file-level split over the buckets that WILL be rewritten
-        val (touchedRels, carry): (Seq[String], Map[Int, Seq[String]]) =
-          zonesOpt match {
-            case Some(z) =>
-              val perBucket = touched.toSeq.sorted.map { b =>
-                val rels = entries.getOrElse(b, Nil)
-                val (files, statless) = zoneFiles(z, rels)
-                val (hit, miss) = files.partition { case (_, r) => fileOverlaps(b, r) }
-                (b, statless ++ hit.map(_._1), miss.map(_._1))
-              }
-              (perBucket.flatMap(_._2),
-                perBucket.collect { case (b, _, m) if m.nonEmpty => b -> m }.toMap)
-            case None =>
-              (touched.toSeq.sorted.flatMap(entries.get).flatten,
-                Map.empty[Int, Seq[String]])
-          }
+        val touched: Set[Int] =
+          if (zonesOpt.isEmpty || insertUnmatched) touchedAll
+          // an empty bucket stays touched and writes nothing
+          else touchedAll.filter(b => entries.get(b).forall(_.isEmpty) || split(b)._1.nonEmpty)
+        val touchedRels = touched.toSeq.sorted.flatMap(split(_)._1)
+        val carry: Map[Int, Seq[String]] =
+          touched.toSeq.map(b => b -> split(b)._2).filter(_._2.nonEmpty).toMap
         val touchedPaths = touchedRels
           .map(rel => resolveRef(new Path(baseDir), rel).toString)
         val touchedTarget =

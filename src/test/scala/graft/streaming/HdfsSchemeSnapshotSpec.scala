@@ -87,4 +87,29 @@ class HdfsSchemeSnapshotSpec extends SparkSpec {
       .map(r => r.getLong(0) -> r.getLong(1)).toMap
     assert(folded == reconciled, "compaction over graftfs changed content")
   }
+
+  test("graftfs:// createNewFile is atomic create-if-absent: of racing claimants exactly one wins") {
+    schemeReady
+    val tmp = Files.createTempDirectory("graft-hdfs-excl")
+    val f = new Path(s"graftfs://$tmp").getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val claimants = 8
+    val pool = java.util.concurrent.Executors.newFixedThreadPool(claimants)
+    try {
+      (0 until 200).foreach { round =>
+        val p = new Path(s"graftfs://$tmp/_claims/$round")
+        val start = new java.util.concurrent.CountDownLatch(1)
+        val futs = (0 until claimants).map(_ =>
+          pool.submit(new java.util.concurrent.Callable[Boolean] {
+            def call(): Boolean = {
+              start.await()
+              try f.createNewFile(p)
+              catch { case _: org.apache.hadoop.fs.FileAlreadyExistsException => false }
+            }
+          }))
+        start.countDown()
+        val wins = futs.count(_.get())
+        assert(wins == 1, s"round $round: $wins claimants created $p")
+      }
+    } finally pool.shutdown()
+  }
 }

@@ -27,16 +27,19 @@ class SnapshotStalledCommitterSpec extends SparkSpec {
 
   private val StallTag = "graft-stalled-committer"
 
-  private def claimsIn(base: String): Seq[String] = {
-    val d = new java.io.File(base, "_claims")
+  /** The claims left under the table, read on its LOCAL path: a
+    * scheme-prefixed base names no local directory. */
+  private def claimsIn(localBase: String): Seq[String] = {
+    val d = new java.io.File(localBase, "_claims")
     if (!d.exists) Nil else d.listFiles().map(_.getName).toSeq
   }
 
   /** Run the interleaving once; None = inconclusive scheduling (A woke
     * before the successor committed), retried by [[scenario]]. Some =
-    * (v0, A's outcome, successor's version, final pointer, base). */
+    * (v0, A's outcome, successor's version, final pointer, base, local
+    * path of base). */
   private def runScenario(tag: String, schemePrefix: String):
-      Option[(Long, Option[Throwable], Long, Long, String)] = {
+      Option[(Long, Option[Throwable], Long, Long, String, String)] = {
     import spark.implicits._
     // schemePrefix routes the TABLE through a non-file FileSystem (and so
     // through that filesystem's pointer store) while the spec's own
@@ -84,7 +87,7 @@ class SnapshotStalledCommitterSpec extends SparkSpec {
       assert(!a.isAlive, "writer A never finished")
       val ptrFinal = Files.readString(
         new java.io.File(localBase, "_CURRENT").toPath).trim
-      Some((v0, aOutcome, vSucc, ptrFinal.toLong, base))
+      Some((v0, aOutcome, vSucc, ptrFinal.toLong, base, localBase))
     } finally {
       spark.conf.unset(VersionedSnapshot.TestDelayAfterFenceConf)
       spark.conf.unset(VersionedSnapshot.CommitLockStaleMsConf)
@@ -92,7 +95,7 @@ class SnapshotStalledCommitterSpec extends SparkSpec {
   }
 
   private def scenario(tag: String, schemePrefix: String = ""):
-      (Long, Option[Throwable], Long, Long, String) = {
+      (Long, Option[Throwable], Long, Long, String, String) = {
     val r = (1 to 3).iterator.map(i => runScenario(s"$tag$i", schemePrefix))
       .collectFirst { case Some(x) => x }
     assert(r.nonEmpty,
@@ -105,7 +108,7 @@ class SnapshotStalledCommitterSpec extends SparkSpec {
     val hc = spark.sparkContext.hadoopConfiguration
     hc.set("fs.graftfs.impl", classOf[GraftTestFileSystem].getName)
     hc.set("fs.AbstractFileSystem.graftfs.impl", classOf[GraftTestAbstractFs].getName)
-    val (v0, aOutcome, vSucc, ptrFinal, base) = scenario("rename", "graftfs://")
+    val (v0, aOutcome, vSucc, ptrFinal, base, _) = scenario("rename", "graftfs://")
     assert(VersionedSnapshot.detail(spark, base).head()
       .getAs[String]("pointer_store") == "rename")
     assert(aOutcome.isEmpty,
@@ -118,7 +121,7 @@ class SnapshotStalledCommitterSpec extends SparkSpec {
 
   test("cas-file backend: the identical stall LOSES — the successor's commit " +
       "survives and the stalled committer aborts retryably") {
-    val (v0, aOutcome, vSucc, ptrFinal, base) = scenario("cas")
+    val (v0, aOutcome, vSucc, ptrFinal, base, localBase) = scenario("cas")
     assert(ptrFinal == vSucc,
       s"the successor's commit must survive the stalled committer's wake " +
         s"(ptr=$ptrFinal, successor=$vSucc)")
@@ -128,7 +131,7 @@ class SnapshotStalledCommitterSpec extends SparkSpec {
         s"ConcurrentSnapshotUpdate, got $other")
     }
     // the loser's staging is cleaned up like any conflict loss
-    assert(claimsIn(base).isEmpty, s"no claim survives, saw ${claimsIn(base)}")
+    assert(claimsIn(localBase).isEmpty, s"no claim survives, saw ${claimsIn(localBase)}")
     // and the retry path composes: re-running A's merge now lands cleanly
     import spark.implicits._
     VersionedSnapshot.retryOnConflict() {
@@ -145,7 +148,7 @@ class SnapshotStalledCommitterSpec extends SparkSpec {
     val hc = spark.sparkContext.hadoopConfiguration
     hc.set("fs.etagfs.impl", classOf[EtagCasTestFileSystem].getName)
     hc.set("fs.AbstractFileSystem.etagfs.impl", classOf[EtagCasAbstractFs].getName)
-    val (v0, aOutcome, vSucc, ptrFinal, base) =
+    val (v0, aOutcome, vSucc, ptrFinal, _, localBase) =
       scenario("etag", "etagfs://")
     assert(ptrFinal == vSucc,
       s"the successor's commit must survive the stalled committer's wake " +
@@ -155,7 +158,7 @@ class SnapshotStalledCommitterSpec extends SparkSpec {
       case other => fail(s"the stalled committer must abort with the retryable " +
         s"ConcurrentSnapshotUpdate, got $other")
     }
-    assert(claimsIn(base).isEmpty, s"no claim survives, saw ${claimsIn(base)}")
+    assert(claimsIn(localBase).isEmpty, s"no claim survives, saw ${claimsIn(localBase)}")
     val _ = v0
   }
 }

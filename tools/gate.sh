@@ -40,11 +40,12 @@ echo "  $SMOKE"
 
 # the smoke queries commit no table; the snapshot_/mor_ queries drive every
 # VersionedSnapshot commit path (publish, merge, overlay, compact, restore,
-# clone, column mapping, purge), checked by result against DuckDB
-echo "== gate: commit-path oracle (snapshot_,mor_ at sf0.001) =="
+# clone, column mapping, purge), and the incr_/cdc_merge replays commit
+# through mergeBatch and mergeIntoBatch, all checked by result against DuckDB
+echo "== gate: commit-path oracle (snapshot_,mor_,incr_,cdc_merge at sf0.001) =="
 VOUT="$TMPD"
 SPARK_GRAFT_CPUS="$(env -u OMP_NUM_THREADS nproc)" \
-  tools/run.sh graft.Verify /root/testdata/sf0.001 "$VOUT/out" snapshot_,mor_ \
+  tools/run.sh graft.Verify /root/testdata/sf0.001 "$VOUT/out" snapshot_,mor_,incr_,cdc_merge \
   > "$VOUT/verify.log" 2>&1 || { tail -5 "$VOUT/verify.log" >&2; fail "commit-path Verify"; }
 python3 tools/check_correctness.py /root/testdata/sf0.001 "$VOUT/out" > "$VOUT/check.log" 2>&1
 CHECK=$?
